@@ -103,14 +103,19 @@ def ull_cardinality_fgra_expr(regs: Column | str, p: int) -> Column:
 # --------------------------------------------------------- jaccard family
 
 def minhash_jaccard_expr(a: Column | str, b: Column | str) -> Column:
-    """U1: J ≈ fraction of matching MinHash registers."""
+    """U1: J ≈ fraction of matching MinHash registers. NULL when either
+    sketch is null or empty or the two register counts differ (sketches
+    built with other params are not comparable)."""
     a, b = _c(a), _c(b)
     matches = F.aggregate(
         F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return matches.cast("double") / F.size(a).cast("double")
+    return F.when(
+        (F.size(a) == F.size(b)) & (F.size(a) > 0),
+        matches.cast("double") / F.size(a).cast("double"),
+    )
 
 
 def hll_cardinality_expr(regs: Column | str, p: int) -> Column:

@@ -203,9 +203,18 @@ class ParquetCatalog:
         }
         import pandas as pd
 
-        # pandas-backed (LocalTableScan) — same rationale as mark_partitions
+        # pandas-backed (LocalTableScan) — same rationale as mark_partitions;
+        # the DDL schema maps columns by position, so columns= pins the
+        # frame to the schema order whatever the dict's key order
         df = self.spark.createDataFrame(
-            pd.DataFrame([row], dtype=object),
+            pd.DataFrame(
+                [row],
+                columns=[
+                    "stage", "params_hash", "wall_ms", "input_rows",
+                    "output_rows", "status", "ts", "extra",
+                ],
+                dtype=object,
+            ),
             "stage string, params_hash string, wall_ms double, input_rows bigint, "
             "output_rows bigint, status string, ts double, extra string",
         )

@@ -284,20 +284,20 @@ def exact_substring_pairs(
         # materialize ONCE: the set subtree feeds both join sides with
         # different join keys, so exchange reuse never fires and the window
         # UDF (plus the semi-join above it) would run twice — the same
-        # defect exact_jaccard_join fixed in r5 (~2x on the verify step).
+        # defect the verify side tables avoid (~2x on the verify step).
         # Eager: the measured-broadcast decision needs the real footprint.
         .localCheckpoint(eager=True)
     )
     st = wsets.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.size("ws")).alias("tot")
     ).first()
-    from lash_spark.operators.verify import _reuse_broadcast_cap
+    from lash_spark.operators.verify import _broadcast_cap
 
     # aliased views of the one materialized relation, keyed on the same
     # column: the second join reuses the first's broadcast (or shuffled)
-    # exchange instead of building it twice (see _verify_joined_once)
+    # exchange instead of building it twice (see verify._verify)
     wa, wb = wsets.alias("_wa"), wsets.alias("_wb")
-    if (st["tot"] or 0) * 8 + (st["n"] or 0) * 48 < _reuse_broadcast_cap(
+    if (st["tot"] or 0) * 8 + (st["n"] or 0) * 48 < _broadcast_cap(
         pairs.sparkSession
     ):
         wa, wb = F.broadcast(wa), F.broadcast(wb)

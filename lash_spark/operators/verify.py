@@ -1,43 +1,61 @@
 """Pair verification: sketch-estimate prefilter + exact Jaccard confirm.
 
 The reference computes sketch-estimated similarity for every pair (U1-U4);
-at web scale we verify in tiers:
+at web scale we verify in tiers, on ONE path (``_verify``) shared by the
+self-join (``verify_pairs``) and the two-dataset (``cross_verify_pairs``)
+calls:
 
-1. **Signature estimate** (pure Column): MinHash register match fraction —
-   no text shuffle, drops most junk candidates using columns in hand.
-2. **Exact shingle Jaccard**. Two interchangeable engines:
-   - ``shingle_join`` (default): each candidate document's unique shingle-
-     hash set is computed ONCE (map-only Arrow UDF, or read off the
-     persisted signature table), then the per-pair |A∩B| runs through a
-     vectorized Arrow kernel (sorted-set searchsorted — measured 7x on
-     the 50k-synth verify over the JVM ``array_intersect`` expression,
-     which builds a hash set per row). ``lash.verify.intersect``:
-     ``auto`` (default) picks Arrow at/above 1M measured member-set
-     hashes and the JVM expression below (where the Python round-trip
-     costs more than the intersection); ``arrow``/``jvm`` force.
-     Big near-clique clusters (boilerplate families) re-verify each hub
-     document hundreds of times — this computes each document's set once
-     and never re-shingles a document.
-   - ``text_pairs``: per-pair Arrow UDF over (text_a, text_b); fewer bytes
-     shuffled (text vs 8-byte-per-shingle arrays), useful when pair counts
-     are tiny relative to document sizes.
+1. **Side tables.** Each pair role gets one ``(id, minhash, shingles)``
+   table over the candidate members only, built once and materialized by a
+   single stats action (row count + total set hashes). The shingle sets are
+   read off the signature table when it persists them, otherwise computed
+   from the members' text by a map-only Arrow UDF. A self-join uses ONE
+   table under two aliases, so the second join reuses the first's exchange.
+2. **Join strategy from measured bytes.** A side is broadcast when its
+   measured footprint fits ``max(_BROADCAST_BYTES,
+   spark.sql.autoBroadcastJoinThreshold)``; above that the same plan
+   degrades to shuffled joins.
+3. **Signature estimate.** MinHash register match fraction, filtered at
+   ``threshold - margin`` below the set intersection, so est-failing rows
+   never pay for it. An optional per-document degree cap keeps each
+   document's strongest-estimate neighbours.
+4. **Exact shingle Jaccard** |A∩B| / |A∪B| over the sorted-unique 64-bit
+   shingle-hash sets.
 
-Exactness: both engines compute |A∩B| / |A∪B| over 64-bit shingle hashes;
-collisions are the only deviation from string-set Jaccard (P ~ m²/2^64,
-negligible — the DuckDB oracle agrees hash-identically at sf0.01).
+Kernels: both the estimate and |A∩B| have a JVM expression and a
+vectorized Arrow kernel. The measured member-set volume picks one against
+``_ARROW_MIN_HASHES``: the Arrow kernels measured 7x on a 50k-doc verify
+(16.5M member hashes) but lose ~0.3-0.5 s per call at ~150k hashes, where
+the per-stage Python round-trip exceeds the JVM work. Both give identical
+values.
+
+Exactness: |A∩B| / |A∪B| over 64-bit shingle hashes; collisions are the
+only deviation from string-set Jaccard (P ~ m²/2^64, negligible — the
+DuckDB oracle agrees hash-identically at sf0.01).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lash_spark.config import SketchParams
 from lash_spark.estimators import minhash_jaccard_expr, with_distance_columns
 from lash_spark.hashing import batch_shingle_hash_segments
+
+# A measured side table is broadcast below max(this, the session's
+# autoBroadcastJoinThreshold). The auto threshold guards against bad
+# ESTIMATES; these bytes come off a materialized frame, so a few hundred MB
+# is safe (one build + per-executor residency, vs shuffling the pair table
+# twice with array payloads aboard).
+_BROADCAST_BYTES = 128 * 1024 * 1024
+# Member-set hashes at/above which verify uses the Arrow kernels.
+_ARROW_MIN_HASHES = 1_000_000
 
 
 def _encode(texts: pd.Series) -> "list[bytes]":
@@ -63,11 +81,9 @@ def _inter_size_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
     The sets are produced sorted in UNSIGNED 64-bit order (hashing.py
     batch_shingle_hash_segments sorts as uint64 before the int64 view), so
     one vectorized np.searchsorted of the smaller side into the larger
-    computes the exact intersection size. Measured 3-4x faster than JVM
-    ``size(array_intersect(...))`` on the 50k-synth verify stage (the JVM
-    expression builds a hash set per ROW; guide §4.2 — hand whole batches
-    to vectorized native code). Exactness: same integer |A∩B| over the
-    same 64-bit hash sets, byte-identical jaccard downstream."""
+    computes the exact intersection size — the JVM ``array_intersect``
+    expression builds a hash set per ROW instead. Same integer |A∩B| over
+    the same 64-bit hash sets, byte-identical jaccard downstream."""
     out = np.zeros(len(sa), dtype=np.int32)
     for i in range(len(sa)):
         x, y = sa.iat[i], sb.iat[i]
@@ -89,29 +105,36 @@ def _inter_size_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
 # pushdown checks the PROJECT's determinism, so with a deterministic
 # kernel the downstream jaccard-threshold filter was substituted below the
 # projection and every est-passing pair evaluated the kernel — and shipped
-# both shingle arrays over Arrow — TWICE (guide §4.4's double-eval shape;
-# measured: two ArrowEvalPython nodes). The flag blocks that push. The
-# 3x-eval trap the flag creates when one expression references the UDF
-# three times is avoided structurally: _with_jaccard references the kernel
-# exactly ONCE in its own projection and derives jaccard from the column.
+# both shingle arrays over Arrow — TWICE (measured: two ArrowEvalPython
+# nodes). The flag blocks that push. The 3x-eval trap the flag creates
+# when one expression references the UDF three times is avoided
+# structurally: _with_jaccard references the kernel exactly ONCE in its
+# own projection and derives jaccard from the column.
 _inter_size_udf = _inter_size_udf.asNondeterministic()
 
 
 @F.pandas_udf(T.DoubleType())
 def _minhash_est_udf(ma: pd.Series, mb: pd.Series) -> pd.Series:
     """MinHash register match fraction (U1), vectorized: one np.vstack per
-    Arrow batch and a single (A == B) row-sum. Value is EXACTLY
-    ``minhash_jaccard_expr``'s — an integer match count divided by the
-    register count, both IEEE doubles of the same exact operands — but the
-    interpreted zip_with+aggregate fold cost 2.4-2.9 s on the 50k-synth
-    verify (318k pairs x 128 registers) where this kernel, transfer
-    included, measures 1.2-1.3 s (guide §4.2: hand whole batches to
-    vectorized native code)."""
-    if len(ma) == 0:
-        return pd.Series(np.empty(0, dtype=np.float64))
-    A = np.vstack(ma.to_numpy())
-    B = np.vstack(mb.to_numpy())
-    return pd.Series((A == B).sum(axis=1) / float(A.shape[1]))
+    register length in the Arrow batch and a single (A == B) row-sum. Value
+    is EXACTLY ``minhash_jaccard_expr``'s — an integer match count divided
+    by the register count — including NULL for a null, empty or
+    length-mismatched row. The interpreted zip_with+aggregate fold cost
+    2.4-2.9 s on a 50k-doc verify (318k pairs x 128 registers) where this
+    kernel, transfer included, measures 1.2-1.3 s."""
+    out = np.full(len(ma), np.nan)  # NaN leaves the UDF as NULL
+    lens = np.array(
+        [
+            len(x) if x is not None and y is not None and len(x) == len(y) else 0
+            for x, y in zip(ma, mb)
+        ],
+        dtype=np.int64,
+    )
+    a, b = ma.to_numpy(), mb.to_numpy()
+    for n in np.unique(lens[lens > 0]):
+        idx = np.flatnonzero(lens == n)
+        out[idx] = (np.vstack(a[idx]) == np.vstack(b[idx])).sum(axis=1) / float(n)
+    return pd.Series(out)
 
 
 # same non-determinism rationale as _inter_size_udf: block the est-threshold
@@ -120,45 +143,27 @@ def _minhash_est_udf(ma: pd.Series, mb: pd.Series) -> pd.Series:
 _minhash_est_udf = _minhash_est_udf.asNondeterministic()
 
 
-def _est_jaccard_col(spark, mh_a, mh_b, set_hashes: int | None = None):
-    """The est_jaccard column for a verify join: the JVM fold below the
-    measured-volume floor (tiny pair sets — the Python round-trip costs
-    more than the whole fold, same sign as the intersect kernel), the
-    vectorized Arrow kernel above it. Shares ``lash.verify.intersect`` /
-    ``lash.verify.arrowMinHashes`` with the intersect engine — one
-    data-volume story per verify call, and ``jvm`` still forces the
-    all-JVM plan."""
-    engine = spark.conf.get("lash.verify.intersect", "auto")
-    if engine == "auto":
-        floor = int(spark.conf.get("lash.verify.arrowMinHashes", str(1_000_000)))
-        engine = "arrow" if set_hashes is None or set_hashes >= floor else "jvm"
-    if engine == "jvm":
+def _est_jaccard_col(mh_a, mh_b, set_hashes: int):
+    """The est_jaccard column: the JVM fold below ``_ARROW_MIN_HASHES``
+    measured member-set hashes (tiny pair sets — the Python round-trip
+    costs more than the whole fold), the vectorized Arrow kernel at or
+    above it. The same volume picks the intersect kernel in
+    ``_with_jaccard``, so one verify call is all-JVM or all-Arrow."""
+    if set_hashes < _ARROW_MIN_HASHES:
         return minhash_jaccard_expr(mh_a, mh_b)
     return _minhash_est_udf(mh_a, mh_b)
 
 
-def _with_jaccard(df, spark, sh_a, sh_b, set_hashes: int | None = None):
+def _with_jaccard(df, sh_a, sh_b, set_hashes: int):
     """Attach exact ``jaccard`` = |A∩B| / |A∪B| for the two shingle-set
     columns. The intersection size lands in its own projection, referenced
     exactly once (see the determinism note above); the jaccard expression
     reads the COLUMN, so the optimizer can neither duplicate the kernel
-    nor push a threshold filter below it. Under the JVM engine the kernel
-    is the deterministic ``array_intersect`` expression instead — there
-    the indirection collapses and the threshold pushdown (measured faster
-    on the JVM plan) still fires.
-
-    ``lash.verify.intersect``: ``auto`` (default) picks the engine from
-    ``set_hashes`` — the MEASURED total member-set volume the caller
-    already aggregated for its broadcast decision. Both signs are
-    measured at sf0.1/50k: the Arrow kernel is 7x on the 50k-synth verify
-    (16.5M member hashes) but loses ~0.3-0.5 s per call at sf0.1 (399
-    pairs, ~150k hashes), where the per-stage Python round-trip exceeds
-    the trivial JVM intersection work. ``arrow``/``jvm`` force."""
-    engine = spark.conf.get("lash.verify.intersect", "auto")
-    if engine == "auto":
-        floor = int(spark.conf.get("lash.verify.arrowMinHashes", str(1_000_000)))
-        engine = "arrow" if set_hashes is None or set_hashes >= floor else "jvm"
-    if engine == "jvm":
+    nor push a threshold filter below it. Below ``_ARROW_MIN_HASHES`` the
+    kernel is the deterministic ``array_intersect`` expression instead —
+    there the indirection collapses and the threshold pushdown (measured
+    faster on the JVM plan) still fires."""
+    if set_hashes < _ARROW_MIN_HASHES:
         inter = F.size(F.array_intersect(sh_a, sh_b))
     else:
         inter = _inter_size_udf(sh_a, sh_b)
@@ -172,262 +177,133 @@ def _with_jaccard(df, spark, sh_a, sh_b, set_hashes: int | None = None):
     ).drop("_iu")
 
 
-def make_exact_jaccard_udf(k: int):
-    @F.pandas_udf("double")
-    def exact_jaccard(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        ha, sa = batch_shingle_hash_segments(_encode(ta), k)
-        hb, sb = batch_shingle_hash_segments(_encode(tb), k)
-        out = np.zeros(len(ta), dtype=np.float64)
-        for i in range(len(ta)):
-            x = ha[sa[i] : sa[i + 1]]
-            y = hb[sb[i] : sb[i + 1]]
-            if x.size == 0 or y.size == 0:
-                continue
-            idx = np.searchsorted(x, y)
-            idx[idx >= x.size] = x.size - 1
-            inter = int((x[idx] == y).sum())
-            out[i] = inter / (x.size + y.size - inter)
-        return pd.Series(out)
-
-    return exact_jaccard
-
-
-def _broadcast_threshold_bytes(spark) -> int:
+def _broadcast_cap(spark) -> int:
+    """The byte cap under which a MEASURED side table is broadcast (an
+    exact aggregate, not an estimate). Above the cap callers fall back to
+    the shuffled join, so scale behavior is unchanged."""
     v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "33554432")
     try:
-        return int(v)
+        auto = int(v)
     except ValueError:
         try:
-            return int(
+            auto = int(
                 spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
             )
         except Exception:
-            return 32 * 1024 * 1024
+            auto = 32 * 1024 * 1024
+    return max(_BROADCAST_BYTES, auto)
 
 
-def _verify_joined_once(
+def _verify(
     pairs: DataFrame,
-    sig_df: DataFrame,
+    side_a: tuple[DataFrame, DataFrame],
+    side_b: tuple[DataFrame, DataFrame],
+    col_a: str,
+    col_b: str,
     params: SketchParams,
     id_col: str,
+    text_col: str,
     threshold: float,
-    estimate_margin: float,
+    margin: float,
+    cap: int | None,
 ) -> DataFrame:
-    """Fused verify for the common configuration (persisted shingle sets, no
-    degree cap): ONE join per pair side carrying (minhash, shingles)
-    together, instead of the r5 staged plan's four joins (estimate ×2, set
-    ×2) across two checkpointed frames. The estimate predicate sits below
-    the jaccard projection, so est-failing rows never pay the set
-    intersection (codegen AND short-circuits), and the candidate pairs —
-    already an eagerly checkpointed small frame — are never shuffled twice
-    with array payloads aboard (guide §8: move heavy bytes once).
+    """The one verify path: pairs (``col_a``, ``col_b``) + ``est_jaccard``
+    + exact ``jaccard``, keeping rows with jaccard >= threshold.
 
-    The join strategy is decided from MEASURED bytes, not estimates (guide
-    §3.1): the member side is materialized (it is needed in full either
-    way), its exact set footprint read off a cached aggregate, and
-    broadcast only when it fits the session's broadcast threshold — at
-    bench scale that removes every shuffle of the pair table; at 100 TB the
-    member side exceeds the threshold and the same code degrades to the
-    shuffled join unchanged."""
-    a, b = f"{id_col}_a", f"{id_col}_b"
-    # pairs feeds the member projection twice + the final join; candidates
-    # from pairs_from_keys arrive checkpointed already (then this is a
-    # cheap extra lineage pin), arbitrary caller frames get materialized
+    ``side_a`` / ``side_b``: the (signatures, docs) each pair role's ids
+    come from; pass the same tuple for a self-join. ``cap``: keep each
+    document's top-``cap`` est-ranked pairs per role (None = all)."""
+    spark = pairs.sparkSession
+    # pairs feeds the member projections + the final join; candidates from
+    # pairs_from_keys arrive checkpointed already (then this is a cheap
+    # extra lineage pin), arbitrary caller frames get materialized
     pairs = pairs.localCheckpoint(eager=False)
-    members = (
-        pairs.select(F.col(a).alias(id_col))
-        .unionByName(pairs.select(F.col(b).alias(id_col)))
-        .distinct()
-    )
-    # lazy checkpoint + immediate stats action: the aggregate below is the
-    # first action on the frame, so it materializes the checkpoint AND
-    # returns the exact byte stats in ONE Spark job (the old eager
-    # checkpoint paid a dedicated materialization job first — pure
-    # scheduler overhead at suite scale, one job saved per verify call)
-    side = (
-        sig_df.join(members, id_col, "left_semi")
-        .select(F.col(id_col), F.col("minhash"), F.col("shingles"))
-        .localCheckpoint(eager=False)
-    )
-    st = side.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.size("shingles")).alias("tot")
-    ).first()
-    # 8 B per shingle hash + per-row register/id/overhead slack
-    side_bytes = (st["tot"] or 0) * 8 + (st["n"] or 0) * (params.num_perm * 4 + 64)
-    # The usual auto-broadcast threshold guards against bad ESTIMATES; here
-    # the bytes are measured off the materialized frame, so a higher cap is
-    # safe (guide §3.1: a few hundred MB broadcast is fine — the cost is one
-    # build + per-executor residency, vs shuffling the pair table twice with
-    # array payloads aboard). Overridable per session.
-    cap = int(
-        pairs.sparkSession.conf.get(
-            "lash.verify.broadcastBytes", str(128 * 1024 * 1024)
+
+    def ids(*cols):
+        out = reduce(
+            DataFrame.unionByName, [pairs.select(F.col(c).alias(id_col)) for c in cols]
         )
-    )
-    bcast = side_bytes < max(cap, _broadcast_threshold_bytes(pairs.sparkSession))
-    # Build the side table ONCE for both joins: aliased views of the SAME
-    # checkpointed relation, keyed on the same column, canonicalize to the
-    # same exchange — the second join reuses the first's BroadcastExchange
-    # (ReusedExchange) instead of collecting + shipping the table twice
-    # (the r6-chain plan built two identical ~44 MB broadcasts). The
-    # shuffled fallback reuses the side's hash exchange the same way.
-    sa, sb = side.alias("_va"), side.alias("_vb")
-    if bcast:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    mh_a, mh_b = F.col("_va.minhash"), F.col("_vb.minhash")
-    sh_a, sh_b = F.col("_va.shingles"), F.col("_vb.shingles")
-    keep = [F.col(c) for c in pairs.columns] + [
-        F.col("est_jaccard"),
-        F.col("jaccard"),
-    ]
-    return (
-        pairs.join(sa, F.col(a) == F.col(f"_va.{id_col}"))
-        .join(sb, F.col(b) == F.col(f"_vb.{id_col}"))
+        return out.distinct()
+
+    def table(side, members):
+        sig, docs = side
+        t = sig.join(members, id_col, "left_semi")
+        if "shingles" in sig.columns:
+            t = t.select(F.col(id_col), F.col("minhash"), F.col("shingles"))
+        else:
+            # semi-join BEFORE the UDF projection so shingling runs only
+            # over candidate members, not the whole corpus
+            sets = docs.join(members, id_col, "left_semi").select(
+                F.col(id_col),
+                make_shingle_set_udf(params.shingle_k)(F.col(text_col)).alias("shingles"),
+            )
+            t = t.select(F.col(id_col), F.col("minhash")).join(sets, id_col)
+        # lazy: the stats aggregate below is the table's first action, so
+        # it materializes the checkpoint AND returns the byte stats in one
+        # Spark job per call
+        return t.localCheckpoint(eager=False)
+
+    if side_b is side_a:
+        tables = [table(side_a, ids(col_a, col_b))]
+    else:
+        tables = [table(side_a, ids(col_a)), table(side_b, ids(col_b))]
+    stats = {
+        row["_s"]: row
+        for row in reduce(
+            DataFrame.unionByName,
+            [
+                t.agg(
+                    F.count(F.lit(1)).alias("n"), F.sum(F.size("shingles")).alias("tot")
+                ).withColumn("_s", F.lit(i))
+                for i, t in enumerate(tables)
+            ],
+        ).collect()
+    }
+    set_hashes = sum(st["tot"] or 0 for st in stats.values())
+    bcast_cap = _broadcast_cap(spark)
+
+    def view(i, alias):
+        # aliased views of the SAME checkpointed relation, keyed on the same
+        # column, canonicalize to the same exchange: a self-join's second
+        # join reuses the first's BroadcastExchange (or the shuffled
+        # fallback's hash exchange) instead of building the table twice
+        st = stats[i]
+        # 8 B per shingle hash + per-row register/id/overhead slack
+        side_bytes = (st["tot"] or 0) * 8 + (st["n"] or 0) * (params.num_perm * 4 + 64)
+        v = tables[i].alias(alias)
+        return F.broadcast(v) if side_bytes < bcast_cap else v
+
+    va, vb = view(0, "_va"), view(len(tables) - 1, "_vb")
+    out = (
+        pairs.join(va, F.col(col_a) == F.col(f"_va.{id_col}"))
+        .join(vb, F.col(col_b) == F.col(f"_vb.{id_col}"))
         .withColumn(
             "est_jaccard",
-            _est_jaccard_col(pairs.sparkSession, mh_a, mh_b, st["tot"] or 0),
+            _est_jaccard_col(F.col("_va.minhash"), F.col("_vb.minhash"), set_hashes),
         )
-        .filter(F.col("est_jaccard") >= threshold - estimate_margin)
-        .transform(
-            lambda df: _with_jaccard(
-                df, pairs.sparkSession, sh_a, sh_b, set_hashes=st["tot"] or 0
+        # below the jaccard projection: est-failing rows never pay the set
+        # intersection
+        .filter(F.col("est_jaccard") >= threshold - margin)
+    )
+    if cap is not None:
+        # degree cap, one role after the other, ties broken by the ids
+        for c in (col_a, col_b):
+            w = Window.partitionBy(c).orderBy(
+                F.desc("est_jaccard"), F.asc(col_a), F.asc(col_b)
             )
-        )
+            out = (
+                out.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") <= cap)
+                .drop("_rk")
+            )
+    keep = [F.col(c) for c in pairs.columns] + [F.col("est_jaccard"), F.col("jaccard")]
+    return (
+        _with_jaccard(out, F.col("_va.shingles"), F.col("_vb.shingles"), set_hashes)
         # explicit final projection: a self-join re-ids the right side's
         # attributes (DeduplicateRelations), so pre-join Column handles
         # cannot name the copies to drop
         .select(*keep)
-    )
-
-
-def _reuse_broadcast_cap(spark) -> int:
-    """The byte cap under which a MEASURED side table is broadcast (guide
-    §3.1: explicit broadcast when you KNOW the side is small — here from an
-    exact aggregate, not an estimate). Above the cap callers fall back to
-    the shuffled join, so scale behavior is unchanged."""
-    cap = int(spark.conf.get("lash.verify.broadcastBytes", str(128 * 1024 * 1024)))
-    return max(cap, _broadcast_threshold_bytes(spark))
-
-
-def _maybe_broadcast(df: DataFrame, measured_bytes: int):
-    """Broadcast a materialized frame when its measured bytes fit the cap."""
-    return F.broadcast(df) if measured_bytes < _reuse_broadcast_cap(df.sparkSession) else df
-
-
-def estimate_pairs(pairs: DataFrame, sig_df: DataFrame, id_col: str = "url") -> DataFrame:
-    """Attach the MinHash-estimate Jaccard to candidate pairs (tier 1).
-
-    The register table is restricted to candidate MEMBERS (semi-join) and
-    broadcast when its measured bytes fit: candidate pairs then join
-    map-side instead of being shuffled twice. Members are a small fraction
-    of the corpus by construction (only docs inside some band bucket of
-    size >= 2 appear in pairs)."""
-    a, b = f"{id_col}_a", f"{id_col}_b"
-    pairs = pairs.localCheckpoint(eager=False)  # feeds members + both joins
-    members = (
-        pairs.select(F.col(a).alias(id_col))
-        .unionByName(pairs.select(F.col(b).alias(id_col)))
-        .distinct()
-    )
-    # lazy checkpoint, materialized by the stats aggregate in one job (see
-    # _verify_joined_once)
-    mh = (
-        sig_df.join(members, id_col, "left_semi")
-        .select(F.col(id_col), "minhash")
-        .localCheckpoint(eager=False)
-    )
-    st = mh.agg(F.count(F.lit(1)).alias("n"), F.sum(F.size("minhash")).alias("tot")).first()
-    # one exchange for both joins (see _verify_joined_once): aliased views
-    # of the same relation keyed on the same column reuse the broadcast
-    ma, mb = mh.alias("_ea"), mh.alias("_eb")
-    if (st["tot"] or 0) * 4 + (st["n"] or 0) * 48 < _reuse_broadcast_cap(pairs.sparkSession):
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    keep = [F.col(c) for c in pairs.columns] + [F.col("est_jaccard")]
-    # volume proxy for the engine gate: total member registers (the same
-    # role set_hashes plays on the set side — tiny corpora stay all-JVM)
-    return (
-        pairs.join(ma, F.col(a) == F.col(f"_ea.{id_col}"))
-        .join(mb, F.col(b) == F.col(f"_eb.{id_col}"))
-        .withColumn(
-            "est_jaccard",
-            _est_jaccard_col(
-                pairs.sparkSession,
-                F.col("_ea.minhash"),
-                F.col("_eb.minhash"),
-                st["tot"] or 0,
-            ),
-        )
-        .select(*keep)
-    )
-
-
-def exact_jaccard_join(
-    pairs: DataFrame,
-    docs: DataFrame,
-    k: int,
-    id_col: str = "url",
-    text_col: str = "norm_text",
-    sets_df: DataFrame | None = None,
-) -> DataFrame:
-    """pairs + exact jaccard via the shingle-set join engine.
-
-    ``sets_df``: a table already carrying each document's sorted-unique
-    shingle hashes in a ``shingles`` column (the signature stage's
-    ``with_shingles`` output). When given, verify touches no document text
-    and runs no Python at all — candidate ids semi-join the persisted sets
-    and the intersection stays in WholeStageCodegen."""
-    a, b = f"{id_col}_a", f"{id_col}_b"
-    cand_ids = (
-        pairs.select(F.col(a).alias(id_col))
-        .unionByName(pairs.select(F.col(b).alias(id_col)))
-        .distinct()
-    )
-    if sets_df is not None:
-        source = sets_df.join(cand_ids, id_col, "left_semi").select(
-            F.col(id_col), F.col("shingles").alias("sh")
-        )
-    else:
-        # semi-join BEFORE the UDF projection so shingling runs only over
-        # candidate members, not the whole corpus
-        source = docs.join(cand_ids, id_col, "left_semi").select(
-            F.col(id_col), make_shingle_set_udf(k)(F.col(text_col)).alias("sh")
-        )
-    sets = (
-        source
-        # materialize ONCE: the sets subtree feeds both join sides with
-        # DIFFERENT join keys, so Spark's exchange reuse never fires and
-        # the shingle UDF (plus the semi-join above it) would run twice.
-        # Measured (tools/verify_profile.py experiment, 20k docs): ~2x on
-        # the whole verify stage. Lazy: the stats aggregate right below is
-        # the frame's first action, so it materializes the checkpoint and
-        # returns the measured byte footprint in one job. Bounded by
-        # candidate MEMBERS, not pairs.
-        .localCheckpoint(eager=False)
-    )
-    st = sets.agg(F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")).first()
-    # broadcast when the measured set bytes fit: the pair table then never
-    # crosses an exchange carrying array payloads (the r5 plan's second
-    # join shuffled pairs WITH sh_a aboard — the dominant verify bytes at
-    # 500k, BENCH/VERIFY_PROFILE.json pair_join_intersect)
-    # one exchange for both joins (see _verify_joined_once): aliased views
-    # of the same materialized relation keyed on the same column reuse the
-    # broadcast (or the shuffled fallback's hash exchange)
-    ja, jb = sets.alias("_ja"), sets.alias("_jb")
-    if (st["tot"] or 0) * 8 + (st["n"] or 0) * 48 < _reuse_broadcast_cap(
-        pairs.sparkSession
-    ):
-        ja, jb = F.broadcast(ja), F.broadcast(jb)
-    sh_a, sh_b = F.col("_ja.sh"), F.col("_jb.sh")
-    keep = [F.col(c) for c in pairs.columns] + [F.col("jaccard")]
-    return (
-        pairs.join(ja, F.col(a) == F.col(f"_ja.{id_col}"))
-        .join(jb, F.col(b) == F.col(f"_jb.{id_col}"))
-        .transform(
-            lambda df: _with_jaccard(
-                df, pairs.sparkSession, sh_a, sh_b, set_hashes=st["tot"] or 0
-            )
-        )
-        .select(*keep)
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -439,138 +315,20 @@ def cross_verify_pairs(
     id_col: str = "url",
     text_col: str = "norm_text",
     threshold: float = 0.8,
-    estimate_margin: float | None = 0.15,
-    sig_q: DataFrame | None = None,
-    sig_r: DataFrame | None = None,
+    estimate_margin: float = 0.15,
+    *,
+    sig_q: DataFrame,
+    sig_r: DataFrame,
 ) -> DataFrame:
-    """Two-dataset verify (query × reference ``dist`` mode): same tiering
-    as verify_pairs — MinHash-estimate prefilter, then exact shingle
-    Jaccard via per-document shingle sets + JVM array_intersect. The pair
+    """Two-dataset verify (query × reference ``dist`` mode): the same tiers
+    as verify_pairs, with a q side table and an r side table. The pair
     (q, r) is role-ordered, so no triangular filter; q and r may contain
     the same document (the reference's same-name rows)."""
     q, r = f"{id_col}_q", f"{id_col}_r"
-    if (
-        sig_q is not None
-        and sig_r is not None
-        and estimate_margin is not None
-        and "shingles" in sig_q.columns
-        and "shingles" in sig_r.columns
-    ):
-        # fused fast path (same shape as _verify_joined_once): one join per
-        # role carrying (minhash, shingles) together, est predicate below
-        # the jaccard projection, measured-bytes broadcast per side
-        pairs = pairs.localCheckpoint(eager=False)
-        spark = pairs.sparkSession
-        cap = int(spark.conf.get("lash.verify.broadcastBytes", str(128 * 1024 * 1024)))
-        thr = max(cap, _broadcast_threshold_bytes(spark))
-
-        side_hashes: list = []
-
-        def _mk_side(sig, pair_col):
-            ids = pairs.select(F.col(pair_col).alias(id_col)).distinct()
-            return (
-                sig.join(ids, id_col, "left_semi")
-                .select(F.col(id_col), F.col("minhash"), F.col("shingles"))
-                # lazy; the unioned stats aggregate below materializes BOTH
-                # sides' checkpoints in one Spark job (same one-action shape
-                # as _verify_joined_once / the cross-tier max fusion)
-                .localCheckpoint(eager=False)
-            )
-
-        side_q_df, side_r_df = _mk_side(sig_q, q), _mk_side(sig_r, r)
-        stats = {
-            row["_s"]: row
-            for row in (
-                side_q_df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.size("shingles")).alias("tot"),
-                )
-                .withColumn("_s", F.lit("q"))
-                .unionByName(
-                    side_r_df.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.size("shingles")).alias("tot"),
-                    ).withColumn("_s", F.lit("r"))
-                )
-                .collect()
-            )
-        }
-
-        def _side(sig, pair_col, suffix):
-            side = side_q_df if suffix == "q" else side_r_df
-            st = stats[suffix]
-            side_hashes.append(st["tot"] or 0)
-            side_bytes = (st["tot"] or 0) * 8 + (st["n"] or 0) * 576
-            side = side.withColumnsRenamed(
-                {id_col: pair_col, "minhash": f"mh_{suffix}", "shingles": f"sh_{suffix}"}
-            )
-            return F.broadcast(side) if side_bytes < thr else side
-
-        joined = pairs.join(_side(sig_q, q, "q"), q).join(_side(sig_r, r, "r"), r)
-        return (
-            joined.withColumn(
-                "est_jaccard",
-                _est_jaccard_col(
-                    spark, F.col("mh_q"), F.col("mh_r"), sum(side_hashes)
-                ),
-            )
-            .filter(F.col("est_jaccard") >= threshold - estimate_margin)
-            .transform(
-                lambda df: _with_jaccard(
-                    df,
-                    pairs.sparkSession,
-                    F.col("sh_q"),
-                    F.col("sh_r"),
-                    set_hashes=sum(side_hashes),
-                )
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select(q, r, "jaccard")
-        )
-    if sig_q is not None and sig_r is not None and estimate_margin is not None:
-        mq = sig_q.select(F.col(id_col).alias(q), F.col("minhash").alias("mh_q"))
-        mr = sig_r.select(F.col(id_col).alias(r), F.col("minhash").alias("mh_r"))
-        pairs = (
-            pairs.join(mq, q)
-            .join(mr, r)
-            .withColumn("est_jaccard", minhash_jaccard_expr("mh_q", "mh_r"))
-            .filter(F.col("est_jaccard") >= threshold - estimate_margin)
-            .drop("mh_q", "mh_r")
-            # feeds both member-id projections + the final join (see
-            # verify_pairs): checkpoint so the estimate join runs once
-            .localCheckpoint(eager=False)
-        )
-    sh_udf = make_shingle_set_udf(params.shingle_k)
-
-    def _sets(docs, sig, pair_col):
-        # q and r sets are distinct tables here (no shared subtree), but
-        # `pairs` itself feeds the id projection AND both final joins;
-        # materializing keeps each side's shingle UDF to one pass over
-        # its members (see exact_jaccard_join). When the side's signature
-        # table persists shingle sets, project those instead of
-        # re-shingling text.
-        ids = pairs.select(F.col(pair_col).alias(id_col)).distinct()
-        if sig is not None and "shingles" in sig.columns:
-            src = sig.join(ids, id_col, "left_semi").select(
-                F.col(id_col).alias(pair_col),
-                F.col("shingles").alias(f"sh_{pair_col[-1]}"),
-            )
-        else:
-            src = docs.join(ids, id_col, "left_semi").select(
-                F.col(id_col).alias(pair_col),
-                sh_udf(F.col(text_col)).alias(f"sh_{pair_col[-1]}"),
-            )
-        return src.localCheckpoint(eager=False)
-
-    return (
-        pairs.join(_sets(docs_q, sig_q, q), q)
-        .join(_sets(docs_r, sig_r, r), r)
-        .transform(
-            lambda df: _with_jaccard(df, pairs.sparkSession, F.col("sh_q"), F.col("sh_r"))
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(q, r, "jaccard")
-    )
+    return _verify(
+        pairs, (sig_q, docs_q), (sig_r, docs_r), q, r, params, id_col, text_col,
+        threshold, estimate_margin, None,
+    ).select(q, r, "jaccard")
 
 
 def verify_pairs(
@@ -580,15 +338,15 @@ def verify_pairs(
     id_col: str = "url",
     text_col: str = "norm_text",
     threshold: float = 0.8,
-    estimate_margin: float | None = 0.15,
-    sig_df: DataFrame | None = None,
+    estimate_margin: float = 0.15,
+    *,
+    sig_df: DataFrame,
     with_distances: bool = True,
-    method: str = "shingle_join",
     max_pairs_per_doc: int | None = None,
 ) -> DataFrame:
-    """Candidates -> verified near-dup pairs with exact jaccard (+ mash
-    distances). With ``sig_df``, prefilter by estimate >= threshold-margin
-    before any text/shingle shuffle.
+    """Candidates -> verified near-dup pairs with est_jaccard, exact
+    jaccard (+ mash distances). Pairs below the estimate threshold minus
+    ``estimate_margin`` never reach the exact intersection.
 
     ``max_pairs_per_doc``: degree cap for boilerplate mega-clusters — an
     m-member template family is a true near-clique with m(m-1)/2 pairs
@@ -599,67 +357,10 @@ def verify_pairs(
     clique). Off by default: leave None when the workload needs the full
     pair set (fixture recall); set for cluster-assignment pipelines.
     """
-    from pyspark.sql import Window
-
-    a, b = f"{id_col}_a", f"{id_col}_b"
-    if (
-        sig_df is not None
-        and estimate_margin is not None
-        and max_pairs_per_doc is None
-        and method == "shingle_join"
-        and "shingles" in sig_df.columns
-    ):
-        out = _verify_joined_once(
-            pairs, sig_df, params, id_col, threshold, estimate_margin
-        ).filter(
-            F.col("jaccard") >= threshold
-        )
-        if with_distances:
-            out = with_distance_columns(
-                out, "jaccard", k=params.shingle_k, model=params.distance_model,
-                id_col=id_col,
-            )
-        return out
-    if sig_df is not None and estimate_margin is not None:
-        pairs = estimate_pairs(pairs, sig_df, id_col).filter(
-            F.col("est_jaccard") >= threshold - estimate_margin
-        )
-        if max_pairs_per_doc is not None:
-            for side in (a, b):
-                w = Window.partitionBy(side).orderBy(
-                    F.desc("est_jaccard"), F.asc(a), F.asc(b)
-                )
-                pairs = (
-                    pairs.withColumn("_rk", F.row_number().over(w))
-                    .filter(F.col("_rk") <= max_pairs_per_doc)
-                    .drop("_rk")
-                )
-        # the prefiltered pair set feeds three consumers (both member-id
-        # projections + the final join): checkpoint (lazily) so the
-        # estimate join + degree-cap windows run once, not per branch
-        pairs = pairs.localCheckpoint(eager=False)
-    if method == "shingle_join":
-        # use the signature stage's persisted shingle sets when available:
-        # verify then touches no text and runs no Python (the shingle UDF
-        # was 61% of the stage — BENCH/VERIFY_PROFILE.json)
-        sets_df = (
-            sig_df if sig_df is not None and "shingles" in sig_df.columns else None
-        )
-        out = exact_jaccard_join(
-            pairs, docs, params.shingle_k, id_col, text_col, sets_df=sets_df
-        )
-    else:
-        texts = docs.select(F.col(id_col), F.col(text_col))
-        joined = (
-            pairs.join(texts.withColumnsRenamed({id_col: a, text_col: "text_a"}), a)
-            .join(texts.withColumnsRenamed({id_col: b, text_col: "text_b"}), b)
-        )
-        udf = make_exact_jaccard_udf(params.shingle_k)
-        out = joined.withColumn("jaccard", udf(F.col("text_a"), F.col("text_b"))).drop(
-            "text_a", "text_b"
-        )
-    out = out.filter(
-        F.col("jaccard") >= threshold
+    side = (sig_df, docs)
+    out = _verify(
+        pairs, side, side, f"{id_col}_a", f"{id_col}_b", params, id_col, text_col,
+        threshold, estimate_margin, max_pairs_per_doc,
     )
     if with_distances:
         out = with_distance_columns(

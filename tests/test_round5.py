@@ -59,11 +59,12 @@ def test_verify_identical_with_and_without_persisted_shingles(spark):
     assert con.exceptAll(coff).isEmpty() and coff.exceptAll(con).isEmpty()
 
 
-def test_verify_with_shingles_runs_no_python_udf(spark):
-    """Under ``lash.verify.intersect=jvm`` (the r6 escape hatch; the default
-    is the measured-faster Arrow intersect kernel) the persisted-set verify
-    plan must contain no Arrow/pandas evaluation — the exact-Jaccard join
-    is pure JVM, and never re-shingles a document."""
+def test_verify_with_shingles_runs_no_python_udf(spark, monkeypatch):
+    """With the JVM kernels (forced: ``_ARROW_MIN_HASHES`` above any
+    volume) the persisted-set verify plan must contain no Arrow/pandas
+    evaluation — the exact-Jaccard join is pure JVM, and never re-shingles
+    a document."""
+    from lash_spark.operators import verify
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.verify import verify_pairs
 
@@ -72,16 +73,13 @@ def test_verify_with_shingles_runs_no_python_udf(spark):
     normed = with_normalized_text(pages.select("url", "text"), "text")
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url")
-    spark.conf.set("lash.verify.intersect", "jvm")
-    try:
-        verified = verify_pairs(
-            cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
-        )
-        plan = verified._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        assert verified.count() > 0
-    finally:
-        spark.conf.unset("lash.verify.intersect")
+    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 1 << 62)
+    verified = verify_pairs(
+        cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
+    )
+    plan = verified._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert verified.count() > 0
 
 
 def test_cross_dataset_pairs_shingle_parity(spark):

@@ -59,9 +59,9 @@ def test_sa_matches_winnow_engine_on_synth(spark):
 
 
 def test_verify_fused_path_matches_staged_path(spark):
-    """The fused single-join verify (persisted sets, no cap) must produce
-    exactly the staged path's rows/values — including est_jaccard and the
-    distance columns."""
+    """The two side-table sources must agree: shingle sets read off the
+    persisted signature column and sets re-shingled from the members' text
+    give exactly the same rows/values — including the distance columns."""
     from lash_spark.config import LshPlan, SketchParams
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
@@ -77,8 +77,7 @@ def test_verify_fused_path_matches_staged_path(spark):
     sigs = build_signatures(d, params, plan, id_col="url", with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url", max_bucket=256, star_threshold=512)
     fused = verify_pairs(cands, d, params, id_col="url", threshold=0.8, sig_df=sigs)
-    # force the staged path by stripping the shingles column from sig_df
-    # (verify then re-shingles members — the r5 layout)
+    # without the shingles column verify re-shingles the members' text
     staged = verify_pairs(
         cands, d, params, id_col="url", threshold=0.8, sig_df=sigs.drop("shingles")
     )
@@ -89,13 +88,14 @@ def test_verify_fused_path_matches_staged_path(spark):
     sigs.unpersist()
 
 
-def test_verify_fused_broadcast_decision_small_and_large(spark):
+def test_verify_fused_broadcast_decision_small_and_large(spark, monkeypatch):
     """The measured-bytes broadcast decision must not change results in
     either regime (forced tiny cap => shuffled join; default => broadcast)."""
     from lash_spark.config import LshPlan, SketchParams
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
+    from lash_spark.operators import verify
     from lash_spark.operators.verify import verify_pairs
     from lash_spark.synth import generate_pages
 
@@ -117,12 +117,11 @@ def test_verify_fused_broadcast_decision_small_and_large(spark):
 
     default = rows()
     old_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("lash.verify.broadcastBytes", "1")
+    monkeypatch.setattr(verify, "_BROADCAST_BYTES", 1)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try:
         forced_shuffle = rows()
     finally:
-        spark.conf.set("lash.verify.broadcastBytes", str(128 * 1024 * 1024))
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
     assert default == forced_shuffle and len(default) > 0
     sigs.unpersist()
@@ -273,14 +272,15 @@ def test_cc_local_path_string_ids(spark):
     }
 
 
-def test_intersect_arrow_kernel_matches_jvm(spark):
-    """The Arrow |A∩B| kernel (forced — the auto default would pick the
+def test_intersect_arrow_kernel_matches_jvm(spark, monkeypatch):
+    """The Arrow |A∩B| kernel (forced — the volume gate would pick the
     JVM engine at this tiny set volume) and the JVM array_intersect plan
     must produce identical verified pairs and jaccards — including empty
     sets and doc pairs with no overlap."""
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
+    from lash_spark.operators import verify
     from lash_spark.operators.verify import verify_pairs
     from lash_spark.config import SketchParams
     from lash_spark.synth import generate_pages
@@ -291,27 +291,24 @@ def test_intersect_arrow_kernel_matches_jvm(spark):
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url").persist()
 
-    def run(engine):
-        spark.conf.set("lash.verify.intersect", engine)
-        try:
-            return {
-                (r["url_a"], r["url_b"], round(r["jaccard"], 12))
-                for r in verify_pairs(
-                    cands, normed, params, id_col="url", sig_df=sigs,
-                    with_distances=False,
-                ).collect()
-            }
-        finally:
-            spark.conf.unset("lash.verify.intersect")
+    def run(arrow_min_hashes):
+        monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", arrow_min_hashes)
+        return {
+            (r["url_a"], r["url_b"], round(r["jaccard"], 12))
+            for r in verify_pairs(
+                cands, normed, params, id_col="url", sig_df=sigs,
+                with_distances=False,
+            ).collect()
+        }
 
-    arrow = run("arrow")
-    jvm = run("jvm")
+    arrow = run(0)
+    jvm = run(1 << 62)
     assert arrow and arrow == jvm
     sigs.unpersist()
     cands.unpersist()
 
 
-def test_intersect_udf_single_eval_in_plan(spark):
+def test_intersect_udf_single_eval_in_plan(spark, monkeypatch):
     """The verify plan must evaluate each Arrow kernel ONCE per row and
     keep the est short-circuit: exactly two ArrowEvalPython nodes (the
     vectorized est kernel below, the intersect kernel above), each with a
@@ -323,6 +320,7 @@ def test_intersect_udf_single_eval_in_plan(spark):
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
+    from lash_spark.operators import verify
     from lash_spark.operators.verify import verify_pairs
     from lash_spark.config import SketchParams
     from lash_spark.synth import generate_pages
@@ -332,28 +330,26 @@ def test_intersect_udf_single_eval_in_plan(spark):
     normed = with_normalized_text(pages.select("url", "text"), "text")
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url")
-    spark.conf.set("lash.verify.intersect", "arrow")  # auto would pick jvm here
-    try:
-        verified = verify_pairs(
-            cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
-        )
-        assert verified.count() > 0
-        plan = verified._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 2 and "BatchEvalPython" not in plan
-        # one slot per node: a fused node would name a second slot
-        assert "pythonUDF0" in plan and "pythonUDF1" not in plan
-        # single eval of each kernel
-        assert plan.count("_inter_size_udf") == 1
-        assert plan.count("_minhash_est_udf") == 1
-        # plan prints top-down: intersect node above, est node below, and
-        # the est-threshold filter between them (rows failing est never
-        # cross Arrow with shingle arrays)
-        i_inter = plan.index("_inter_size_udf")
-        i_est = plan.index("_minhash_est_udf")
-        i_filter = plan.index("Filter (isnotnull(pythonUDF0", i_inter)
-        assert i_inter < i_filter < i_est
-    finally:
-        spark.conf.unset("lash.verify.intersect")
+    # the volume gate would pick the JVM kernels at this size
+    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 0)
+    verified = verify_pairs(
+        cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
+    )
+    assert verified.count() > 0
+    plan = verified._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 2 and "BatchEvalPython" not in plan
+    # one slot per node: a fused node would name a second slot
+    assert "pythonUDF0" in plan and "pythonUDF1" not in plan
+    # single eval of each kernel
+    assert plan.count("_inter_size_udf") == 1
+    assert plan.count("_minhash_est_udf") == 1
+    # plan prints top-down: intersect node above, est node below, and
+    # the est-threshold filter between them (rows failing est never
+    # cross Arrow with shingle arrays)
+    i_inter = plan.index("_inter_size_udf")
+    i_est = plan.index("_minhash_est_udf")
+    i_filter = plan.index("Filter (isnotnull(pythonUDF0", i_inter)
+    assert i_inter < i_filter < i_est
     sigs.unpersist()
 
 
@@ -374,7 +370,7 @@ def test_dedup_result_clusters_lazy_no_catalog(spark):
 
 
 def test_intersect_auto_picks_jvm_at_tiny_volume(spark):
-    """The auto engine must route tiny member-set volumes to the JVM
+    """The volume gate must route tiny member-set volumes to the JVM
     expression (the Python round-trip measured slower than the whole JVM
     intersection below ~1M member hashes): at this scale the verify plan
     contains no Python evaluation."""

@@ -1,0 +1,156 @@
+"""Verify-operator contracts: the MinHash estimate kernel against the JVM
+expression on malformed rows, the per-document degree cap, and the number
+of Spark jobs one verify call issues before its result is read."""
+
+from __future__ import annotations
+
+from collections import defaultdict
+
+import pytest
+from pyspark.sql import functions as F
+
+from lash_spark.config import LshPlan, SketchParams
+from lash_spark.operators.lsh import cross_lsh_candidate_pairs, lsh_candidate_pairs
+from lash_spark.operators.normalize import with_normalized_text
+from lash_spark.operators.signatures import build_signatures
+from lash_spark.synth import generate_pages
+
+
+def _corpus(spark, n, seed):
+    params = SketchParams()
+    plan = LshPlan.plan(params.num_perm, 0.8, 0.995)
+    normed = with_normalized_text(
+        generate_pages(spark, n, seed=seed, partitions=2).select("url", "text"), "text"
+    ).persist()
+    sigs = build_signatures(normed, params, plan, with_shingles=True).persist()
+    sigs.count()
+    return params, normed, sigs
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_verify_calls_issue_pinned_job_counts(spark):
+    """One verify_pairs call and one cross_verify_pairs call each run a
+    pinned number of Spark jobs before their result action: the one
+    side-table stats action and nothing else (4 and 7 jobs at this size,
+    counting AQE's per-query-stage jobs). A new gate or eager checkpoint
+    shows here as a higher count."""
+    from lash_spark.operators.verify import cross_verify_pairs, verify_pairs
+
+    params, normed, sigs = _corpus(spark, 300, 31)
+    cands = lsh_candidate_pairs(sigs, id_col="url").persist()
+    assert cands.count() > 0
+    verified, n_self = _jobs_in_group(
+        spark, "verify_self",
+        lambda: verify_pairs(cands, normed, params, sig_df=sigs, with_distances=False),
+    )
+    assert verified.count() > 0
+
+    sig_q = sigs.filter(F.abs(F.hash("url")) % 2 == 0).persist()
+    sig_r = sigs.filter(F.abs(F.hash("url")) % 2 == 1).persist()
+    cross = cross_lsh_candidate_pairs(sig_q, sig_r, id_col="url").persist()
+    assert cross.count() > 0
+    cv, n_cross = _jobs_in_group(
+        spark, "verify_cross",
+        lambda: cross_verify_pairs(
+            cross, normed, normed, params, sig_q=sig_q, sig_r=sig_r
+        ),
+    )
+    assert cv.count() > 0
+    assert (n_self, n_cross) == (4, 7)
+    for df in (cands, cross, sig_q, sig_r, sigs, normed):
+        df.unpersist()
+
+
+def test_est_kernel_matches_jvm_on_null_and_ragged_rows(spark, monkeypatch):
+    """The vectorized MinHash estimate and ``minhash_jaccard_expr`` agree
+    row for row, including NULL for a null, empty or length-mismatched
+    sketch, and rows of different register counts in one Arrow batch."""
+    from lash_spark.estimators import minhash_jaccard_expr
+    from lash_spark.operators import verify
+
+    rows = [
+        (1, [1, 2, 3, 4], [1, 2, 3, 5]),
+        (2, None, [1, 2, 3, 4]),
+        (3, [1, 2, 3, 4], None),
+        (4, [1, 2, 3], [1, 2, 3, 4]),
+        (5, [1, 2, 3, 4], [1, 2]),
+        (6, [7, 8], [7, 9]),
+        (7, [], []),
+        (8, None, None),
+        (9, [5, 6, 7, 8], [5, 6, 7, 8]),
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<int>, b array<int>").coalesce(1)
+    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 0)
+    got = {
+        r.id: (r.kernel, r.jvm)
+        for r in df.select(
+            "id",
+            verify._est_jaccard_col(F.col("a"), F.col("b"), 0).alias("kernel"),
+            minhash_jaccard_expr("a", "b").alias("jvm"),
+        ).collect()
+    }
+    assert all(k == j for k, j in got.values()), got
+    assert {i for i, (k, _) in got.items() if k is None} == {2, 3, 4, 5, 7, 8}
+    assert (got[1][0], got[6][0], got[9][0]) == (0.75, 0.5, 1.0)
+
+
+def test_degree_cap_keeps_top_estimates_per_doc(spark):
+    """max_pairs_per_doc keeps, per url_a and then per url_b, the C pairs
+    with the highest estimate, ties broken by (url_a, url_b): the capped
+    pairs are a subset of the uncapped ones with identical jaccard, every
+    url has at most C pairs on each side, and the survivors equal a Python
+    re-ranking of all estimate-passing candidates whatever the input
+    partitioning."""
+    from lash_spark.operators.verify import verify_pairs
+
+    params, normed, sigs = _corpus(spark, 400, 5)
+    cands = lsh_candidate_pairs(sigs, id_col="url").persist()
+    cap = 2
+
+    def run(threshold, max_pairs, parts=None):
+        c = cands if parts is None else cands.repartition(parts)
+        return {
+            (r.url_a, r.url_b): (r.est_jaccard, r.jaccard)
+            for r in verify_pairs(
+                c, normed, params, threshold=threshold, sig_df=sigs,
+                with_distances=False, max_pairs_per_doc=max_pairs,
+            ).collect()
+        }
+
+    full, capped = run(0.8, None), run(0.8, cap)
+    assert capped and len(capped) < len(full)
+    assert capped.items() <= full.items()
+    for i in (0, 1):
+        per = defaultdict(int)
+        for p in capped:
+            per[p[i]] += 1
+        assert max(per.values()) <= cap
+
+    # threshold 0 passes every candidate through both filters, so the cap
+    # alone decides what survives
+    every = run(0.0, None)
+    want = dict(every)
+    for i in (0, 1):
+        kept, seen = {}, defaultdict(int)
+        for p, v in sorted(want.items(), key=lambda kv: (-kv[1][0], kv[0])):
+            if seen[p[i]] < cap:
+                seen[p[i]] += 1
+                kept[p] = v
+        want = kept
+    assert run(0.0, cap) == want == run(0.0, cap, parts=7)
+    cands.unpersist()
+    sigs.unpersist()
+    normed.unpersist()
