@@ -80,12 +80,7 @@ def run_stage_synth(n_docs: int = 50_000):
 
     normed = with_normalized_text(pages.select("url", "text"), "text").persist()
     stage("normalize_gen", normed.count)
-    from lash_spark.pipeline import _resolve_persist_shingles
-
-    sigs = build_signatures(
-        normed, cfg.params, cfg.lsh_plan(), id_col="url",
-        with_shingles=_resolve_persist_shingles(cfg, normed),
-    ).persist()
+    sigs = build_signatures(normed, cfg.params, cfg.lsh_plan(), id_col="url").persist()
     stage("signatures", sigs.count)
     cands = {}
 

@@ -14,10 +14,13 @@ from dataclasses import asdict, dataclass, field
 
 ALGORITHMS = ("minhash", "hll", "ull", "hmh", "simhash")
 # On-disk signature layout version, folded into params_hash so a wire-format
-# change (e.g. round 2's array<long> -> int32 minhash registers) invalidates
-# existing signature tables / resume markers instead of silently mixing
-# incompatible register encodings in one table.
-SIGNATURE_FORMAT = 2
+# change invalidates existing signature tables / resume markers instead of
+# silently mixing incompatible rows in one table. 2: int32 minhash
+# registers (was array<long>). 3: no per-document `shingles` column in the
+# `signatures` / `stream_sigs` tables — shingle sets live in memory within
+# one call or trigger, so a format-2 table (sets persisted) is rebuilt
+# rather than resumed with set-less rows.
+SIGNATURE_FORMAT = 3
 # Reference numbering (main.rs:415-423): 0 = binomial, 1 = poisson
 # (reference default). 2 is kept as a legacy alias of binomial so existing
 # engine configs don't renumber.
@@ -194,19 +197,6 @@ class PipelineConfig:
     # degree cap for boilerplate mega-clusters (see verify_pairs); None =
     # emit the full pair set (fixture-recall workloads)
     max_pairs_per_doc: int | None = None
-    # carry each document's sorted-unique shingle-hash set through the
-    # signature stage (one extra np.unique over window hashes already in
-    # hand) so verify never re-shingles. Space-time trade with a MEASURED
-    # data-dependent sign (VERDICT r5 #1, settled by this round's A/B):
-    # persisted sets win 2.0x at 50k docs (~0.1 GB of sets) but LOSE 1.9x
-    # at 500k in-memory (~3.5 GB of sets — Arrow transfer + cache pressure
-    # + array-bearing joins outweigh the re-shingle UDF over members).
-    # None (the default) resolves adaptively in dedup_pipeline from the
-    # PROJECTED set bytes (8 B per normalized char, an upper bound on
-    # unique shingles) against `lash.shingles.persistBytes` (default
-    # 1.5 GB — above every measured winner, below the measured loser).
-    # True/False pin the layout explicitly.
-    persist_shingles: bool | None = None
     # partition-granular candidate resume (O6): >1 splits the candidate
     # stage into this many band-group waves, each committed + manifested
     # independently (run_partitioned_stage), so a killed run loses at most

@@ -42,13 +42,11 @@ SIGNATURE_SCHEMA = T.StructType(
 # `with_shingles` variant: the per-document sorted-unique shingle-hash set,
 # computed from the SAME window hashes the signature kernel already has in
 # hand (one extra per-segment np.unique — profiled ~25% of the window-hash
-# cost). Verify then joins candidate ids against this column and never
-# re-shingles a document: the shingle UDF that dominated the verify stage
-# (61% post-r4-fix, BENCH/VERIFY_PROFILE.json) disappears entirely.
-# Space-time trade: ~8 bytes per unique shingle ≈ the normalized text size
-# again, paid only where configured (PipelineConfig.persist_shingles) —
-# at low candidate rates re-shingling only candidate members can be
-# cheaper, so the verify path accepts either layout.
+# cost). Verify reads this column where a frame carries it and otherwise
+# shingles only candidate members from their text. It is an in-memory
+# column: ~8 bytes per unique shingle ≈ the normalized text size again, so
+# no catalog table stores it (stream_near_dup keeps it for one trigger and
+# drops it before appending to `stream_sigs`).
 SIGNATURE_SHINGLES_SCHEMA = T.StructType(
     SIGNATURE_SCHEMA.fields + [T.StructField("shingles", T.ArrayType(T.LongType()), False)]
 )

@@ -55,25 +55,6 @@ class DedupResult:
         return self._clusters
 
 
-def _resolve_persist_shingles(cfg: PipelineConfig, normed: DataFrame) -> bool:
-    """Resolve persist_shingles=None (auto) from PROJECTED set bytes: at
-    most one 8-byte hash per normalized character. Measured sign flip this
-    round (OPTIMIZATION_r06.md): persisted sets win 2.0x at ~0.1 GB of
-    sets (50k synth) and lose 1.9x at ~3.5 GB (500k in-memory), so the
-    boundary is a byte budget, not a corpus-size or candidate-rate rule.
-    One cheap aggregate over the normalized projection (already persisted
-    on the no-catalog path)."""
-    if cfg.persist_shingles is not None:
-        return cfg.persist_shingles
-    cap = int(
-        normed.sparkSession.conf.get(
-            "lash.shingles.persistBytes", str(1_500_000_000)
-        )
-    )
-    total_chars = normed.agg(F.sum(F.length("norm_text"))).first()[0] or 0
-    return total_chars * 8 < cap
-
-
 def dedup_pipeline(
     docs: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -106,24 +87,18 @@ def dedup_pipeline(
         if existing is not None and catalog.properties("signatures").get("params_hash") != phash:
             existing = None  # params changed -> full rebuild (F6 semantics)
         # appended rows must match the durable table's layout: a table
-        # written before (or without) persist_shingles keeps its schema
-        # across resumes; the flag applies to fresh builds only. Same rule
-        # for the resume content fingerprint (text_fp).
-        shingles = (
-            "shingles" in existing.columns
-            if existing is not None
-            else _resolve_persist_shingles(cfg, normed)
-        )
+        # written without the resume content fingerprint (as
+        # stream_signatures writes it) keeps that schema across resumes
         with_fp = "text_fp" in existing.columns if existing is not None else True
         inc = normed.withColumn("text_fp", F.xxhash64(F.col("norm_text")))
         # delta keys on (id, content fingerprint): a re-crawled url whose
-        # text mutated is IN the delta, so its signature (and persisted
-        # shingle set) is recomputed instead of silently trusted stale
+        # text mutated is IN the delta, so its signature is recomputed
+        # instead of silently trusted stale
         delta = resume_delta(
             inc, existing, id_col, fp_col="text_fp" if with_fp else None
         ).persist()
         new_sigs = build_signatures(
-            delta, params, plan, id_col=id_col, with_shingles=shingles,
+            delta, params, plan, id_col=id_col,
             carry_cols=["text_fp"] if with_fp else [],
         )
         if existing is not None:
@@ -161,10 +136,7 @@ def dedup_pipeline(
         # the signatures feed three consumers (band explode + both sides of
         # the estimate join); persist so the Arrow UDF runs once per row —
         # the catalog path gets the same effect from the table round-trip
-        sigs = build_signatures(
-            normed, params, plan, id_col=id_col,
-            with_shingles=_resolve_persist_shingles(cfg, normed),
-        ).persist()
+        sigs = build_signatures(normed, params, plan, id_col=id_col).persist()
 
     # ---- candidates (skew-tiered LSH band join)
     def build_candidates():
@@ -273,7 +245,6 @@ def cross_dataset_pairs(
     lsh_min_recall: float = 0.995,
     same_files: bool = False,
     unpersist_into: list | None = None,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """The reference's primary two-dataset ``dist`` mode
     (``/root/reference/src/main.rs:353-401``, ``src/utils.rs:150-161``):
@@ -304,9 +275,7 @@ def cross_dataset_pairs(
     nr = with_normalized_text(
         docs_r.select(id_col, text_col), text_col=text_col, version=params.normalize_version
     )
-    sig_q = build_signatures(
-        nq, params, plan, id_col=id_col, with_shingles=persist_shingles
-    ).persist()
+    sig_q = build_signatures(nq, params, plan, id_col=id_col).persist()
     if unpersist_into is not None:
         unpersist_into.append(sig_q)
     if same_files:
@@ -315,9 +284,7 @@ def cross_dataset_pairs(
             cands, nq, params, id_col=id_col, threshold=threshold,
             sig_df=sig_q, with_distances=False,
         ).select(f"{id_col}_a", f"{id_col}_b", "jaccard")
-    sig_r = build_signatures(
-        nr, params, plan, id_col=id_col, with_shingles=persist_shingles
-    ).persist()
+    sig_r = build_signatures(nr, params, plan, id_col=id_col).persist()
     if unpersist_into is not None:
         unpersist_into.append(sig_r)
     cands = cross_lsh_candidate_pairs(sig_q, sig_r, id_col=id_col)

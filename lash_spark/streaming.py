@@ -13,6 +13,8 @@ web-crawl layout).
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -58,6 +60,7 @@ def stream_signatures(
     guard = {"pending": True}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        t0 = time.monotonic()
         need_guard = guard["pending"]
         guard["pending"] = True  # stays set if anything below raises
         normed = with_normalized_text(
@@ -72,7 +75,7 @@ def stream_signatures(
         catalog.log_metrics(
             f"stream_signatures_batch_{batch_id}",
             params.params_hash(),
-            wall_ms=0.0,
+            wall_ms=(time.monotonic() - t0) * 1000.0,
             output_rows=None,
             status="complete",
         )
@@ -157,7 +160,6 @@ def stream_near_dup(
     threshold: float = 0.8,
     checkpoint_dir: str | None = None,
     trigger_once: bool = False,
-    persist_shingles: bool = True,
 ) -> StreamingQuery:
     """Streaming NEAR-duplicate detection, INCREMENTAL per micro-batch:
     the batch is normalized and sketched ONCE (O(batch) signature-UDF
@@ -191,13 +193,18 @@ def stream_near_dup(
     re-appending. A crash after all three no-ops (the batch's ids are in
     the store, so the unconditional id anti-join empties it).
 
+    Shingle sets never reach the catalog: the batch's signature pass also
+    emits its documents' shingle sets, held for this trigger only;
+    ``stream_sigs`` stores the sketch columns, and verify shingles the
+    stored candidate members from ``stream_docs`` text.
+
     Per-batch cost at scale: one signature pass over the BATCH, a
     candidate equi-join of batch band keys against the stored band-key
     table (skew-salted both sides; scales with batch × matching-band
-    volume), and a verify whose shingle-set UDF touches only candidate
-    ids on either side. The only per-batch store-side work is the
-    columnar scan of the signature/doc tables feeding those joins — no
-    Python runs over history."""
+    volume), and a verify that shingles only the stored candidate members.
+    The only other per-batch store-side work is the columnar scan of the
+    signature/doc tables feeding those joins — no Python runs over the
+    rest of history."""
     from pyspark.sql import functions as F
 
     from lash_spark.operators.lsh import cross_lsh_candidate_pairs, lsh_candidate_pairs
@@ -224,32 +231,26 @@ def stream_near_dup(
     # rows changes with threshold) would silently equi-join incompatible
     # band layouts — pairs missing or bogus. The store is therefore
     # stamped with (params_hash, bands x rows) on write, validated at
-    # every batch entry, and rebuilt from stream_docs on mismatch.
+    # every batch entry, and rebuilt from stream_docs on mismatch. The
+    # params_hash carries SIGNATURE_FORMAT, so a store written under an
+    # older column layout is rebuilt the same way.
     sig_props = {
         "params_hash": params.params_hash(),
         "params": params.to_json(),
         "lsh_plan": f"{plan.bands}x{plan.rows}",
-        # schema marker: toggling persist_shingles changes the store's
-        # column layout, so it participates in the same rebuild-on-mismatch
-        # protocol as the sketch params
-        "layout": "shingles" if persist_shingles else "plain",
     }
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        t0 = time.monotonic()
         need_guard = guard["pending"]
         guard["pending"] = True  # stays set if anything below raises
         batch = batch_df.select(id_col, text_col)
         have_docs = catalog.exists("stream_docs")
         if catalog.exists("stream_sigs"):
             stored = catalog.properties("stream_sigs")
-            if (
-                stored.get("params_hash"),
-                stored.get("lsh_plan"),
-                stored.get("layout"),
-            ) != (
+            if (stored.get("params_hash"), stored.get("lsh_plan")) != (
                 sig_props["params_hash"],
                 sig_props["lsh_plan"],
-                sig_props["layout"],
             ):
                 # incompatible store: drop — the backfill below rebuilds
                 # every stored document's signature under this run's config
@@ -274,16 +275,16 @@ def stream_near_dup(
             # lost): one-time backfill from the stored docs, after which
             # every batch appends only its own signatures
             catalog.write(
-                build_signatures(
-                    _store_normed(), params, plan, id_col=id_col,
-                    with_shingles=persist_shingles,
-                ),
+                build_signatures(_store_normed(), params, plan, id_col=id_col),
                 "stream_sigs",
             )
         normed = with_normalized_text(batch, text_col, version=params.normalize_version)
+        # the batch's shingle sets come out of the same Arrow pass as its
+        # sketches and serve both verifies; they are dropped before the
+        # append, so stream_sigs holds sketch columns only
         sigs = build_signatures(
             normed, params, plan, id_col=id_col, min_parallelism=1,
-            with_shingles=persist_shingles,
+            with_shingles=True,
         ).persist()  # feeds triangular cands + cross cands + 2 estimate joins + append
         try:
             pairs = verify_pairs(
@@ -331,9 +332,9 @@ def stream_near_dup(
                     catalog.read("stream_dup_pairs").select(a, b), [a, b], "left_anti"
                 )
             catalog.append(pairs, "stream_dup_pairs")
-            sigs_out = sigs
+            sigs_out = sigs.drop("shingles")
             if need_guard and catalog.exists("stream_sigs"):
-                sigs_out = sigs.join(
+                sigs_out = sigs_out.join(
                     catalog.read("stream_sigs").select(id_col), id_col, "left_anti"
                 )
             catalog.append(sigs_out, "stream_sigs")
@@ -345,7 +346,7 @@ def stream_near_dup(
         catalog.log_metrics(
             f"stream_near_dup_batch_{batch_id}",
             params.params_hash(),
-            wall_ms=0.0,
+            wall_ms=(time.monotonic() - t0) * 1000.0,
             output_rows=None,
             status="complete",
         )

@@ -189,3 +189,40 @@ def test_pipeline_resume_skips_and_matches_clean_run(spark, tiny_pages, tmp_path
     stages = [r.stage for r in cat2.metrics().collect()]
     assert "candidates" not in stages
     assert "dup_pairs" in stages and "clusters" in stages
+
+
+def test_format2_signatures_table_rebuilt_not_resumed(spark, tmp_path, monkeypatch):
+    """A catalog written under SIGNATURE_FORMAT 2 (each ``signatures`` row
+    carrying its shingle set) fails the params_hash check: the pipeline
+    rebuilds the table set-less, instead of appending set-less delta rows
+    to it, and the results equal a clean run."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    import lash_spark.config as config_mod
+    import lash_spark.pipeline as pipeline_mod
+    from lash_spark.synth import generate_pages
+
+    pages = generate_pages(spark, 200, seed=23, partitions=2)
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    real = pipeline_mod.build_signatures
+    with monkeypatch.context() as m:
+        # the format-2 pipeline: shingle sets persisted, format-2 hashes
+        m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
+        m.setattr(
+            pipeline_mod, "build_signatures",
+            lambda *a, **kw: real(*a, with_shingles=True, **kw),
+        )
+        dedup_pipeline(pages.filter("planted_cluster % 2 = 0"), PipelineConfig(), catalog=cat)
+    assert "shingles" in cat.read("signatures").columns
+
+    res = dedup_pipeline(pages, PipelineConfig(), catalog=cat)
+    files = list(Path(cat.path("signatures")).rglob("*.parquet"))
+    assert files and all("shingles" not in pq.read_schema(f).names for f in files)
+    assert cat.properties("signatures")["params_hash"] == PipelineConfig().params.params_hash()
+    assert cat.read("signatures").count() == pages.count()
+    clean = dedup_pipeline(pages, PipelineConfig())
+    for got, want in ((res.dup_pairs, clean.dup_pairs), (res.clusters, clean.clusters)):
+        assert got.count() > 0
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()

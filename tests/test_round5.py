@@ -1,7 +1,8 @@
-"""Round-5 additions: persisted shingle sets (signature-stage sorted-unique
-shingle column consumed by verify — removes the verify-stage shingle UDF,
-VERDICT r4 #2), the lakeio empty-output / wave-toggle resume fixes (ADVICE
-r4), and the stream_sigs params/plan compatibility guard (ADVICE r4 medium).
+"""Round-5 additions: the signature-stage sorted-unique shingle column
+(identical to verify's own shingling, so verify can read it where a frame
+carries it), the lakeio empty-output / wave-toggle resume fixes (ADVICE
+r4), and the stream_sigs params/plan/format compatibility guard (ADVICE r4
+medium).
 """
 
 from __future__ import annotations
@@ -40,25 +41,6 @@ def test_signature_shingles_match_verify_kernel(spark):
         assert np.array_equal(rows[url], want), url
 
 
-def test_verify_identical_with_and_without_persisted_shingles(spark):
-    """The full pipeline must produce identical dup pairs and clusters
-    whether verify consumes persisted shingle sets (persist_shingles=True,
-    the default — no Python in verify) or re-shingles candidate members."""
-    from lash_spark.pipeline import dedup_pipeline
-
-    pages = generate_pages(spark, 400, seed=11, partitions=4)
-    res_on = dedup_pipeline(pages, PipelineConfig(persist_shingles=True))
-    res_off = dedup_pipeline(pages, PipelineConfig(persist_shingles=False))
-    assert "shingles" in res_on.signatures.columns
-    assert "shingles" not in res_off.signatures.columns
-    on = res_on.dup_pairs.select("url_a", "url_b", "jaccard")
-    off = res_off.dup_pairs.select("url_a", "url_b", "jaccard")
-    assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
-    con = res_on.clusters
-    coff = res_off.clusters
-    assert con.exceptAll(coff).isEmpty() and coff.exceptAll(con).isEmpty()
-
-
 def test_verify_with_shingles_runs_no_python_udf(spark, monkeypatch):
     """With the JVM kernels (forced: ``_ARROW_MIN_HASHES`` above any
     volume) the persisted-set verify plan must contain no Arrow/pandas
@@ -80,19 +62,6 @@ def test_verify_with_shingles_runs_no_python_udf(spark, monkeypatch):
     plan = verified._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert verified.count() > 0
-
-
-def test_cross_dataset_pairs_shingle_parity(spark):
-    """cross_verify_pairs must agree between persisted-set and re-shingle
-    layouts in the two-table dist mode as well."""
-    from lash_spark.pipeline import cross_dataset_pairs
-
-    pages = generate_pages(spark, 240, seed=17, partitions=2)
-    q = pages.filter("planted_cluster % 2 = 0")
-    r = pages.filter("planted_cluster % 2 = 1")
-    on = cross_dataset_pairs(q, r, persist_shingles=True)
-    off = cross_dataset_pairs(q, r, persist_shingles=False)
-    assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
 
 
 # -------------------------------------- lakeio resume fixes (ADVICE r4 low)
@@ -236,7 +205,6 @@ def test_stream_sigs_params_mismatch_rebuilds_store(spark, tmp_path):
         with_normalized_text(cat.read("stream_docs").select("url", "text"), "text"),
         p_v2,
         LshPlan.plan(p_v2.num_perm, 0.8, 0.995),
-        with_shingles=True,
     )
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
@@ -244,7 +212,7 @@ def test_stream_sigs_params_mismatch_rebuilds_store(spark, tmp_path):
     # post-restart batch (cross pairs between d1 and the d0 store went
     # through rebuilt v2 signatures — not a band-layout cross-join)
     stream_pairs = cat.read("stream_dup_pairs").filter("batch_id >= 0")
-    union_pairs = cross_dataset_pairs(d1, d0, p_v2, persist_shingles=True)
+    union_pairs = cross_dataset_pairs(d1, d0, p_v2)
     cross_want = union_pairs.select(
         F.least("url_q", "url_r").alias("url_a"),
         F.greatest("url_q", "url_r").alias("url_b"),
@@ -253,10 +221,17 @@ def test_stream_sigs_params_mismatch_rebuilds_store(spark, tmp_path):
     assert missing.isEmpty(), "cross-batch pairs lost after params change"
 
 
-def test_stream_sigs_layout_mismatch_rebuilds_store(spark, tmp_path):
-    """Toggling persist_shingles across stream restarts changes the store
-    schema; the layout stamp must force a rebuild so appends don't mix
-    5-column and 6-column parquet files in one table."""
+def test_stream_sigs_layout_mismatch_rebuilds_store(spark, tmp_path, monkeypatch):
+    """A ``stream_sigs`` store written under SIGNATURE_FORMAT 2 (shingle
+    sets persisted next to the sketches, format-2 params_hash) fails the
+    params_hash check on the next run: it is dropped and backfilled
+    set-less from ``stream_docs``, not appended to with set-less rows."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    import lash_spark.config as config_mod
+    from lash_spark.pipeline import cross_dataset_pairs
     from lash_spark.streaming import stream_near_dup
 
     pages = generate_pages(spark, 120, seed=5, partitions=2)
@@ -264,27 +239,52 @@ def test_stream_sigs_layout_mismatch_rebuilds_store(spark, tmp_path):
     pages.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
     cat = ParquetCatalog(spark, str(tmp_path / "cat"))
     params = SketchParams()
-    schema = pages.schema
+    plan = LshPlan.plan(params.num_perm, 0.8, 0.995)
 
-    def run(ckpt, persist):
+    def run(ckpt):
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(pages.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/*")
         )
         q = stream_near_dup(
-            stream, cat, params, checkpoint_dir=str(tmp_path / ckpt),
-            trigger_once=True, persist_shingles=persist,
+            stream, cat, params, checkpoint_dir=str(tmp_path / ckpt), trigger_once=True
         )
         q.awaitTermination(300)
 
-    run("ck1", True)
-    assert "shingles" in cat.read("stream_sigs").columns
+    def store_normed():
+        return with_normalized_text(cat.read("stream_docs").select("url", "text"), "text")
+
+    with monkeypatch.context() as m:
+        m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
+        run("ck1")
+        old_hash = params.params_hash()
+        # the format-2 store layout: every row carries its shingle set
+        cat.write(
+            build_signatures(store_normed(), params, plan, with_shingles=True),
+            "stream_sigs",
+        )
+    assert cat.properties("stream_sigs")["params_hash"] == old_hash
+    assert old_hash != params.params_hash()
+
     pages.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
-    run("ck2", False)  # fresh checkpoint: d0 replays (no-op), d1 ingests
+    run("ck2")  # fresh checkpoint: d0 replays (no-op), d1 ingests
+    files = list(Path(cat.path("stream_sigs")).rglob("*.parquet"))
+    assert files and all("shingles" not in pq.read_schema(f).names for f in files)
+    assert cat.properties("stream_sigs")["params_hash"] == params.params_hash()
     got = cat.read("stream_sigs")
-    assert "shingles" not in got.columns
-    assert got.count() == cat.read("stream_docs").count()
+    want = build_signatures(store_normed(), params, plan)
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert got.count() == pages.count()
+    stream_pairs = {
+        (r.url_a, r.url_b, round(r.jaccard, 9))
+        for r in cat.read("stream_dup_pairs").collect()
+    }
+    batch_pairs = {
+        (r.url_a, r.url_b, round(r.jaccard, 9))
+        for r in cross_dataset_pairs(pages, pages, params, same_files=True).collect()
+    }
+    assert stream_pairs == batch_pairs and len(batch_pairs) > 0
 
 
 # ------------------- census-driven star budget (VERDICT r4 #5) + LCS witness
@@ -413,10 +413,10 @@ def test_dm_fill_value(spark, tmp_path):
 
 def test_mutated_url_recomputed_on_resume(spark, tmp_path):
     """A re-crawled url whose text changed between runs must have its
-    signature (and persisted shingle set) recomputed — an id-only delta
-    kept the stale row and, with persisted-set verify, produced pairs from
-    text that no longer exists. Exposed by test_grown_input_* once verify
-    stopped re-shingling current text."""
+    signature recomputed — an id-only delta kept the stale row, whose
+    sketch then drove candidates and estimates from text that no longer
+    exists. Exposed by test_grown_input_* when verify read persisted sets
+    instead of shingling current text."""
     from lash_spark.operators.signatures import build_signatures
     from lash_spark.pipeline import dedup_pipeline
 
@@ -442,12 +442,9 @@ def test_mutated_url_recomputed_on_resume(spark, tmp_path):
     normed = with_normalized_text(
         spark.createDataFrame([("mut", dup_of_u3)], schema), "text"
     )
-    want_row = build_signatures(normed, cfg.params, cfg.lsh_plan(), with_shingles=True)
-    assert (
-        sig.select("minhash", "shingles")
-        .exceptAll(want_row.select("minhash", "shingles"))
-        .isEmpty()
-    )
+    want_row = build_signatures(normed, cfg.params, cfg.lsh_plan())
+    sketch = ["minhash", "simhash", "bands", "n_windows"]
+    assert sig.select(*sketch).exceptAll(want_row.select(*sketch)).isEmpty()
 
 
 def test_pure_append_resume_still_appends(spark, tmp_path):

@@ -145,35 +145,6 @@ def test_local_kmeans_deterministic_and_partitioning(spark):
     assert c3.shape == (4, 4)
 
 
-# ------------------------------------------------- adaptive persist_shingles
-
-
-def test_persist_shingles_auto_resolves_by_projected_bytes(spark):
-    """persist_shingles=None resolves from projected set bytes vs the
-    lash.shingles.persistBytes budget; results are identical either way
-    (the r6 500k A/B measured the perf sign flip this rule encodes)."""
-    from lash_spark.config import PipelineConfig
-    from lash_spark.pipeline import dedup_pipeline
-    from lash_spark.synth import generate_pages
-
-    pages = generate_pages(spark, 300, seed=3, partitions=4)
-    res_auto = dedup_pipeline(pages, PipelineConfig())
-    assert "shingles" in res_auto.signatures.columns  # tiny corpus: persist
-    old = spark.conf.get("lash.shingles.persistBytes", None)
-    spark.conf.set("lash.shingles.persistBytes", "1")
-    try:
-        res_off = dedup_pipeline(pages, PipelineConfig())
-        assert "shingles" not in res_off.signatures.columns
-        a = {(r.url_a, r.url_b) for r in res_auto.dup_pairs.select("url_a", "url_b").collect()}
-        b = {(r.url_a, r.url_b) for r in res_off.dup_pairs.select("url_a", "url_b").collect()}
-        assert a == b and len(a) > 0
-    finally:
-        if old is None:
-            spark.conf.unset("lash.shingles.persistBytes")
-        else:
-            spark.conf.set("lash.shingles.persistBytes", old)
-
-
 # ------------------------------------------------------- lakeio ADVICE fixes
 
 

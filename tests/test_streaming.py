@@ -168,15 +168,15 @@ def test_stream_near_dup_incremental_signature_work(spark, tmp_path, monkeypatch
     assert sum(calls) == pages.count()
     assert cat.read("stream_docs").count() == pages.count()
 
-    # the persisted signature table matches a batch build over the union
-    # (incl. the persisted per-doc shingle sets the stream stores by default)
+    # the persisted signature table matches a batch build over the union:
+    # sketch columns only, the shingle sets stayed within their trigger
     got = cat.read("stream_sigs")
     want = build_signatures(
         with_normalized_text(pages, "text"),
         params,
         LshPlan.plan(128, 0.8, 0.995),
-        with_shingles=True,
     )
+    assert "shingles" not in got.columns
     assert got.count() == pages.count()
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
@@ -310,3 +310,64 @@ def test_stream_near_dup_prefix_closure(spark, tmp_path):
     }
     assert got2 == want_set
     assert cat2.read("stream_docs").count() == pages.count()
+
+
+def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
+    """The ``stream_signatures_batch_*`` and ``stream_near_dup_batch_*``
+    metrics rows carry the measured wall time of their batch, not 0: more
+    than zero and no more than the whole query took."""
+    import time
+
+    from lash_spark.streaming import stream_near_dup
+
+    pages = generate_pages(spark, 60, seed=3, partitions=2)
+    src = str(tmp_path / "src")
+    pages.coalesce(1).write.parquet(f"{src}/d0")
+    for name, start in (
+        ("stream_signatures", stream_signatures),
+        ("stream_near_dup", stream_near_dup),
+    ):
+        cat = ParquetCatalog(spark, str(tmp_path / name))
+        t0 = time.monotonic()
+        q = start(
+            read_pages_stream(spark, f"{src}/*", pages.schema, 1), cat, SketchParams(),
+            checkpoint_dir=str(tmp_path / f"ck_{name}"), trigger_once=True,
+        )
+        q.awaitTermination(300)
+        elapsed_ms = (time.monotonic() - t0) * 1000.0
+        (row,) = cat.metrics().collect()
+        assert row.stage == f"{name}_batch_0" and row.status == "complete"
+        assert 0.0 < row.wall_ms <= elapsed_ms
+
+
+def test_no_catalog_table_stores_shingle_sets(spark, tmp_path):
+    """After a catalog dedup_pipeline run and a two-drop stream_near_dup
+    run, no parquet file under either catalog has a ``shingles`` column:
+    shingle sets stay in memory within one call or trigger."""
+    import pyarrow.parquet as pq
+
+    from lash_spark.config import PipelineConfig
+    from lash_spark.pipeline import dedup_pipeline
+    from lash_spark.streaming import stream_near_dup
+
+    pages = generate_pages(spark, 120, seed=9, partitions=2)
+    batch_cat = ParquetCatalog(spark, str(tmp_path / "batch"))
+    res = dedup_pipeline(pages, PipelineConfig(), catalog=batch_cat)
+    assert res.dup_pairs.count() > 0
+
+    src = str(tmp_path / "src")
+    pages.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
+    pages.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
+    stream_cat = ParquetCatalog(spark, str(tmp_path / "stream"))
+    q = stream_near_dup(
+        read_pages_stream(spark, f"{src}/*", pages.schema, 1), stream_cat, SketchParams(),
+        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+    )
+    q.awaitTermination(300)
+    assert stream_cat.read("stream_sigs").count() == pages.count()
+
+    for cat in (batch_cat, stream_cat):
+        files = list(cat.root.rglob("*.parquet"))
+        assert files
+        with_sets = [f for f in files if "shingles" in pq.read_schema(f).names]
+        assert not with_sets, with_sets

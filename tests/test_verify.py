@@ -1,6 +1,7 @@
 """Verify-operator contracts: the MinHash estimate kernel against the JVM
-expression on malformed rows, the per-document degree cap, and the number
-of Spark jobs one verify call issues before its result is read."""
+expression on malformed rows, the per-document degree cap, the number of
+Spark jobs one verify call runs before its result is read, and identical
+pairs wherever the shingle sets come from."""
 
 from __future__ import annotations
 
@@ -154,3 +155,45 @@ def test_degree_cap_keeps_top_estimates_per_doc(spark):
     cands.unpersist()
     sigs.unpersist()
     normed.unpersist()
+
+
+def _assert_same_rows(x, y):
+    assert x.count() > 0
+    assert x.exceptAll(y).isEmpty() and y.exceptAll(x).isEmpty()
+
+
+def test_verify_pairs_identical_with_and_without_shingle_sets(spark):
+    """verify_pairs gives the same pairs, estimates, jaccards and
+    distances whether the signature frame carries each document's shingle
+    set or verify shingles the candidate members from their text."""
+    from lash_spark.operators.verify import verify_pairs
+
+    params, normed, sigs = _corpus(spark, 400, 11)
+    cands = lsh_candidate_pairs(sigs, id_col="url").persist()
+    _assert_same_rows(
+        verify_pairs(cands, normed, params, sig_df=sigs),
+        verify_pairs(cands, normed, params, sig_df=sigs.drop("shingles")),
+    )
+    for df in (cands, sigs, normed):
+        df.unpersist()
+
+
+def test_cross_verify_pairs_identical_for_every_shingle_set_placement(spark):
+    """cross_verify_pairs with shingle sets on the q side only (the
+    stream's shape: the trigger's batch carries them, the store does not)
+    gives the same pairs as sets on both sides and as sets on neither."""
+    from lash_spark.operators.verify import cross_verify_pairs
+
+    params, normed, sigs = _corpus(spark, 300, 17)
+    sig_q = sigs.filter(F.abs(F.hash("url")) % 2 == 0).persist()
+    sig_r = sigs.filter(F.abs(F.hash("url")) % 2 == 1).persist()
+    cross = cross_lsh_candidate_pairs(sig_q, sig_r, id_col="url").persist()
+
+    def run(q, r):
+        return cross_verify_pairs(cross, normed, normed, params, sig_q=q, sig_r=r)
+
+    q_only = run(sig_q, sig_r.drop("shingles"))
+    _assert_same_rows(q_only, run(sig_q, sig_r))
+    _assert_same_rows(q_only, run(sig_q.drop("shingles"), sig_r.drop("shingles")))
+    for df in (cross, sig_q, sig_r, sigs, normed):
+        df.unpersist()
