@@ -21,27 +21,45 @@ quadratic-in-bucket-size pair generation, which AQE skew-join cannot fix:
 
 Pairs found in multiple bands are deduped *before* expensive verification
 (manual early-dedup rewrite, SURVEY.md §4.2(5)).
+
+Side-tagged probe (``new_col``): the incremental stream keys a trigger's
+batch rows (tag true) and the stored rows (tag false) into ONE frame, so a
+trigger pays one census, one join and one verify instead of a triangular
+pass plus a query × reference pass. Buckets without a new member drop right
+after the census; tiers 1 and 2 put only new rows on the left side and
+keep a pair when the right member is stored or sorts after the left one,
+emitted as canonical (least, greatest) — no stored × stored pair is ever
+enumerated. Tier 3 links every new non-representative member to the union
+bucket's min-id representative and, when that representative is itself
+new, links it to the stored side's min id too: the stored members are one
+component already, so the bucket stays one component across triggers.
 """
 
 from __future__ import annotations
 
 import logging
 import math
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_bands(sig_df: DataFrame, id_col: str = "url") -> DataFrame:
-    """Signatures -> (id, band_id, band_hash) key rows (O1).
+def explode_bands(
+    sig_df: DataFrame, id_col: str = "url", new_col: str | None = None
+) -> DataFrame:
+    """Signatures -> (id, band_id, band_hash[, new_col]) key rows (O1).
 
     Empty-signature documents (text shorter than one shingle) are excluded:
     they all share the EMPTY register pattern and would otherwise form one
-    giant garbage bucket per band at web scale."""
+    giant garbage bucket per band at web scale. ``new_col`` names a side
+    tag carried onto every key row (see :func:`pairs_from_keys`)."""
     if "n_windows" in sig_df.columns:
         sig_df = sig_df.filter(F.col("n_windows") > 0)
+    tag = [F.col(new_col)] if new_col else []
     return sig_df.select(
-        F.col(id_col), F.posexplode("bands").alias("band_id", "band_hash")
+        F.col(id_col), *tag, F.posexplode("bands").alias("band_id", "band_hash")
     ).withColumn("key", F.col("band_hash")).drop("band_hash")
 
 
@@ -60,9 +78,14 @@ def pairs_from_keys(
     salt_buckets: int = 8,
     star_threshold: int | None = None,
     star_pair_budget: int = 8_000_000,
+    new_col: str | None = None,
 ) -> DataFrame:
     """Generic skew-tiered candidate pair generation from (band_id, key, id)
     rows. Returns distinct (id_a, id_b) with id_a < id_b.
+
+    ``new_col``: a boolean side tag on the key rows. When given, only pairs
+    with at least one new member are generated (the side-tagged probe of
+    the module docstring); None pairs every row with every other.
 
     ``star_threshold=None`` (the default) derives the salt→star boundary
     from ``star_pair_budget``, the largest per-bucket pair volume the salt
@@ -90,12 +113,18 @@ def pairs_from_keys(
     # lets tier 1's self-join run exchange-free. Feeds all tiers: persist so
     # the upstream signature UDF + explode run once per row.
     w = Window.partitionBy("band_id", "key")
-    k = (
-        keyed.withColumn("bucket_n", F.count(F.lit(1)).over(w))
-        .withColumn("rep", F.min(id_col).over(w))
-        .filter(F.col("bucket_n") >= 2)
-        .persist()
+    k = keyed.withColumn("bucket_n", F.count(F.lit(1)).over(w)).withColumn(
+        "rep", F.min(id_col).over(w)
     )
+    live = F.col("bucket_n") >= 2
+    if new_col:
+        # same window: whether the bucket has a new member, and the stored
+        # side's min id (the star tier's link into the stored component)
+        k = k.withColumn("_has_new", F.max(new_col).over(w)).withColumn(
+            "_rep_old", F.min(F.when(~F.col(new_col), F.col(id_col))).over(w)
+        )
+        live = live & F.col("_has_new")
+    k = k.filter(live).persist()
     # One cached aggregate decides which tiers exist. Buckets above
     # max_bucket are RARE by construction (boilerplate families), so at most
     # scales the salt/star tiers are empty — yet the r5 plan always built
@@ -105,16 +134,28 @@ def pairs_from_keys(
     mx = k.agg(F.max("bucket_n").alias("mx")).first()["mx"] or 0
 
     a, b = f"{id_col}_a", f"{id_col}_b"
+    tag = [new_col] if new_col else []
+    lid, rid = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+
+    def self_join(rows, on, *conds):
+        """The l < r pair rule (plus ``conds``) over one frame; tagged: new
+        rows on the left only, paired with a later new row or any stored
+        row, emitted as (least, greatest)."""
+        left, keep, lo, hi = rows, lid < rid, lid, rid
+        if new_col:
+            left = rows.where(F.col(new_col))
+            keep = keep | ~F.col(f"r.{new_col}")
+            lo, hi = F.least(lid, rid), F.greatest(lid, rid)
+        return (
+            left.alias("l")
+            .join(rows.alias("r"), on)
+            .where(reduce(and_, conds, keep))
+            .select(lo.alias(a), hi.alias(b))
+        )
 
     # --- tier 1: plain equi-join
-    cold = k.filter(F.col("bucket_n") <= max_bucket).select("band_id", "key", id_col)
-    p1 = (
-        cold.alias("l")
-        .join(cold.alias("r"), ["band_id", "key"])
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias(a), F.col(f"r.{id_col}").alias(b))
-    )
-    parts = [p1]
+    cold = k.filter(F.col("bucket_n") <= max_bucket).select("band_id", "key", id_col, *tag)
+    parts = [self_join(cold, ["band_id", "key"])]
 
     if mx > max_bucket:
         # --- tier 2: salted triangle blocks
@@ -122,7 +163,7 @@ def pairs_from_keys(
             k.filter(
                 (F.col("bucket_n") > max_bucket) & (F.col("bucket_n") <= star_threshold)
             )
-            .select("band_id", "key", id_col)
+            .select("band_id", "key", id_col, *tag)
             .withColumn(
                 "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
             )
@@ -143,24 +184,27 @@ def pairs_from_keys(
         rep = warm.join(
             F.broadcast(blocks), (F.col("salt") == F.col("bi")) | (F.col("salt") == F.col("bj"))
         )
-        p2 = (
-            rep.alias("l")
-            .join(rep.alias("r"), ["band_id", "key", "bi", "bj"])
-            .where(
-                (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-                & (F.least("l.salt", "r.salt") == F.col("bi"))
-                & (F.greatest("l.salt", "r.salt") == F.col("bj"))
+        parts.append(
+            self_join(
+                rep,
+                ["band_id", "key", "bi", "bj"],
+                F.least("l.salt", "r.salt") == F.col("bi"),
+                F.greatest("l.salt", "r.salt") == F.col("bj"),
             )
-            .select(F.col(f"l.{id_col}").alias(a), F.col(f"r.{id_col}").alias(b))
         )
-        parts.append(p2)
 
     if mx > star_threshold:
         # --- tier 3: star-link to representative (rep == min id, so rep < id)
-        p3 = (
-            k.filter(F.col("bucket_n") > star_threshold)
-            .where(F.col(id_col) != F.col("rep"))
-            .select(F.col("rep").alias(a), F.col(id_col).alias(b))
+        star = k.filter(F.col("bucket_n") > star_threshold)
+        if new_col:
+            star = star.where(F.col(new_col))
+            # a new representative also links to the stored min id
+            parts.append(
+                star.where((F.col(id_col) == F.col("rep")) & F.col("_rep_old").isNotNull())
+                .select(F.col("rep").alias(a), F.col("_rep_old").alias(b))
+            )
+        p3 = star.where(F.col(id_col) != F.col("rep")).select(
+            F.col("rep").alias(a), F.col(id_col).alias(b)
         )
         parts.append(p3)
         if derived:
@@ -207,15 +251,18 @@ def lsh_candidate_pairs(
     salt_buckets: int = 8,
     star_threshold: int | None = None,
     star_pair_budget: int = 8_000_000,
+    new_col: str | None = None,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs from the signatures table."""
+    """MinHash-LSH candidate pairs from the signatures table (``new_col``:
+    the side-tagged probe, see :func:`pairs_from_keys`)."""
     return pairs_from_keys(
-        explode_bands(sig_df, id_col),
+        explode_bands(sig_df, id_col, new_col),
         id_col=id_col,
         max_bucket=max_bucket,
         salt_buckets=salt_buckets,
         star_threshold=star_threshold,
         star_pair_budget=star_pair_budget,
+        new_col=new_col,
     )
 
 

@@ -45,8 +45,10 @@ SIGNATURE_SCHEMA = T.StructType(
 # cost). Verify reads this column where a frame carries it and otherwise
 # shingles only candidate members from their text. It is an in-memory
 # column: ~8 bytes per unique shingle ≈ the normalized text size again, so
-# no catalog table stores it (stream_near_dup keeps it for one trigger and
-# drops it before appending to `stream_sigs`).
+# no catalog table stores it; only a caller that holds its whole signature
+# frame in memory for one call asks for it (e.g. the `__spark_entry__`
+# near-dup query). stream_near_dup does not: its verify shingles every
+# candidate member, batch and stored alike, from text.
 SIGNATURE_SHINGLES_SCHEMA = T.StructType(
     SIGNATURE_SCHEMA.fields + [T.StructField("shingles", T.ArrayType(T.LongType()), False)]
 )

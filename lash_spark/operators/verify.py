@@ -8,10 +8,10 @@ calls:
 1. **Side tables.** Each pair role gets one ``(id, minhash, shingles)``
    table over the candidate members only, built once and materialized by a
    single stats action (row count + total set hashes). The shingle sets are
-   read off the signature frame when it carries them (a stream trigger's
-   batch side), otherwise computed from the members' text by a map-only
-   Arrow UDF. A self-join uses ONE table under two aliases, so the second
-   join reuses the first's exchange.
+   read off the signature frame when it carries them (a caller that built
+   its signatures ``with_shingles``), otherwise computed from the members'
+   text by a map-only Arrow UDF. A self-join uses ONE table under two
+   aliases, so the second join reuses the first's exchange.
 2. **Join strategy from measured bytes.** A side is broadcast when its
    measured footprint fits ``max(_BROADCAST_BYTES,
    spark.sql.autoBroadcastJoinThreshold)``; above that the same plan

@@ -83,3 +83,96 @@ def test_simhash_pigeonhole_complete(spark):
     assert (1, 2) in got and got[(1, 2)] == 3
     assert (1, 3) in got and got[(1, 3)] == 2
     assert all(h <= 3 for h in got.values())
+
+
+def _canon(rows, a="url_a", b="url_b"):
+    return {(min(r[a], r[b]), max(r[a], r[b])) for r in rows}
+
+
+@pytest.mark.parametrize("max_bucket", [2000, 4])
+def test_tagged_probe_equals_batch_and_cross_pairs(spark, max_bucket):
+    """The side-tagged probe over batch ∪ store equals the batch's own
+    triangular pairs plus the batch × store pairs, canonicalized, at the
+    default tiers and with the salt tier forced (max_bucket=4); it never
+    pairs two stored documents."""
+    from lash_spark.config import LshPlan, SketchParams
+    from lash_spark.operators.lsh import cross_lsh_candidate_pairs, lsh_candidate_pairs
+    from lash_spark.operators.normalize import with_normalized_text
+    from lash_spark.operators.signatures import build_signatures
+    from lash_spark.synth import generate_pages
+
+    params = SketchParams()
+    sigs = build_signatures(
+        with_normalized_text(generate_pages(spark, 300, seed=5, partitions=2), "text"),
+        params,
+        LshPlan.plan(params.num_perm, 0.8, 0.995),
+    ).persist()
+    batch = sigs.filter(F.abs(F.hash("url")) % 3 == 0)
+    store = sigs.filter(F.abs(F.hash("url")) % 3 != 0)
+    store_ids = {r.url for r in store.select("url").collect()}
+
+    tagged = batch.withColumn("new", F.lit(True)).unionByName(
+        store.withColumn("new", F.lit(False))
+    )
+    got = _canon(
+        lsh_candidate_pairs(tagged, max_bucket=max_bucket, new_col="new").collect()
+    )
+    want = _canon(lsh_candidate_pairs(batch, max_bucket=max_bucket).collect()) | _canon(
+        cross_lsh_candidate_pairs(batch, store, max_bucket=max_bucket).collect(),
+        "url_q",
+        "url_r",
+    )
+    assert got == want
+    assert any(a in store_ids or b in store_ids for a, b in got)  # cross pairs exist
+    assert not any(a in store_ids and b in store_ids for a, b in got)
+    if max_bucket == 4:  # the salt tier really ran
+        largest = (
+            band_census(explode_bands(tagged), "url").agg(F.max("bucket_n")).first()[0]
+        )
+        assert largest > max_bucket
+    sigs.unpersist()
+
+
+def test_tagged_star_tier_keeps_hot_buckets_connected(spark):
+    """Star tier under the side tag, over three triggers against a growing
+    store: each trigger links only new members (no stored × stored pair),
+    and the accumulated edges leave every hot bucket one component —
+    including when a later trigger brings a new, smaller representative."""
+    arrivals = [  # per trigger: key -> new ids
+        {1: list(range(50, 60)), 3: [100, 101, 102]},
+        {1: list(range(30, 40)), 3: [103]},
+        {1: list(range(60, 70)), 3: [90, 104, 105], 4: list(range(200, 208))},
+    ]
+    stored: dict = {}
+    edges = set()
+    for trig in arrivals:
+        rows = [(0, k, i, True) for k, ids in trig.items() for i in ids]
+        rows += [(0, k, i, False) for k, ids in stored.items() for i in ids]
+        keyed = spark.createDataFrame(rows, "band_id int, key bigint, url bigint, new boolean")
+        got = {
+            (r.url_a, r.url_b)
+            for r in pairs_from_keys(
+                keyed, max_bucket=2, salt_buckets=2, star_threshold=5, new_col="new"
+            ).collect()
+        }
+        old = {i for ids in stored.values() for i in ids}
+        assert all(a < b and not (a in old and b in old) for a, b in got)
+        edges |= got
+        for k, ids in trig.items():
+            stored.setdefault(k, []).extend(ids)
+
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    for k, ids in stored.items():
+        assert len({find(i) for i in ids}) == 1, k
+    # linear star volume: the 30-member hot bucket holds far fewer than
+    # its 435 pairs
+    hot = set(stored[1])
+    assert len({e for e in edges if e[0] in hot}) < 2 * len(hot)

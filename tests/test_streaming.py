@@ -312,6 +312,63 @@ def test_stream_near_dup_prefix_closure(spark, tmp_path):
     assert cat2.read("stream_docs").count() == pages.count()
 
 
+def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
+    """A crash between the sigs and docs appends of the SECOND trigger — the
+    first one that probes a non-empty store — leaves the batch's ids in
+    ``stream_sigs`` but not ``stream_docs``. The restarted stream re-runs
+    that batch under the guard, drops those ids from the probe's store
+    side and heals the tables: pairs equal the batch pass over the union,
+    no (x, x) row, one ``stream_sigs`` row per id."""
+    from pyspark.sql import functions as F
+
+    from lash_spark.pipeline import cross_dataset_pairs
+    from lash_spark.streaming import stream_near_dup
+
+    pages = generate_pages(spark, 150, seed=42, partitions=2)
+    src = str(tmp_path / "src")
+    for i in range(3):  # split by url, so near-dup families span drops
+        pages.filter(F.abs(F.hash("url")) % 3 == i).coalesce(1).write.parquet(f"{src}/d{i}")
+    params = SketchParams()
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    orig_append = cat.append
+    docs_appends = {"n": 0}
+
+    def flaky_append(df, table):
+        if table == "stream_docs":
+            docs_appends["n"] += 1
+            if docs_appends["n"] == 2:
+                raise RuntimeError("injected crash between sigs and docs appends")
+        return orig_append(df, table)
+
+    cat.append = flaky_append
+
+    def run():
+        q = stream_near_dup(
+            read_pages_stream(spark, f"{src}/*", pages.schema, 1), cat, params,
+            checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+        )
+        q.awaitTermination(300)
+
+    with pytest.raises(Exception):
+        run()  # dies in trigger 1: its pairs and sigs are in, its docs not
+    assert cat.read("stream_sigs").count() > cat.read("stream_docs").count()
+    run()  # same checkpoint: trigger 1 re-runs under the guard, then trigger 2
+
+    got = cat.read("stream_dup_pairs")
+    got_set = {(r.url_a, r.url_b, round(r.jaccard, 9)) for r in got.collect()}
+    want = {
+        (r.url_a, r.url_b, round(r.jaccard, 9))
+        for r in cross_dataset_pairs(pages, pages, params, same_files=True).collect()
+    }
+    assert got_set == want and len(got_set) > 0
+    assert got.count() == len(got_set)
+    assert got.filter(F.col("url_a") == F.col("url_b")).isEmpty()
+    sig_ids = cat.read("stream_sigs").groupBy("url").count()
+    assert sig_ids.count() == pages.count()
+    assert sig_ids.filter("count > 1").isEmpty()
+    assert cat.read("stream_docs").count() == pages.count()
+
+
 def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
     """The ``stream_signatures_batch_*`` and ``stream_near_dup_batch_*``
     metrics rows carry the measured wall time of their batch, not 0: more
@@ -371,3 +428,53 @@ def test_no_catalog_table_stores_shingle_sets(spark, tmp_path):
         assert files
         with_sets = [f for f in files if "shingles" in pq.read_schema(f).names]
         assert not with_sets, with_sets
+
+
+def _jobs_submitted_in(spark, start_ms: float, end_ms: float) -> int:
+    """Spark jobs submitted inside [start_ms, end_ms], read from the JVM
+    status store once the listener bus has drained. Stream triggers run
+    their jobs on the stream thread, outside any job group, so a trigger's
+    jobs are the ones inside its progress window."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    n = 0
+    for i in range(jobs.size()):
+        sub = jobs.apply(i).submissionTime()
+        n += sub.isDefined() and start_ms <= sub.get().getTime() <= end_ms
+    return n
+
+
+def test_probing_trigger_pinned_job_count(spark, tmp_path):
+    """A trigger that probes a non-empty store runs a pinned number of
+    Spark jobs (counting AQE's per-query-stage jobs): one candidate pass
+    and one verify over the side-tagged batch ∪ store frame. A new gate,
+    eager checkpoint or second probe shows here as a higher count."""
+    from datetime import datetime, timezone
+
+    from lash_spark.streaming import stream_near_dup
+
+    pages = generate_pages(spark, 120, seed=11, partitions=2)
+    src = str(tmp_path / "src")
+    pages.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
+    pages.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    q = stream_near_dup(
+        read_pages_stream(spark, f"{src}/*", pages.schema, 1), cat, SketchParams(),
+        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
+    )
+    q.awaitTermination(300)
+    triggers = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(triggers) == 2
+    probe = triggers[1]
+    start_ms = (
+        datetime.strptime(probe["timestamp"], "%Y-%m-%dT%H:%M:%S.%fZ")
+        .replace(tzinfo=timezone.utc)
+        .timestamp()
+        * 1000.0
+    )
+    end_ms = start_ms + probe["durationMs"]["triggerExecution"]
+    n_jobs = _jobs_submitted_in(spark, start_ms, end_ms)
+    # the probe found cross-drop pairs, so it is a real probing trigger
+    assert cat.read("stream_dup_pairs").filter("batch_id = 1").count() > 0
+    assert n_jobs == 27, n_jobs
