@@ -697,8 +697,8 @@ def run_streambench(n_per_drop: int = 20_000, drops: int = 5):
     one trigger_once micro-batch against the SAME checkpoint, so trigger i
     ingests exactly drop i while the persisted store holds i*n_per_drop
     docs. Done-criterion: per-trigger wall stays flat (O(batch)) while the
-    store grows ``drops``x — the protocol probes the persisted
-    ``stream_sigs`` band table instead of re-sketching history. Planted
+    store grows ``drops``x — the protocol probes the bands persisted in
+    the ``stream_docs`` store instead of re-sketching history. Planted
     clusters scatter across drops (hash split) so cross-batch pairs are a
     real part of every trigger's work. Writes BENCH/STREAMBENCH.json."""
     import glob as _glob
@@ -757,7 +757,7 @@ def run_streambench(n_per_drop: int = 20_000, drops: int = 5):
             "drop": d,
             "wall_sec": wall,
             "store_docs_before": d * n_per_drop,
-            "store_sigs_after": cat.read("stream_sigs").count(),
+            "store_sigs_after": cat.read("stream_docs").count(),
             "pairs_total": cat.read("stream_dup_pairs").count()
             if cat.exists("stream_dup_pairs")
             else 0,

@@ -17,9 +17,9 @@ ALGORITHMS = ("minhash", "hll", "ull", "hmh", "simhash")
 # change invalidates existing signature tables / resume markers instead of
 # silently mixing incompatible rows in one table. 2: int32 minhash
 # registers (was array<long>). 3: no per-document `shingles` column in the
-# `signatures` / `stream_sigs` tables — shingle sets live in memory within
-# one call or trigger, so a format-2 table (sets persisted) is rebuilt
-# rather than resumed with set-less rows.
+# `signatures` table or the stream store — shingle sets live in memory
+# within one call or trigger, so a format-2 table (sets persisted) is
+# rebuilt rather than resumed with set-less rows.
 SIGNATURE_FORMAT = 3
 # Reference numbering (main.rs:415-423): 0 = binomial, 1 = poisson
 # (reference default). 2 is kept as a legacy alias of binomial so existing

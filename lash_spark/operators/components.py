@@ -16,6 +16,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Canonical edges at/under which connected_components runs a driver-local
+# union-find.
+_LOCAL_EDGE_CAP = 2_000_000
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """(src,dst) -> undirected canonical (src>dst), self-loops dropped."""
@@ -120,8 +124,8 @@ def connected_components(
     """Edge list -> (node, component) labels. Nodes appearing in no edge are
     absent (caller left-joins and coalesces to self — see assign_clusters).
 
-    Edge sets at or under ``lash.cc.localEdgeCap`` canonical edges
-    (default 2M ~ tens of MB; 0 disables) route to a driver-local
+    Edge sets at or under ``_LOCAL_EDGE_CAP`` canonical edges (2M ~ tens
+    of MB; 0 disables) route to a driver-local
     union-find instead of the distributed star rounds: each round is 2
     exchanges + 1 action of mostly near-empty tasks, so below the cap the
     scheduler overhead dominates the actual work by orders of magnitude
@@ -143,8 +147,7 @@ def connected_components(
     # lazy checkpoints: the per-iteration checksum action materializes them,
     # so each round costs ONE job while lineage still truncates
     e = e.localCheckpoint(eager=False)
-    cap = int(edges.sparkSession.conf.get("lash.cc.localEdgeCap", str(2_000_000)))
-    if cap:
+    if _LOCAL_EDGE_CAP:
         # gate AND fetch in one bounded action: limit(cap+1).toPandas() is a
         # CollectLimit (incremental take — on an over-cap graph it stops
         # after a few partitions instead of scanning everything), so the
@@ -152,8 +155,8 @@ def connected_components(
         # shape paid a checksum job plus a separate full toPandas pass. At
         # or under the cap the limit returns the complete edge set, so the
         # labels are identical by construction.
-        head = e.limit(cap + 1).toPandas()
-        if len(head) <= cap:
+        head = e.limit(_LOCAL_EDGE_CAP + 1).toPandas()
+        if len(head) <= _LOCAL_EDGE_CAP:
             return _driver_components(e, pdf_e=head)
     prev = _checksum(e)
     for it in range(max_iterations):

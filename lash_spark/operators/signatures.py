@@ -47,8 +47,9 @@ SIGNATURE_SCHEMA = T.StructType(
 # column: ~8 bytes per unique shingle ≈ the normalized text size again, so
 # no catalog table stores it; only a caller that holds its whole signature
 # frame in memory for one call asks for it (e.g. the `__spark_entry__`
-# near-dup query). stream_near_dup does not: its verify shingles every
-# candidate member, batch and stored alike, from text.
+# near-dup query). stream_near_dup does not: its store rows carry the raw
+# text, and its verify shingles every candidate member, batch and stored
+# alike, from it.
 SIGNATURE_SHINGLES_SCHEMA = T.StructType(
     SIGNATURE_SCHEMA.fields + [T.StructField("shingles", T.ArrayType(T.LongType()), False)]
 )

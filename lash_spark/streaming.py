@@ -5,10 +5,18 @@ batch rayon in the code — SURVEY.md §2.8); the engine's incremental story
 is idempotent batch stages + resume. This module is the documented
 extension for continuous ingest: a `readStream` source of new pages feeds
 `foreachBatch`, and every micro-batch runs the SAME batch stage functions
-(normalize → signatures → append), so streaming and batch share one code
-path and one signatures table. Candidate/verify/cluster stages then run as
-periodic batch jobs over the growing table (the standard lambda-less
-web-crawl layout).
+as the batch pipeline, so streaming and batch share one code path. Two
+layouts:
+
+- ``stream_signatures``: normalize → signatures → append to the batch
+  ``signatures`` table; candidate/verify/cluster stages then run as
+  periodic batch jobs over the growing table (the standard lambda-less
+  web-crawl layout).
+- ``stream_near_dup``: each trigger sketches its batch once, probes it
+  against itself and the store table ``stream_docs`` (one row per
+  document: id, text and sketch columns) in one candidate pass and one
+  verify, then appends its pairs to ``stream_dup_pairs`` and its store
+  rows to ``stream_docs``.
 """
 
 from __future__ import annotations
@@ -168,10 +176,10 @@ def stream_near_dup(
     the batch is normalized and sketched ONCE (O(batch) signature-UDF
     work) and emits, in ONE side-tagged probe, (a) batch-internal near-dup
     pairs and (b) pairs between the batch and ALL previously ingested
-    documents, read from the PERSISTED store signature table
-    (``stream_sigs``) — history is never re-sketched (VERDICT r3 #1).
-    The batch's docs and signatures then append to ``stream_docs`` /
-    ``stream_sigs``; pairs accumulate in ``stream_dup_pairs`` as
+    documents, read from the store table ``stream_docs`` — one row per
+    document: (id, text, minhash, simhash, bands, n_windows). History is
+    never re-sketched (VERDICT r3 #1). The batch's store rows then append
+    to ``stream_docs``; pairs accumulate in ``stream_dup_pairs`` as
     canonical (id_a < id_b, jaccard, batch_id).
 
     Prefix-closure property (tested): streaming over batches B1..Bn yields
@@ -182,41 +190,39 @@ def stream_near_dup(
     Ingest semantics: FIRST ingest wins per id — every batch is
     anti-joined against the store's ids, so recrawled ids are dropped
     consistently (recrawl replacement policy belongs upstream in
-    url_dedup_latest) and degenerate (x, x) self-pairs cannot occur.
+    url_dedup_latest) and degenerate (x, x) self-pairs cannot occur. Rows
+    whose normalized text is empty or null are stored too (``n_windows``
+    0, so they join no LSH bucket) and win their id like any other.
 
-    Replay safety: a three-step append protocol (pairs, then sigs, then
-    docs) plus the pessimistic guard of stream_signatures. On a guarded
+    Replay safety: a two-step append protocol (pairs, then store rows)
+    plus the pessimistic guard of stream_signatures. On a guarded
     (post-failure/restart) invocation the recomputed pairs are anti-joined
-    vs ``stream_dup_pairs`` and the recomputed sigs vs ``stream_sigs``,
-    so a crash between any two appends re-runs the batch without
-    duplicating rows; a crash after a sigs append but before the docs
-    append leaves ids in ``stream_sigs`` that ``stream_docs`` lacks —
-    exactly the re-run batch's ids — so the guarded run drops them from
-    the probe side (no (x, x) self-pairs) and heals the divergence by
-    re-appending. A crash after all three no-ops (the batch's ids are in
+    vs ``stream_dup_pairs``, so a crash between the two appends re-runs
+    the batch — its ids are not in the store yet, so the probe sees the
+    pre-crash store — and lands its store rows without duplicating pairs.
+    A crash after both appends re-runs as a no-op (the batch's ids are in
     the store, so the unconditional id anti-join empties it).
 
-    Shingle sets never reach the catalog: ``stream_sigs`` stores the
-    sketch columns only, and the trigger's one verify shingles every
+    Shingle sets never reach the catalog: the store holds the sketch
+    columns and the raw text, and the trigger's one verify shingles every
     candidate member — batch and stored alike — from its text in a single
-    Arrow stage (batch text from the trigger, stored text from
-    ``stream_docs``).
+    Arrow stage.
 
     Per-batch cost at scale: one signature pass over the BATCH, then one
     probe over the batch band keys (tagged new) ∪ the stored band keys: one
     bucket census, buckets without a new member dropped right after it,
     one skew-tiered candidate join that puts only new rows on its left side
     (scales with batch × matching-band volume; no stored × stored pair is
-    enumerated), and one verify over (batch ∪ store) signatures and text
-    that shingles only the candidate members. ``stream_docs`` is read once
-    per trigger for the id anti-join and the probe's text side; the only
-    other store-side work is the columnar scan of ``stream_sigs`` — no
-    Python runs over the rest of history. A probing trigger pays one
-    census gate, one eager candidate checkpoint and one verify stats
-    action."""
+    enumerated), and one verify over batch ∪ store that shingles only the
+    candidate members. The store is read once per trigger, as columnar
+    scans of the columns each step needs (ids for the anti-join, bands for
+    the probe, minhash and text for verify) — no Python runs over the rest
+    of history. A probing trigger pays one census gate, one eager
+    candidate checkpoint, one verify stats action and one store append."""
     from pyspark.sql import functions as F
 
     from lash_spark.operators.lsh import lsh_candidate_pairs
+    from lash_spark.operators.normalize import normalize_text
     from lash_spark.operators.verify import verify_pairs
 
     params = params or SketchParams()
@@ -224,102 +230,84 @@ def stream_near_dup(
     a, b = f"{id_col}_a", f"{id_col}_b"
     guard = {"pending": True}
 
-    # F6 strict-compatibility semantics for the persisted signature store:
-    # the batch paths cross-validate params before any pair phase
-    # (validate_compatible), and the pre-incremental stream design
-    # re-sketched history every batch so it was immune by construction.
-    # The incremental design probes STORED band keys, so restarting the
-    # stream with different SketchParams or a different LSH plan (bands ×
-    # rows changes with threshold) would silently equi-join incompatible
-    # band layouts — pairs missing or bogus. The store is therefore
-    # stamped with (params_hash, bands x rows) on write, validated at
-    # every batch entry, and rebuilt from stream_docs on mismatch. The
-    # params_hash carries SIGNATURE_FORMAT, so a store written under an
-    # older column layout is rebuilt the same way.
-    sig_props = {
+    # F6 strict-compatibility semantics for the store: the batch paths
+    # cross-validate params before any pair phase (validate_compatible);
+    # the stream probes STORED band keys, so restarting it with different
+    # SketchParams or a different LSH plan (bands × rows changes with
+    # threshold) would silently equi-join incompatible band layouts —
+    # pairs missing or bogus. The store is therefore stamped with
+    # (params_hash, bands x rows) when first written, checked at every
+    # batch entry, and re-sketched in place from its own text when they
+    # are missing or differ. The params_hash carries SIGNATURE_FORMAT, so
+    # a store written under an older column layout is rebuilt the same
+    # way, as is the unstamped ``stream_docs`` (id, text) of the older
+    # two-table layout, whose ``stream_sigs`` table the rebuild drops.
+    store_props = {
         "params_hash": params.params_hash(),
         "params": params.to_json(),
         "lsh_plan": f"{plan.bands}x{plan.rows}",
     }
+
+    def normed(df: DataFrame) -> DataFrame:
+        # WITHOUT the min-length filter: empty or null text sketches to
+        # n_windows = 0, which keeps the row out of every LSH bucket but in
+        # the store
+        return df.withColumn(
+            "norm_text", normalize_text(text_col, params.normalize_version)
+        )
+
+    def sketch(docs: DataFrame) -> DataFrame:
+        # (id, text) -> store rows (id, text, minhash, simhash, bands, n_windows)
+        return build_signatures(
+            normed(docs), params, plan, id_col=id_col, min_parallelism=1,
+            carry_cols=[text_col],
+        )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
         need_guard = guard["pending"]
         guard["pending"] = True  # stays set if anything below raises
         batch = batch_df.select(id_col, text_col)
-        # one read of the stored docs serves the id anti-join and the
-        # probe's text side
-        store_docs = (
-            catalog.read("stream_docs").select(id_col, text_col)
-            if catalog.exists("stream_docs")
-            else None
-        )
-        if catalog.exists("stream_sigs"):
-            stored = catalog.properties("stream_sigs")
-            if (stored.get("params_hash"), stored.get("lsh_plan")) != (
-                sig_props["params_hash"],
-                sig_props["lsh_plan"],
-            ):
-                # incompatible store: drop — the backfill below rebuilds
-                # every stored document's signature under this run's config
-                catalog.drop("stream_sigs")
-        catalog.set_properties("stream_sigs", sig_props)
-        if store_docs is not None:
+        store = None
+        if catalog.exists("stream_docs"):
+            stored = catalog.properties("stream_docs")
+            if any(stored.get(k) != store_props[k] for k in ("params_hash", "lsh_plan")):
+                catalog.replace(
+                    sketch(catalog.read("stream_docs").select(id_col, text_col)),
+                    "stream_docs",
+                )
+                catalog.drop("stream_sigs")  # the two-table layout's leftover
+                catalog.set_properties("stream_docs", store_props)
+            store = catalog.read("stream_docs")
             # EVERY batch (not just guarded ones) drops ids already in the
             # store: first ingest wins. This makes recrawled ids behave
             # identically with or without a crash in the history, keeps
             # the store one-row-per-id, and makes batch-vs-store
             # self-pairs (x, x) impossible. (Recrawl REPLACEMENT policy
             # belongs upstream — url_dedup_latest — not in the stream.)
-            batch = batch.join(store_docs.select(id_col), id_col, "left_anti")
-        batch = batch.localCheckpoint()  # consumed by the probe + append
+            batch = batch.join(store.select(id_col), id_col, "left_anti")
+        else:
+            catalog.set_properties("stream_docs", store_props)
+        batch = batch.localCheckpoint()  # consumed by the signature pass
         if batch.isEmpty():
             guard["pending"] = False
             return
-        if store_docs is not None:
-            store_normed = with_normalized_text(
-                store_docs, text_col, version=params.normalize_version
-            )
-            if not catalog.exists("stream_sigs"):
-                # store predates the incremental layout (or its sig table
-                # was lost): one-time backfill from the stored docs, after
-                # which every batch appends only its own signatures
-                catalog.write(
-                    build_signatures(store_normed, params, plan, id_col=id_col),
-                    "stream_sigs",
-                )
-        normed = with_normalized_text(batch, text_col, version=params.normalize_version)
-        sigs = build_signatures(
-            normed, params, plan, id_col=id_col, min_parallelism=1
-        ).persist()  # feeds the probe, the verify side table and the append
+        # feeds the probe, the verify side table and the append
+        sigs = sketch(batch).persist()
         try:
             # ONE side-tagged probe: the batch (new) against itself and the
             # store (not new) — one census, one candidate join, one verify
-            probe_sigs = sigs.withColumn(_NEW, F.lit(True))
-            probe_docs = normed
-            if store_docs is not None:
-                store_sigs = catalog.read("stream_sigs")
-                if need_guard:
-                    # heal sig/doc divergence: a crash between the sigs and
-                    # docs appends left the crashed batch's ids in
-                    # stream_sigs but not stream_docs; those ids are exactly
-                    # (a subset of) this re-run batch, so dropping them from
-                    # the probe side prevents (x, x) self-pairs and restores
-                    # the pre-crash store view
-                    store_sigs = store_sigs.join(
-                        batch.select(id_col), id_col, "left_anti"
-                    )
-                probe_sigs = probe_sigs.unionByName(
-                    store_sigs.withColumn(_NEW, F.lit(False))
-                )
-                probe_docs = probe_docs.unionByName(store_normed)
+            probe = sigs.withColumn(_NEW, F.lit(True))
+            if store is not None:
+                probe = probe.unionByName(store.withColumn(_NEW, F.lit(False)))
+            probe = normed(probe)
             pairs = verify_pairs(
-                lsh_candidate_pairs(probe_sigs, id_col=id_col, new_col=_NEW),
-                probe_docs,
+                lsh_candidate_pairs(probe, id_col=id_col, new_col=_NEW),
+                probe,
                 params,
                 id_col=id_col,
                 threshold=threshold,
-                sig_df=probe_sigs,
+                sig_df=probe,
                 with_distances=False,
             ).select(a, b, "jaccard")
             pairs = pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
@@ -328,13 +316,7 @@ def stream_near_dup(
                     catalog.read("stream_dup_pairs").select(a, b), [a, b], "left_anti"
                 )
             catalog.append(pairs, "stream_dup_pairs")
-            sigs_out = sigs
-            if need_guard and catalog.exists("stream_sigs"):
-                sigs_out = sigs_out.join(
-                    catalog.read("stream_sigs").select(id_col), id_col, "left_anti"
-                )
-            catalog.append(sigs_out, "stream_sigs")
-            catalog.append(batch, "stream_docs")
+            catalog.append(sigs, "stream_docs")
         finally:
             # release the per-batch signature cache (without this every
             # micro-batch pins a cache entry for the stream's lifetime)

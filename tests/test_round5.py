@@ -1,8 +1,8 @@
 """Round-5 additions: the signature-stage sorted-unique shingle column
 (identical to verify's own shingling, so verify can read it where a frame
-carries it), the lakeio empty-output / wave-toggle resume fixes (ADVICE
-r4), and the stream_sigs params/plan/format compatibility guard (ADVICE r4
-medium).
+carries it) and the lakeio empty-output / wave-toggle resume fixes (ADVICE
+r4). The stream store's params/plan/format compatibility guard (ADVICE r4
+medium) is tested in test_streaming.py.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from lash_spark.config import LshPlan, PipelineConfig, SketchParams
+from lash_spark.config import PipelineConfig, SketchParams
 from lash_spark.lakeio import ParquetCatalog, run_partitioned_stage, run_stage
 from lash_spark.operators.normalize import with_normalized_text
 from lash_spark.operators.signatures import build_signatures
@@ -150,141 +150,6 @@ def test_wave_toggle_does_not_corrupt_table(spark, tmp_path):
     back = cat.read("cands")
     assert back.count() == 8 and set(back.columns) == {"val", "_wave"}
     assert back.select("_wave").distinct().count() == 2
-
-
-# --------------------------- stream_sigs compatibility guard (ADVICE r4 med)
-
-
-def _run_drop(spark, cat, src_glob, params, ckpt, threshold=0.8):
-    from lash_spark.streaming import stream_near_dup
-
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string, planted_cluster long, planted_kind string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_glob)
-    )
-    q = stream_near_dup(
-        stream, cat, params, checkpoint_dir=ckpt, trigger_once=True,
-        threshold=threshold,
-    )
-    q.awaitTermination(300)
-
-
-def test_stream_sigs_params_mismatch_rebuilds_store(spark, tmp_path):
-    """Restarting the stream with different SketchParams (different
-    params_hash => different band semantics) must rebuild the persisted
-    stream_sigs under the new config instead of silently equi-joining
-    incompatible band layouts; cross-batch pairs must still close over the
-    union exactly as a batch run under the NEW params."""
-    from lash_spark.pipeline import cross_dataset_pairs
-
-    pages = generate_pages(spark, 160, seed=42, partitions=2)
-    src = str(tmp_path / "src")
-    d0 = pages.filter("planted_cluster % 2 = 0")
-    d1 = pages.filter("planted_cluster % 2 = 1")
-    d0.coalesce(1).write.parquet(f"{src}/d0")
-
-    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-    p_v1 = SketchParams(shingle_k=16)
-    _run_drop(spark, cat, f"{src}/*", p_v1, str(tmp_path / "ck1"))
-    assert cat.properties("stream_sigs").get("params_hash") == p_v1.params_hash()
-
-    # restart the stream over the same source with INCOMPATIBLE params
-    # (different shingle_k): fresh checkpoint so the first drop replays,
-    # second drop arrives new
-    d1.coalesce(1).write.parquet(f"{src}/d1")
-    p_v2 = SketchParams(shingle_k=12)
-    _run_drop(spark, cat, f"{src}/*", p_v2, str(tmp_path / "ck2"))
-
-    props = cat.properties("stream_sigs")
-    assert props.get("params_hash") == p_v2.params_hash()
-    # the store's signatures are all v2 now: identical to a batch build
-    got = cat.read("stream_sigs")
-    want = build_signatures(
-        with_normalized_text(cat.read("stream_docs").select("url", "text"), "text"),
-        p_v2,
-        LshPlan.plan(p_v2.num_perm, 0.8, 0.995),
-    )
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
-    # and the accumulated pairs close over the union under v2 for the
-    # post-restart batch (cross pairs between d1 and the d0 store went
-    # through rebuilt v2 signatures — not a band-layout cross-join)
-    stream_pairs = cat.read("stream_dup_pairs").filter("batch_id >= 0")
-    union_pairs = cross_dataset_pairs(d1, d0, p_v2)
-    cross_want = union_pairs.select(
-        F.least("url_q", "url_r").alias("url_a"),
-        F.greatest("url_q", "url_r").alias("url_b"),
-    )
-    missing = cross_want.exceptAll(stream_pairs.select("url_a", "url_b"))
-    assert missing.isEmpty(), "cross-batch pairs lost after params change"
-
-
-def test_stream_sigs_layout_mismatch_rebuilds_store(spark, tmp_path, monkeypatch):
-    """A ``stream_sigs`` store written under SIGNATURE_FORMAT 2 (shingle
-    sets persisted next to the sketches, format-2 params_hash) fails the
-    params_hash check on the next run: it is dropped and backfilled
-    set-less from ``stream_docs``, not appended to with set-less rows."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    import lash_spark.config as config_mod
-    from lash_spark.pipeline import cross_dataset_pairs
-    from lash_spark.streaming import stream_near_dup
-
-    pages = generate_pages(spark, 120, seed=5, partitions=2)
-    src = str(tmp_path / "src")
-    pages.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
-    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-    params = SketchParams()
-    plan = LshPlan.plan(params.num_perm, 0.8, 0.995)
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(pages.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        q = stream_near_dup(
-            stream, cat, params, checkpoint_dir=str(tmp_path / ckpt), trigger_once=True
-        )
-        q.awaitTermination(300)
-
-    def store_normed():
-        return with_normalized_text(cat.read("stream_docs").select("url", "text"), "text")
-
-    with monkeypatch.context() as m:
-        m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
-        run("ck1")
-        old_hash = params.params_hash()
-        # the format-2 store layout: every row carries its shingle set
-        cat.write(
-            build_signatures(store_normed(), params, plan, with_shingles=True),
-            "stream_sigs",
-        )
-    assert cat.properties("stream_sigs")["params_hash"] == old_hash
-    assert old_hash != params.params_hash()
-
-    pages.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
-    run("ck2")  # fresh checkpoint: d0 replays (no-op), d1 ingests
-    files = list(Path(cat.path("stream_sigs")).rglob("*.parquet"))
-    assert files and all("shingles" not in pq.read_schema(f).names for f in files)
-    assert cat.properties("stream_sigs")["params_hash"] == params.params_hash()
-    got = cat.read("stream_sigs")
-    want = build_signatures(store_normed(), params, plan)
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-    assert got.count() == pages.count()
-    stream_pairs = {
-        (r.url_a, r.url_b, round(r.jaccard, 9))
-        for r in cat.read("stream_dup_pairs").collect()
-    }
-    batch_pairs = {
-        (r.url_a, r.url_b, round(r.jaccard, 9))
-        for r in cross_dataset_pairs(pages, pages, params, same_files=True).collect()
-    }
-    assert stream_pairs == batch_pairs and len(batch_pairs) > 0
 
 
 # ------------------- census-driven star budget (VERDICT r4 #5) + LCS witness

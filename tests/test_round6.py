@@ -195,13 +195,14 @@ def test_partitioned_stage_empty_resume_skips_builder(spark, tmp_path):
     assert [f.name for f in df2.schema.fields] == ["x", "_wave"]
 
 
-def test_cc_local_and_distributed_paths_agree(spark):
-    """connected_components routes edge sets <= lash.cc.localEdgeCap to a
+def test_cc_local_and_distributed_paths_agree(spark, monkeypatch):
+    """connected_components routes edge sets <= _LOCAL_EDGE_CAP to a
     driver-local union-find; labels must be identical to the distributed
     star rounds (component = min node id) on random graphs, and the
     distributed path must stay exercised (cap=0 disables the local route)."""
     import random
 
+    import lash_spark.operators.components as components_mod
     from lash_spark.operators.components import connected_components
 
     rnd = random.Random(7)
@@ -214,14 +215,12 @@ def test_cc_local_and_distributed_paths_agree(spark):
             (r["node"], r["component"])
             for r in connected_components(e, "src", "dst").collect()
         }
-        spark.conf.set("lash.cc.localEdgeCap", "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(components_mod, "_LOCAL_EDGE_CAP", 0)
             dist = {
                 (r["node"], r["component"])
                 for r in connected_components(e, "src", "dst").collect()
             }
-        finally:
-            spark.conf.unset("lash.cc.localEdgeCap")
         assert local == dist and local
 
 

@@ -12,6 +12,43 @@ from lash_spark.operators.signatures import build_signatures
 from lash_spark.streaming import read_pages_stream, stream_signatures
 from lash_spark.synth import generate_pages
 
+SKETCH_COLS = ["url", "minhash", "simhash", "bands", "n_windows"]
+
+
+def _run_near_dup(spark, cat, glob, schema, params, ckpt):
+    """One availableNow ``stream_near_dup`` run, one source file per trigger."""
+    from lash_spark.streaming import stream_near_dup
+
+    q = stream_near_dup(
+        read_pages_stream(spark, glob, schema, 1), cat, params,
+        checkpoint_dir=str(ckpt), trigger_once=True,
+    )
+    q.awaitTermination(300)
+    return q
+
+
+def _pair_set(df) -> set:
+    return {(r.url_a, r.url_b, round(r.jaccard, 9)) for r in df.collect()}
+
+
+def _batch_pairs(docs, params) -> set:
+    """The batch triangular pass over ``docs`` — what the stream must emit."""
+    from lash_spark.pipeline import cross_dataset_pairs
+
+    return _pair_set(cross_dataset_pairs(docs, docs, params, same_files=True))
+
+
+def _batch_sketches(docs, params):
+    return build_signatures(
+        with_normalized_text(docs.select("url", "text"), "text", version=params.normalize_version),
+        params,
+        LshPlan.plan(params.num_perm, 0.8, 0.995),
+    )
+
+
+def _assert_same_rows(got, want):
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
 
 def test_stream_signatures_matches_batch(spark, tmp_path):
     pages = generate_pages(spark, 200, seed=42, partitions=4)
@@ -125,8 +162,8 @@ def test_stream_signatures_honors_normalize_version(spark, tmp_path):
 def test_stream_near_dup_incremental_signature_work(spark, tmp_path, monkeypatch):
     """VERDICT r3 #1 done-criterion: per-batch signature-UDF input rows
     are O(batch) while the store grows across >= 3 drops — the cross
-    probe reads the persisted ``stream_sigs`` table instead of
-    re-sketching the accumulated store every micro-batch."""
+    probe reads the sketches persisted in the ``stream_docs`` store instead
+    of re-sketching the accumulated store every micro-batch."""
     from pyspark.sql import functions as F
 
     import lash_spark.streaming as streaming_mod
@@ -168,17 +205,11 @@ def test_stream_near_dup_incremental_signature_work(spark, tmp_path, monkeypatch
     assert sum(calls) == pages.count()
     assert cat.read("stream_docs").count() == pages.count()
 
-    # the persisted signature table matches a batch build over the union:
-    # sketch columns only, the shingle sets stayed within their trigger
-    got = cat.read("stream_sigs")
-    want = build_signatures(
-        with_normalized_text(pages, "text"),
-        params,
-        LshPlan.plan(128, 0.8, 0.995),
-    )
-    assert "shingles" not in got.columns
-    assert got.count() == pages.count()
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    # the store's sketch columns match a batch build over the union; the
+    # shingle sets stayed within their trigger
+    got = cat.read("stream_docs")
+    assert set(got.columns) == {"text", *SKETCH_COLS}
+    _assert_same_rows(got.select(*SKETCH_COLS), _batch_sketches(pages, params))
 
     # and pairs still close over the union (smoke; full closure test below)
     assert cat.read("stream_dup_pairs").select(
@@ -186,49 +217,163 @@ def test_stream_near_dup_incremental_signature_work(spark, tmp_path, monkeypatch
     ).distinct().count() == cat.read("stream_dup_pairs").count()
 
 
-def test_stream_near_dup_sig_table_backfill(spark, tmp_path):
-    """A store created without ``stream_sigs`` (round-3 layout, or a lost
-    signature table) is backfilled ONCE from the stored docs, then probed
-    incrementally — cross-batch pairs still close over the union."""
-    import shutil
-
-    from lash_spark.pipeline import cross_dataset_pairs
-    from lash_spark.streaming import stream_near_dup
+def test_stream_near_dup_upgrades_two_table_store(spark, tmp_path):
+    """A store in the older two-table layout — ``stream_docs`` (id, text)
+    without properties plus a ``stream_sigs`` sketch table — is re-sketched
+    in place from its own text on the next trigger: ``stream_sigs`` is
+    gone, the store's sketch columns equal a batch build, and the pairs
+    close over the union."""
+    from pyspark.sql import functions as F
 
     pages = generate_pages(spark, 120, seed=42, partitions=2)
     src = str(tmp_path / "src")
-    pages.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
-    pages.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
+    half = F.abs(F.hash("url")) % 2  # near-dup families span both drops
+    pages.filter(half == 0).coalesce(1).write.parquet(f"{src}/d0")
     params = SketchParams()
     cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, params, tmp_path / "ckpt0")
 
-    def run(glob: str, ckpt: str):
-        stream = (
-            spark.readStream.schema(pages.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(glob)
+    # forge the two-table layout of the d0 store: docs table without
+    # properties, sketches (stamped) in their own table
+    cat.replace(cat.read("stream_docs").select("url", "text"), "stream_docs")
+    (cat.root / "stream_docs.properties.json").unlink()
+    cat.write(_batch_sketches(cat.read("stream_docs"), params), "stream_sigs")
+    cat.set_properties("stream_sigs", {"params_hash": params.params_hash()})
+
+    pages.filter(half == 1).coalesce(1).write.parquet(f"{src}/d1")
+    # fresh checkpoint: d0 replays (rebuild, then dedups to empty), d1 probes
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, params, tmp_path / "ckpt1")
+    assert not cat.exists("stream_sigs")
+    assert cat.properties("stream_docs")["params_hash"] == params.params_hash()
+    got = cat.read("stream_docs")
+    assert got.count() == pages.count()
+    _assert_same_rows(got.select(*SKETCH_COLS), _batch_sketches(pages, params))
+    want = _batch_pairs(pages, params)
+    assert _pair_set(cat.read("stream_dup_pairs")) == want and want
+
+
+def test_stream_store_params_mismatch_rebuilds_store(spark, tmp_path):
+    """Restarting the stream with different SketchParams (different
+    params_hash => different band semantics) re-sketches the store in place
+    under the new config instead of silently equi-joining incompatible
+    band layouts: its sketch columns equal a batch build under the new
+    params, and the pairs found after the restart are exactly the new
+    params' union pairs that touch the new drop."""
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, 160, seed=42, partitions=2)
+    src = str(tmp_path / "src")
+    half = F.abs(F.hash("url")) % 2  # near-dup families span both drops
+    d0, d1 = pages.filter(half == 0), pages.filter(half == 1)
+    d0.coalesce(1).write.parquet(f"{src}/d0")
+
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    p_v1 = SketchParams(shingle_k=16)
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, p_v1, tmp_path / "ck1")
+    assert cat.properties("stream_docs")["params_hash"] == p_v1.params_hash()
+    before = _pair_set(cat.read("stream_dup_pairs"))
+
+    # restart the stream over the same source with INCOMPATIBLE params
+    # (different shingle_k): fresh checkpoint so the first drop replays,
+    # second drop arrives new
+    d1.coalesce(1).write.parquet(f"{src}/d1")
+    p_v2 = SketchParams(shingle_k=12)
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, p_v2, tmp_path / "ck2")
+
+    assert cat.properties("stream_docs")["params_hash"] == p_v2.params_hash()
+    got = cat.read("stream_docs")
+    assert got.count() == pages.count()
+    _assert_same_rows(got.select(*SKETCH_COLS), _batch_sketches(pages, p_v2))
+
+    # cross pairs between d1 and the d0 store went through re-sketched v2
+    # bands — not a band-layout cross-join
+    d1_ids = {r.url for r in d1.select("url").collect()}
+    want = {p for p in _batch_pairs(pages, p_v2) if p[0] in d1_ids or p[1] in d1_ids}
+    after = _pair_set(cat.read("stream_dup_pairs")) - before
+    assert after == want and any(p[0] not in d1_ids or p[1] not in d1_ids for p in want)
+    assert cat.read("stream_dup_pairs").filter(F.col("url_a") == F.col("url_b")).isEmpty()
+
+
+def test_stream_store_layout_mismatch_rebuilds_store(spark, tmp_path, monkeypatch):
+    """A store written under SIGNATURE_FORMAT 2 (shingle sets persisted next
+    to the sketches, format-2 params_hash) fails the params_hash check on
+    the next run: it is re-sketched set-less in place from its own text,
+    not appended to with set-less rows."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    import lash_spark.config as config_mod
+
+    pages = generate_pages(spark, 120, seed=5, partitions=2)
+    src = str(tmp_path / "src")
+    half = F.abs(F.hash("url")) % 2  # near-dup families span both drops
+    pages.filter(half == 0).coalesce(1).write.parquet(f"{src}/d0")
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    params = SketchParams()
+    plan = LshPlan.plan(params.num_perm, 0.8, 0.995)
+
+    with monkeypatch.context() as m:
+        m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
+        _run_near_dup(spark, cat, f"{src}/*", pages.schema, params, tmp_path / "ck1")
+        old_hash = params.params_hash()
+        # the format-2 layout: every store row carries its shingle set
+        store = with_normalized_text(cat.read("stream_docs").select("url", "text"), "text")
+        cat.replace(
+            build_signatures(store, params, plan, with_shingles=True, carry_cols=["text"]),
+            "stream_docs",
         )
-        q = stream_near_dup(
-            stream, cat, params, checkpoint_dir=str(tmp_path / ckpt), trigger_once=True
-        )
-        q.awaitTermination(300)
+    assert cat.properties("stream_docs")["params_hash"] == old_hash
+    assert old_hash != params.params_hash()
 
-    run(f"{src}/d0", "ckpt0")
-    assert cat.exists("stream_sigs")
-    shutil.rmtree(cat.path("stream_sigs"))  # simulate the round-3 layout
+    pages.filter(half == 1).coalesce(1).write.parquet(f"{src}/d1")
+    # fresh checkpoint: d0 replays (rebuild, then a no-op), d1 ingests
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, params, tmp_path / "ck2")
+    files = list(Path(cat.path("stream_docs")).rglob("*.parquet"))
+    assert files and all("shingles" not in pq.read_schema(f).names for f in files)
+    assert cat.properties("stream_docs")["params_hash"] == params.params_hash()
+    got = cat.read("stream_docs")
+    assert got.count() == pages.count()
+    _assert_same_rows(got.select(*SKETCH_COLS), _batch_sketches(pages, params))
+    want = _batch_pairs(pages, params)
+    assert _pair_set(cat.read("stream_dup_pairs")) == want and want
 
-    run(f"{src}/*", "ckpt1")  # fresh checkpoint: d0 batch dedups to empty,
-    # d1 batch triggers the backfill then probes it
-    got = {
-        (r.url_a, r.url_b, round(r.jaccard, 9))
-        for r in cat.read("stream_dup_pairs").collect()
-    }
-    want = {
-        (r.url_a, r.url_b, round(r.jaccard, 9))
-        for r in cross_dataset_pairs(pages, pages, params, same_files=True).collect()
-    }
-    assert got == want and len(got) > 0
-    assert cat.read("stream_sigs").count() == pages.count()
+
+def test_stream_near_dup_stores_empty_and_null_text(spark, tmp_path):
+    """Rows whose text is empty or null are stored (``n_windows`` 0, no
+    bucket) and win their id: re-sent with real text in the next drop,
+    both are dropped on arrival. The catalog then holds exactly the
+    stream's store, pairs and metrics tables, one store row per id, and the
+    pairs are the batch pass over the real-text pages."""
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, 80, seed=13, partitions=2).select("url", "text")
+    half = F.abs(F.hash("url")) % 2
+    blanks = spark.createDataFrame(
+        [("u/empty", ""), ("u/null", None)], "url string, text string"
+    )
+    a_texts = [r.text for r in pages.filter(half == 0).orderBy("url").limit(2).collect()]
+    # re-sent with the text of drop-0 pages: ingested, they would pair
+    resent = spark.createDataFrame(
+        [("u/empty", a_texts[0]), ("u/null", a_texts[1])], "url string, text string"
+    )
+    src = str(tmp_path / "src")
+    pages.filter(half == 0).unionByName(blanks).coalesce(1).write.parquet(f"{src}/d0")
+    pages.filter(half == 1).unionByName(resent).coalesce(1).write.parquet(f"{src}/d1")
+    params = SketchParams()
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    q = _run_near_dup(spark, cat, f"{src}/*", pages.schema, params, tmp_path / "ckpt")
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
+
+    tables = sorted(p.name for p in cat.root.iterdir() if p.is_dir() and not p.name.startswith("_"))
+    assert tables == ["stage_metrics", "stream_docs", "stream_dup_pairs"]
+    store = cat.read("stream_docs")
+    assert store.count() == store.select("url").distinct().count() == pages.count() + 2
+    kept = {r.url: (r.text, r.n_windows) for r in store.filter("url like 'u/%'").collect()}
+    assert kept == {"u/empty": ("", 0), "u/null": (None, 0)}
+    want = _batch_pairs(pages, params)
+    assert _pair_set(cat.read("stream_dup_pairs")) == want and want
 
 
 def test_stream_near_dup_prefix_closure(spark, tmp_path):
@@ -313,12 +458,12 @@ def test_stream_near_dup_prefix_closure(spark, tmp_path):
 
 
 def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
-    """A crash between the sigs and docs appends of the SECOND trigger — the
-    first one that probes a non-empty store — leaves the batch's ids in
-    ``stream_sigs`` but not ``stream_docs``. The restarted stream re-runs
-    that batch under the guard, drops those ids from the probe's store
-    side and heals the tables: pairs equal the batch pass over the union,
-    no (x, x) row, one ``stream_sigs`` row per id."""
+    """A crash in the store append of the SECOND trigger — the first one
+    that probes a non-empty store — leaves the batch's pairs in
+    ``stream_dup_pairs`` but its rows out of ``stream_docs``. The restarted
+    stream re-runs that batch under the guard against the pre-crash store:
+    pairs equal the batch pass over the union, no duplicate and no (x, x)
+    row, one store row per id."""
     from pyspark.sql import functions as F
 
     from lash_spark.pipeline import cross_dataset_pairs
@@ -331,13 +476,13 @@ def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
     params = SketchParams()
     cat = ParquetCatalog(spark, str(tmp_path / "cat"))
     orig_append = cat.append
-    docs_appends = {"n": 0}
+    store_appends = {"n": 0}
 
     def flaky_append(df, table):
         if table == "stream_docs":
-            docs_appends["n"] += 1
-            if docs_appends["n"] == 2:
-                raise RuntimeError("injected crash between sigs and docs appends")
+            store_appends["n"] += 1
+            if store_appends["n"] == 2:
+                raise RuntimeError("injected crash between pairs and store appends")
         return orig_append(df, table)
 
     cat.append = flaky_append
@@ -350,8 +495,9 @@ def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
         q.awaitTermination(300)
 
     with pytest.raises(Exception):
-        run()  # dies in trigger 1: its pairs and sigs are in, its docs not
-    assert cat.read("stream_sigs").count() > cat.read("stream_docs").count()
+        run()  # dies in trigger 1: its pairs are in, its store rows not
+    assert cat.read("stream_dup_pairs").filter("batch_id = 1").count() > 0
+    assert cat.read("stream_docs").count() < pages.count()
     run()  # same checkpoint: trigger 1 re-runs under the guard, then trigger 2
 
     got = cat.read("stream_dup_pairs")
@@ -363,10 +509,9 @@ def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
     assert got_set == want and len(got_set) > 0
     assert got.count() == len(got_set)
     assert got.filter(F.col("url_a") == F.col("url_b")).isEmpty()
-    sig_ids = cat.read("stream_sigs").groupBy("url").count()
-    assert sig_ids.count() == pages.count()
-    assert sig_ids.filter("count > 1").isEmpty()
-    assert cat.read("stream_docs").count() == pages.count()
+    store_ids = cat.read("stream_docs").groupBy("url").count()
+    assert store_ids.count() == pages.count()
+    assert store_ids.filter("count > 1").isEmpty()
 
 
 def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
@@ -421,7 +566,7 @@ def test_no_catalog_table_stores_shingle_sets(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True,
     )
     q.awaitTermination(300)
-    assert stream_cat.read("stream_sigs").count() == pages.count()
+    assert stream_cat.read("stream_docs").count() == pages.count()
 
     for cat in (batch_cat, stream_cat):
         files = list(cat.root.rglob("*.parquet"))
@@ -448,8 +593,9 @@ def _jobs_submitted_in(spark, start_ms: float, end_ms: float) -> int:
 def test_probing_trigger_pinned_job_count(spark, tmp_path):
     """A trigger that probes a non-empty store runs a pinned number of
     Spark jobs (counting AQE's per-query-stage jobs): one candidate pass
-    and one verify over the side-tagged batch ∪ store frame. A new gate,
-    eager checkpoint or second probe shows here as a higher count."""
+    and one verify over the side-tagged batch ∪ store frame, then one store
+    append. A new gate, eager checkpoint, second probe or second store
+    write shows here as a higher count."""
     from datetime import datetime, timezone
 
     from lash_spark.streaming import stream_near_dup
@@ -477,4 +623,4 @@ def test_probing_trigger_pinned_job_count(spark, tmp_path):
     n_jobs = _jobs_submitted_in(spark, start_ms, end_ms)
     # the probe found cross-drop pairs, so it is a real probing trigger
     assert cat.read("stream_dup_pairs").filter("batch_id = 1").count() > 0
-    assert n_jobs == 27, n_jobs
+    assert n_jobs == 25, n_jobs
