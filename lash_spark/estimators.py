@@ -26,11 +26,6 @@ def register_union_expr(a: Column | str, b: Column | str) -> Column:
     return F.zip_with(_c(a), _c(b), lambda x, y: F.greatest(x, y))
 
 
-def minhash_union_expr(a: Column | str, b: Column | str) -> Column:
-    """MinHash signature of A∪B = element-wise min."""
-    return F.zip_with(_c(a), _c(b), lambda x, y: F.least(x, y))
-
-
 def _ull_fields_expr(x: Column):
     """(q, d1, d0) of a packed ULL register value (sketches.ull_registers
     layout: u = (q << 2) | (d1 << 1) | d0)."""

@@ -17,18 +17,21 @@ calls:
    spark.sql.autoBroadcastJoinThreshold)``; above that the same plan
    degrades to shuffled joins.
 3. **Signature estimate.** MinHash register match fraction, filtered at
-   ``threshold - margin`` below the set intersection, so est-failing rows
-   never pay for it. An optional per-document degree cap keeps each
+   ``threshold - margin``. An optional per-document degree cap keeps each
    document's strongest-estimate neighbours.
 4. **Exact shingle Jaccard** |A∩B| / |A∪B| over the sorted-unique 64-bit
-   shingle-hash sets.
+   shingle-hash sets, kept at ``jaccard >= threshold``.
 
-Kernels: both the estimate and |A∩B| have a JVM expression and a
-vectorized Arrow kernel. The measured member-set volume picks one against
-``_ARROW_MIN_HASHES``: the Arrow kernels measured 7x on a 50k-doc verify
-(16.5M member hashes) but lose ~0.3-0.5 s per call at ~150k hashes, where
-the per-stage Python round-trip exceeds the JVM work. Both give identical
-values.
+Kernel: steps 3 and 4 are ONE scalar pandas UDF (``_verify_kernel``), one
+Arrow round-trip per verify. It computes the estimate for every joined row
+and intersects only the rows whose estimate passes ``threshold - margin``.
+It replaced a JVM pair (the ``zip_with`` fold and ``array_intersect``) and
+a two-UDF Arrow pair that a member-set volume gate chose between. On
+perfbench ``boilerplate_skew`` (6137 candidate pairs; 4-vCPU VM,
+``local[2]``) it took ``verify.s`` from 4.9 s to 1.9 s and the median
+``docs_per_s`` from 126 to 162 (seed 7, 10 alternating pairs) against the
+JVM pair that the gate picked there; the Arrow pair had measured 7x over
+the JVM pair on a 50k-doc verify.
 
 Exactness: |A∩B| / |A∪B| over 64-bit shingle hashes; collisions are the
 only deviation from string-set Jaccard (P ~ m²/2^64, negligible — the
@@ -46,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lash_spark.config import SketchParams
-from lash_spark.estimators import minhash_jaccard_expr, with_distance_columns
+from lash_spark.estimators import with_distance_columns
 from lash_spark.hashing import batch_shingle_hash_segments
 
 # A measured side table is broadcast below max(this, the session's
@@ -55,8 +58,6 @@ from lash_spark.hashing import batch_shingle_hash_segments
 # is safe (one build + per-executor residency, vs shuffling the pair table
 # twice with array payloads aboard).
 _BROADCAST_BYTES = 128 * 1024 * 1024
-# Member-set hashes at/above which verify uses the Arrow kernels.
-_ARROW_MIN_HASHES = 1_000_000
 
 
 def _encode(texts: pd.Series) -> "list[bytes]":
@@ -75,107 +76,60 @@ def make_shingle_set_udf(k: int):
     return shingle_set
 
 
-@F.pandas_udf(T.IntegerType())
-def _inter_size_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-    """|A ∩ B| for two sorted-unique shingle-hash arrays per row.
+def _verify_kernel(floor: float):
+    """The fused verify kernel: ``(minhash_a, minhash_b, shingles_a,
+    shingles_b) -> struct<est double, jaccard double>`` in one Arrow pass.
 
-    The sets are produced sorted in UNSIGNED 64-bit order (hashing.py
+    ``est`` is the MinHash register match fraction (U1), exactly
+    ``minhash_jaccard_expr``'s value: an integer match count divided by the
+    register count, NULL for a null, empty or length-mismatched sketch. It
+    vectorizes with one np.vstack per register length in the batch.
+
+    ``jaccard`` = |A∩B| / |A∪B| over the sorted-unique shingle-hash sets
+    (0.0 when the union is empty; a null set counts as empty), computed
+    only on rows with ``est >= floor`` and NULL on the others. The sets are
+    sorted in UNSIGNED 64-bit order (hashing.py
     batch_shingle_hash_segments sorts as uint64 before the int64 view), so
-    one vectorized np.searchsorted of the smaller side into the larger
-    computes the exact intersection size — the JVM ``array_intersect``
-    expression builds a hash set per ROW instead. Same integer |A∩B| over
-    the same 64-bit hash sets, byte-identical jaccard downstream."""
-    out = np.zeros(len(sa), dtype=np.int32)
-    for i in range(len(sa)):
-        x, y = sa.iat[i], sb.iat[i]
-        if x is None or y is None:
-            continue
-        x = np.asarray(x, dtype=np.int64).view(np.uint64)
-        y = np.asarray(y, dtype=np.int64).view(np.uint64)
-        if x.size == 0 or y.size == 0:
-            continue
-        if x.size > y.size:
-            x, y = y, x
-        idx = np.searchsorted(y, x)
-        idx[idx >= y.size] = y.size - 1
-        out[i] = int((y[idx] == x).sum())
-    return pd.Series(out)
+    one np.searchsorted of the smaller side into the larger gives |A∩B|."""
 
+    @F.pandas_udf("est double, jaccard double")
+    def verify_kernel(
+        ma: pd.Series, mb: pd.Series, sa: pd.Series, sb: pd.Series
+    ) -> pd.DataFrame:
+        est = np.full(len(ma), np.nan)  # NaN leaves the UDF as NULL
+        lens = np.array(
+            [
+                len(x) if x is not None and y is not None and len(x) == len(y) else 0
+                for x, y in zip(ma, mb)
+            ],
+            dtype=np.int64,
+        )
+        a, b = ma.to_numpy(), mb.to_numpy()
+        for n in np.unique(lens[lens > 0]):
+            idx = np.flatnonzero(lens == n)
+            est[idx] = (np.vstack(a[idx]) == np.vstack(b[idx])).sum(axis=1) / float(n)
+        jac = np.full(len(ma), np.nan)
+        for i in np.flatnonzero(est >= floor):
+            x, y = sa.iat[i], sb.iat[i]
+            x = np.asarray([] if x is None else x, dtype=np.int64).view(np.uint64)
+            y = np.asarray([] if y is None else y, dtype=np.int64).view(np.uint64)
+            if x.size > y.size:
+                x, y = y, x
+            idx = np.searchsorted(y, x)
+            idx[idx >= y.size] = y.size - 1
+            inter = int((y[idx] == x).sum())
+            union = x.size + y.size - inter
+            jac[i] = inter / union if union else 0.0
+        return pd.DataFrame({"est": est, "jaccard": jac})
 
-# Marked NON-DETERMINISTIC (value is deterministic): Catalyst's filter
-# pushdown checks the PROJECT's determinism, so with a deterministic
-# kernel the downstream jaccard-threshold filter was substituted below the
-# projection and every est-passing pair evaluated the kernel — and shipped
-# both shingle arrays over Arrow — TWICE (measured: two ArrowEvalPython
-# nodes). The flag blocks that push. The 3x-eval trap the flag creates
-# when one expression references the UDF three times is avoided
-# structurally: _with_jaccard references the kernel exactly ONCE in its
-# own projection and derives jaccard from the column.
-_inter_size_udf = _inter_size_udf.asNondeterministic()
-
-
-@F.pandas_udf(T.DoubleType())
-def _minhash_est_udf(ma: pd.Series, mb: pd.Series) -> pd.Series:
-    """MinHash register match fraction (U1), vectorized: one np.vstack per
-    register length in the Arrow batch and a single (A == B) row-sum. Value
-    is EXACTLY ``minhash_jaccard_expr``'s — an integer match count divided
-    by the register count — including NULL for a null, empty or
-    length-mismatched row. The interpreted zip_with+aggregate fold cost
-    2.4-2.9 s on a 50k-doc verify (318k pairs x 128 registers) where this
-    kernel, transfer included, measures 1.2-1.3 s."""
-    out = np.full(len(ma), np.nan)  # NaN leaves the UDF as NULL
-    lens = np.array(
-        [
-            len(x) if x is not None and y is not None and len(x) == len(y) else 0
-            for x, y in zip(ma, mb)
-        ],
-        dtype=np.int64,
-    )
-    a, b = ma.to_numpy(), mb.to_numpy()
-    for n in np.unique(lens[lens > 0]):
-        idx = np.flatnonzero(lens == n)
-        out[idx] = (np.vstack(a[idx]) == np.vstack(b[idx])).sum(axis=1) / float(n)
-    return pd.Series(out)
-
-
-# same non-determinism rationale as _inter_size_udf: block the est-threshold
-# filter from being substituted below the projection (double eval + double
-# minhash transfer); call sites reference the column, never the UDF twice
-_minhash_est_udf = _minhash_est_udf.asNondeterministic()
-
-
-def _est_jaccard_col(mh_a, mh_b, set_hashes: int):
-    """The est_jaccard column: the JVM fold below ``_ARROW_MIN_HASHES``
-    measured member-set hashes (tiny pair sets — the Python round-trip
-    costs more than the whole fold), the vectorized Arrow kernel at or
-    above it. The same volume picks the intersect kernel in
-    ``_with_jaccard``, so one verify call is all-JVM or all-Arrow."""
-    if set_hashes < _ARROW_MIN_HASHES:
-        return minhash_jaccard_expr(mh_a, mh_b)
-    return _minhash_est_udf(mh_a, mh_b)
-
-
-def _with_jaccard(df, sh_a, sh_b, set_hashes: int):
-    """Attach exact ``jaccard`` = |A∩B| / |A∪B| for the two shingle-set
-    columns. The intersection size lands in its own projection, referenced
-    exactly once (see the determinism note above); the jaccard expression
-    reads the COLUMN, so the optimizer can neither duplicate the kernel
-    nor push a threshold filter below it. Below ``_ARROW_MIN_HASHES`` the
-    kernel is the deterministic ``array_intersect`` expression instead —
-    there the indirection collapses and the threshold pushdown (measured
-    faster on the JVM plan) still fires."""
-    if set_hashes < _ARROW_MIN_HASHES:
-        inter = F.size(F.array_intersect(sh_a, sh_b))
-    else:
-        inter = _inter_size_udf(sh_a, sh_b)
-    df = df.withColumn("_iu", inter)
-    union = F.size(sh_a) + F.size(sh_b) - F.col("_iu")
-    return df.withColumn(
-        "jaccard",
-        F.when(
-            union > 0, F.col("_iu").cast("double") / union.cast("double")
-        ).otherwise(F.lit(0.0)),
-    ).drop("_iu")
+    # Marked NON-DETERMINISTIC (the value is deterministic): Catalyst's
+    # filter pushdown checks the PROJECT's determinism, so with a
+    # deterministic kernel the est filter would be substituted below the
+    # projection and every pair would evaluate the kernel, and ship its
+    # arrays over Arrow, twice. The flag blocks that push. _verify
+    # references the kernel exactly ONCE, in its own projection, and reads
+    # est/jaccard off that column, so the flag cannot cause a re-eval either.
+    return verify_kernel.asNondeterministic()
 
 
 def _broadcast_cap(spark) -> int:
@@ -260,7 +214,6 @@ def _verify(
             ],
         ).collect()
     }
-    set_hashes = sum(st["tot"] or 0 for st in stats.values())
     bcast_cap = _broadcast_cap(spark)
 
     def view(i, alias):
@@ -275,16 +228,27 @@ def _verify(
         return F.broadcast(v) if side_bytes < bcast_cap else v
 
     va, vb = view(0, "_va"), view(len(tables) - 1, "_vb")
+    floor = threshold - margin
+    kernel = _verify_kernel(floor)(
+        F.col("_va.minhash"), F.col("_vb.minhash"),
+        F.col("_va.shingles"), F.col("_vb.shingles"),
+    )
+    # No fan-out of the pairs before the joins: spreading the kernel stage
+    # by pair count measured no docs_per_s gain on boilerplate_skew and
+    # wrote dup_pairs as 8 files instead of 1.
     out = (
         pairs.join(va, F.col(col_a) == F.col(f"_va.{id_col}"))
         .join(vb, F.col(col_b) == F.col(f"_vb.{id_col}"))
-        .withColumn(
-            "est_jaccard",
-            _est_jaccard_col(F.col("_va.minhash"), F.col("_vb.minhash"), set_hashes),
+        # explicit projection: a self-join re-ids the right side's
+        # attributes (DeduplicateRelations), so pre-join Column handles
+        # cannot name the copies to drop
+        .select(*[F.col(c) for c in pairs.columns], kernel.alias("_k"))
+        .select(
+            *pairs.columns,
+            F.col("_k.est").alias("est_jaccard"),
+            F.col("_k.jaccard").alias("jaccard"),
         )
-        # below the jaccard projection: est-failing rows never pay the set
-        # intersection
-        .filter(F.col("est_jaccard") >= threshold - margin)
+        .filter(F.col("est_jaccard") >= floor)
     )
     if cap is not None:
         # degree cap, one role after the other, ties broken by the ids
@@ -297,15 +261,7 @@ def _verify(
                 .filter(F.col("_rk") <= cap)
                 .drop("_rk")
             )
-    keep = [F.col(c) for c in pairs.columns] + [F.col("est_jaccard"), F.col("jaccard")]
-    return (
-        _with_jaccard(out, F.col("_va.shingles"), F.col("_vb.shingles"), set_hashes)
-        # explicit final projection: a self-join re-ids the right side's
-        # attributes (DeduplicateRelations), so pre-join Column handles
-        # cannot name the copies to drop
-        .select(*keep)
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return out.filter(F.col("jaccard") >= threshold)
 
 
 def cross_verify_pairs(
@@ -356,7 +312,10 @@ def verify_pairs(
     top-C strongest-estimate neighbors bounds verify volume linearly while
     preserving cluster connectivity (every member retains edges into the
     clique). Off by default: leave None when the workload needs the full
-    pair set (fixture recall); set for cluster-assignment pipelines.
+    pair set (fixture recall); set for cluster-assignment pipelines. The cap
+    ranks on the estimate after the fused kernel has run, so with a cap set
+    the kernel also intersects est-passing pairs that the cap then drops
+    (their sets cross Arrow in the kernel either way).
     """
     side = (sig_df, docs)
     out = _verify(

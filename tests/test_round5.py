@@ -41,11 +41,11 @@ def test_signature_shingles_match_verify_kernel(spark):
         assert np.array_equal(rows[url], want), url
 
 
-def test_verify_with_shingles_runs_no_python_udf(spark, monkeypatch):
-    """With the JVM kernels (forced: ``_ARROW_MIN_HASHES`` above any
-    volume) the persisted-set verify plan must contain no Arrow/pandas
-    evaluation — the exact-Jaccard join is pure JVM, and never re-shingles
-    a document."""
+def test_verify_with_shingles_never_reshingles(spark, monkeypatch):
+    """A signature frame that carries persisted shingle sets is never
+    re-shingled: verify builds no shingle-set UDF for it (one that lacks
+    the sets does), and the verify plan holds the one fused kernel node
+    and no shingle-set evaluation."""
     from lash_spark.operators import verify
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.verify import verify_pairs
@@ -55,13 +55,26 @@ def test_verify_with_shingles_runs_no_python_udf(spark, monkeypatch):
     normed = with_normalized_text(pages.select("url", "text"), "text")
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url")
-    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 1 << 62)
-    verified = verify_pairs(
-        cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
+    built = []
+    make = verify.make_shingle_set_udf
+    monkeypatch.setattr(
+        verify, "make_shingle_set_udf", lambda k: built.append(k) or make(k)
     )
-    plan = verified._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert verified.count() > 0
+
+    def run(sig_df):
+        out = verify_pairs(
+            cands, normed, params, id_col="url", sig_df=sig_df, with_distances=False
+        )
+        # the plan before the action: one tree, not the initial and final
+        return out._jdf.queryExecution().executedPlan().toString(), out.collect()
+
+    plan, rows = run(sigs)
+    assert rows and built == []
+    assert plan.count("ArrowEvalPython") == 1 and "verify_kernel" in plan
+    assert "shingle_set" not in plan and "BatchEvalPython" not in plan
+    _, reshingled = run(sigs.drop("shingles"))
+    assert built == [params.shingle_k] and sorted(reshingled) == sorted(rows)
+    sigs.unpersist()
 
 
 # -------------------------------------- lakeio resume fixes (ADVICE r4 low)

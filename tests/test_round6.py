@@ -242,55 +242,69 @@ def test_cc_local_path_string_ids(spark):
     }
 
 
-def test_intersect_arrow_kernel_matches_jvm(spark, monkeypatch):
-    """The Arrow |A∩B| kernel (forced — the volume gate would pick the
-    JVM engine at this tiny set volume) and the JVM array_intersect plan
-    must produce identical verified pairs and jaccards — including empty
-    sets and doc pairs with no overlap."""
+def test_verify_kernel_jaccard_matches_python_sets(spark):
+    """Every pair the fused verify kernel keeps carries the exact
+    |A∩B| / |A∪B| of a Python set reference built from
+    ``batch_shingle_hash_segments`` over the pair's normalized texts, and
+    the kept pairs are exactly the estimate-passing candidates whose
+    reference jaccard reaches the threshold."""
+    from lash_spark.estimators import minhash_jaccard_expr
+    from lash_spark.hashing import batch_shingle_hash_segments
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
-    from lash_spark.operators import verify
     from lash_spark.operators.verify import verify_pairs
     from lash_spark.config import SketchParams
     from lash_spark.synth import generate_pages
 
     pages = generate_pages(spark, 260, seed=23, partitions=2)
     params = SketchParams()
-    normed = with_normalized_text(pages.select("url", "text"), "text")
+    normed = with_normalized_text(pages.select("url", "text"), "text").persist()
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url").persist()
+    got = {
+        (r["url_a"], r["url_b"]): r["jaccard"]
+        for r in verify_pairs(
+            cands, normed, params, id_col="url", sig_df=sigs, with_distances=False,
+        ).collect()
+    }
 
-    def run(arrow_min_hashes):
-        monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", arrow_min_hashes)
-        return {
-            (r["url_a"], r["url_b"], round(r["jaccard"], 12))
-            for r in verify_pairs(
-                cands, normed, params, id_col="url", sig_df=sigs,
-                with_distances=False,
-            ).collect()
-        }
+    sets = {}
+    for r in normed.select("url", "norm_text").collect():
+        h, seg = batch_shingle_hash_segments(
+            [(r["norm_text"] or "").encode("utf-8")], params.shingle_k
+        )
+        sets[r["url"]] = set(h[seg[0]: seg[1]].tolist())
+    est = {
+        (r["url_a"], r["url_b"]): r["est"]
+        for r in cands.join(sigs.alias("a"), F.col("url_a") == F.col("a.url"))
+        .join(sigs.alias("b"), F.col("url_b") == F.col("b.url"))
+        .select("url_a", "url_b", minhash_jaccard_expr("a.minhash", "b.minhash").alias("est"))
+        .collect()
+    }
+    want = {}
+    for (a, b), e in est.items():
+        if e is None or e < 0.8 - 0.15:
+            continue
+        union = len(sets[a] | sets[b])
+        j = len(sets[a] & sets[b]) / union if union else 0.0
+        if j >= 0.8:
+            want[(a, b)] = j
+    assert got and got == want
+    for df in (cands, sigs, normed):
+        df.unpersist()
 
-    arrow = run(0)
-    jvm = run(1 << 62)
-    assert arrow and arrow == jvm
-    sigs.unpersist()
-    cands.unpersist()
 
-
-def test_intersect_udf_single_eval_in_plan(spark, monkeypatch):
-    """The verify plan must evaluate each Arrow kernel ONCE per row and
-    keep the est short-circuit: exactly two ArrowEvalPython nodes (the
-    vectorized est kernel below, the intersect kernel above), each with a
-    single pythonUDF slot — if ExtractPythonUDFs fused them into one node
-    the intersect (and its shingle-array transfer) would run below the
-    est-threshold filter for every pair — and the est filter must sit
-    BETWEEN the two nodes so est-failing rows never reach the
-    intersection. No row-at-a-time BatchEvalPython anywhere."""
+def test_intersect_udf_single_eval_in_plan(spark):
+    """The verify plan evaluates the fused kernel ONCE per row: exactly one
+    ArrowEvalPython node with a single pythonUDF slot, and the est filter
+    ABOVE it (the non-determinism flag keeps Catalyst from substituting the
+    filter below the projection, which would evaluate the kernel, and ship
+    its arrays over Arrow, a second time). No row-at-a-time
+    BatchEvalPython anywhere."""
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
-    from lash_spark.operators import verify
     from lash_spark.operators.verify import verify_pairs
     from lash_spark.config import SketchParams
     from lash_spark.synth import generate_pages
@@ -300,26 +314,20 @@ def test_intersect_udf_single_eval_in_plan(spark, monkeypatch):
     normed = with_normalized_text(pages.select("url", "text"), "text")
     sigs = build_signatures(normed, params, with_shingles=True).persist()
     cands = lsh_candidate_pairs(sigs, id_col="url")
-    # the volume gate would pick the JVM kernels at this size
-    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 0)
     verified = verify_pairs(
         cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
     )
     assert verified.count() > 0
     plan = verified._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 2 and "BatchEvalPython" not in plan
-    # one slot per node: a fused node would name a second slot
+    assert plan.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in plan
     assert "pythonUDF0" in plan and "pythonUDF1" not in plan
-    # single eval of each kernel
-    assert plan.count("_inter_size_udf") == 1
-    assert plan.count("_minhash_est_udf") == 1
-    # plan prints top-down: intersect node above, est node below, and
-    # the est-threshold filter between them (rows failing est never
-    # cross Arrow with shingle arrays)
-    i_inter = plan.index("_inter_size_udf")
-    i_est = plan.index("_minhash_est_udf")
-    i_filter = plan.index("Filter (isnotnull(pythonUDF0", i_inter)
-    assert i_inter < i_filter < i_est
+    assert plan.count("verify_kernel") == 1
+    # plan prints top-down: the est-threshold filter reads the kernel's
+    # output slot above the one kernel node
+    i_filter = plan.index("Filter")
+    assert i_filter < plan.index("ArrowEvalPython")
+    assert "pythonUDF0" in plan[i_filter:plan.index("\n", i_filter)]
+    assert ".est >= 0.65" in plan[i_filter:plan.index("\n", i_filter)]
     sigs.unpersist()
 
 
@@ -338,28 +346,3 @@ def test_dedup_result_clusters_lazy_no_catalog(spark):
     assert res._clusters is c1 and res.clusters is c1
     assert c1.count() == 120
 
-
-def test_intersect_auto_picks_jvm_at_tiny_volume(spark):
-    """The volume gate must route tiny member-set volumes to the JVM
-    expression (the Python round-trip measured slower than the whole JVM
-    intersection below ~1M member hashes): at this scale the verify plan
-    contains no Python evaluation."""
-    from lash_spark.operators.lsh import lsh_candidate_pairs
-    from lash_spark.operators.normalize import with_normalized_text
-    from lash_spark.operators.signatures import build_signatures
-    from lash_spark.operators.verify import verify_pairs
-    from lash_spark.config import SketchParams
-    from lash_spark.synth import generate_pages
-
-    pages = generate_pages(spark, 200, seed=13, partitions=2)
-    params = SketchParams()
-    normed = with_normalized_text(pages.select("url", "text"), "text")
-    sigs = build_signatures(normed, params, with_shingles=True).persist()
-    cands = lsh_candidate_pairs(sigs, id_col="url")
-    verified = verify_pairs(
-        cands, normed, params, id_col="url", sig_df=sigs, with_distances=False
-    )
-    assert verified.count() > 0
-    plan = verified._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    sigs.unpersist()

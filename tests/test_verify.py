@@ -1,5 +1,6 @@
-"""Verify-operator contracts: the MinHash estimate kernel against the JVM
-expression on malformed rows, the per-document degree cap, the number of
+"""Verify-operator contracts: the fused kernel's estimate against the JVM
+expression on malformed rows and its exact Jaccard against Python sets on
+random inputs, the per-document degree cap, the number of
 Spark jobs one verify call runs before its result is read, and identical
 pairs wherever the shingle sets come from."""
 
@@ -7,7 +8,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lash_spark.config import LshPlan, SketchParams
@@ -75,12 +77,12 @@ def test_verify_calls_issue_pinned_job_counts(spark):
         df.unpersist()
 
 
-def test_est_kernel_matches_jvm_on_null_and_ragged_rows(spark, monkeypatch):
-    """The vectorized MinHash estimate and ``minhash_jaccard_expr`` agree
-    row for row, including NULL for a null, empty or length-mismatched
-    sketch, and rows of different register counts in one Arrow batch."""
+def test_est_kernel_matches_jvm_on_null_and_ragged_rows(spark):
+    """The fused kernel's ``est`` and ``minhash_jaccard_expr`` agree row
+    for row, including NULL for a null, empty or length-mismatched sketch,
+    and rows of different register counts in one Arrow batch."""
     from lash_spark.estimators import minhash_jaccard_expr
-    from lash_spark.operators import verify
+    from lash_spark.operators.verify import _verify_kernel
 
     rows = [
         (1, [1, 2, 3, 4], [1, 2, 3, 5]),
@@ -94,18 +96,86 @@ def test_est_kernel_matches_jvm_on_null_and_ragged_rows(spark, monkeypatch):
         (9, [5, 6, 7, 8], [5, 6, 7, 8]),
     ]
     df = spark.createDataFrame(rows, "id int, a array<int>, b array<int>").coalesce(1)
-    monkeypatch.setattr(verify, "_ARROW_MIN_HASHES", 0)
+    kernel = _verify_kernel(0.0)(
+        F.col("a"), F.col("b"), F.lit(None).cast("array<bigint>"),
+        F.array(F.lit(1).cast("bigint")),
+    )
     got = {
-        r.id: (r.kernel, r.jvm)
+        r.id: (r.k.est, r.jvm)
         for r in df.select(
-            "id",
-            verify._est_jaccard_col(F.col("a"), F.col("b"), 0).alias("kernel"),
-            minhash_jaccard_expr("a", "b").alias("jvm"),
+            "id", kernel.alias("k"), minhash_jaccard_expr("a", "b").alias("jvm")
         ).collect()
     }
     assert all(k == j for k, j in got.values()), got
     assert {i for i, (k, _) in got.items() if k is None} == {2, 3, 4, 5, 7, 8}
     assert (got[1][0], got[6][0], got[9][0]) == (0.75, 0.5, 1.0)
+
+
+_TOP = 1 << 64
+_U64 = st.integers(min_value=0, max_value=_TOP - 1)
+# few distinct values at both ends of the range, so sets overlap often and
+# values >= 2^63 (signed and unsigned order differ) are common
+_SET = st.one_of(
+    st.none(),
+    st.sets(
+        st.one_of(st.integers(0, 20), st.integers(_TOP - 20, _TOP - 1), _U64),
+        max_size=16,
+    ),
+)
+_REGS = st.one_of(st.none(), st.lists(st.integers(0, 2), max_size=6))
+# mostly equal register counts (those rows reach the intersection), some
+# null, empty or ragged
+_REG_PAIR = st.one_of(
+    st.integers(1, 6).flatmap(
+        lambda n: st.tuples(*[st.lists(st.integers(0, 2), min_size=n, max_size=n)] * 2)
+    ),
+    st.tuples(_REGS, _REGS),
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    rows=st.lists(st.tuples(_REG_PAIR, _SET, _SET), min_size=1, max_size=40),
+    floor=st.sampled_from([0.0, 0.5, 0.65]),
+)
+# a signed-order search of the larger set misses both shared hashes here
+@example(
+    rows=[(([1, 2], [1, 2]), {1, 2, 3, _TOP - 3, _TOP - 2, _TOP - 1}, {1, _TOP - 1})],
+    floor=0.0,
+)
+def test_verify_kernel_property(spark, rows, floor):
+    """On random register arrays of mixed lengths and random sorted-unique
+    uint64 shingle sets (empty, null, and values >= 2^63, where signed and
+    unsigned order differ), the fused kernel's ``est`` equals
+    ``minhash_jaccard_expr`` on every row, and ``jaccard`` equals
+    ``len(a & b) / len(a | b)`` (0.0 for an empty union, a null set taken
+    as empty) on every row whose estimate passes the floor, NULL on the
+    others."""
+    from lash_spark.estimators import minhash_jaccard_expr
+    from lash_spark.operators.verify import _verify_kernel
+
+    def signed(s):
+        # sorted in unsigned order, stored as the int64 view, as
+        # batch_shingle_hash_segments writes them
+        return None if s is None else [v - _TOP if v >= 1 << 63 else v for v in sorted(s)]
+
+    df = spark.createDataFrame(
+        [(i, ma, mb, signed(sa), signed(sb)) for i, ((ma, mb), sa, sb) in enumerate(rows)],
+        "i int, ma array<int>, mb array<int>, sa array<bigint>, sb array<bigint>",
+    ).coalesce(1)
+    kernel = _verify_kernel(floor)(F.col("ma"), F.col("mb"), F.col("sa"), F.col("sb"))
+    out = df.select("i", kernel.alias("k"), minhash_jaccard_expr("ma", "mb").alias("ref"))
+    got = {r.i: (r.k.est, r.k.jaccard, r.ref) for r in out.collect()}
+    assert len(got) == len(rows)
+    for i, (_, sa, sb) in enumerate(rows):
+        est, jac, ref = got[i]
+        assert est == ref, (i, rows[i], got[i])
+        if est is None or est < floor:
+            assert jac is None, (i, rows[i], got[i])
+            continue
+        a, b = sa or set(), sb or set()
+        want = len(a & b) / len(a | b) if a | b else 0.0
+        assert jac == want, (i, rows[i], got[i])
 
 
 def test_degree_cap_keeps_top_estimates_per_doc(spark):
