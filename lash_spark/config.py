@@ -203,11 +203,6 @@ class PipelineConfig:
     # one wave. 1 = single-job stage (the small-scale default; at 100 TB
     # set waves so one wave's shuffle fits the failure budget)
     candidate_waves: int = 1
-    # simhash hamming-ball
-    simhash_chunks: int = 4
-    simhash_max_hamming: int = 3
-    # exact-substring pass
-    substring_min_len: int = 256
     # clustering
     cc_max_iterations: int = 50
 

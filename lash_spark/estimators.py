@@ -9,8 +9,6 @@ formulas: ``/root/reference/src/utils.rs:164-167,273-275,362-363`` and
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -134,12 +132,6 @@ def ie_jaccard_expr(card_a: Column | str, card_b: Column | str, card_u: Column |
     return F.greatest(F.lit(0.0), (a + b - u) / u)
 
 
-def containment_expr(card_a: Column | str, card_b: Column | str, card_u: Column | str) -> Column:
-    """|A∩B| / |A| — asymmetric near-dup coefficient."""
-    a, b, u = _c(card_a), _c(card_b), _c(card_u)
-    return F.greatest(F.lit(0.0), (a + b - u) / a)
-
-
 def hmh_jaccard_expr(a: Column | str, b: Column | str) -> Column:
     """HMH register-wise similarity: equal non-empty registers / occupied."""
     a, b = _c(a), _c(b)
@@ -200,16 +192,3 @@ def with_distance_columns(
             "distance", F.col("distance").cast("float")
         )
     return out
-
-
-def hamming_expr(a: Column | str, b: Column | str) -> Column:
-    """bit_count(a XOR b) — SimHash Hamming distance (O3)."""
-    return F.bit_count(_c(a).bitwiseXOR(_c(b)))
-
-
-def mash_distance_py(jaccard: float, k: int, model: int = 1) -> float:
-    """Scalar twin of mash_distance_expr (tests / driver-side planning)."""
-    if jaccard <= 0.0:
-        return 1.0
-    frac = 2.0 * jaccard / (1.0 + jaccard)
-    return min(-math.log(frac) / k, 1.0) if model == 1 else 1.0 - frac ** (1.0 / k)

@@ -166,32 +166,3 @@ def batch_shingle_hashes(
         texts, k
     )
     return [h[seg[i] : seg[i + 1]] for i in range(len(texts))]
-
-
-def word_ngram_hashes(words: "list[str]", n: int, unique: bool = True) -> np.ndarray:
-    """Word n-gram hash set of one tokenized document (used by the exact
-    word-level Jaccard oracle path; char shingles are the scale path)."""
-    if len(words) < n:
-        return np.empty(0, dtype=U64)
-    wh = mix64(
-        np.fromiter(
-            (hash_bytes(w.encode("utf-8")) for w in words), count=len(words), dtype=U64
-        )
-    )
-    out = np.zeros(len(words) - n + 1, dtype=U64)
-    for j in range(n):
-        out = out * _ROLL_BASE + wh[j : len(words) - n + 1 + j]
-    out = mix64(out)
-    return np.unique(out) if unique else out
-
-
-def hash_bytes(data: bytes, seed: int = 0) -> int:
-    """Scalar 64-bit hash of a byte string (FNV-1a core + mix64 finalizer).
-
-    Python-level but only used off the hot path (word tokens in tests,
-    config hashing); the hot path is rolling_window_hashes.
-    """
-    h = 0xCBF29CE484222325 ^ (seed & 0xFFFFFFFFFFFFFFFF)
-    for byte in data:
-        h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return int(mix64(np.array([h], dtype=U64))[0])

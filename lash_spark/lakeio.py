@@ -391,12 +391,11 @@ def resume_delta(
     With ``fp_col`` (present in both frames) the delta keys on
     ``(id, fingerprint)``: url identity is NOT content identity — a
     re-crawled page can arrive with mutated text, and an id-only anti-join
-    would silently keep the stale signature row (the downstream verify
-    stage then trusts stale persisted shingle sets). Falls back to the
-    id-only delta when ``existing`` predates the fingerprint column."""
+    would silently keep the stale sketch row (the downstream candidate and
+    verify stages then trust a MinHash of text that is gone)."""
     if existing is None:
         return incoming
-    if fp_col is not None and fp_col in existing.columns:
+    if fp_col is not None:
         return incoming.join(
             existing.select(id_col, fp_col).distinct(), [id_col, fp_col], "left_anti"
         )

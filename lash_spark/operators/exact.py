@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 
 def content_hash(col="norm_text") -> "F.Column":
@@ -57,12 +56,3 @@ def dedup_exact(
         .agg(F.min(id_col).alias(id_col))
     )
     return docs.join(keep, id_col, "left_semi")
-
-
-def dedup_rank(
-    docs: DataFrame, id_col: str = "url", text_col: str = "norm_text"
-) -> DataFrame:
-    """Windowed variant exposing dup_rank (1 = keeper) when the caller wants
-    to inspect rather than drop duplicates."""
-    w = Window.partitionBy(content_hash(text_col)).orderBy(F.col(id_col))
-    return docs.withColumn("dup_rank", F.row_number().over(w))

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-NORMALIZE_VERSION = 1
-
 
 def normalize_text(col: Column | str, version: int = 1) -> Column:
     """Frozen normalization profiles (config-selectable, T1/T2 — the
@@ -65,18 +63,6 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() * 4 < target:
         return df.repartition(target)
     return df
-
-
-def html_to_text(html_col: Column | str) -> Column:
-    """Extraction stub for the (url, html:binary) ingest path: strips tags
-    from UTF-8 html. Real WARC extraction (trafilatura-class) is out of
-    sandbox scope; this keeps the plumbing (binary -> string -> normalize)
-    real and testable against synth.py's html wrapper."""
-    c = F.col(html_col) if isinstance(html_col, str) else html_col
-    txt = c.cast("string")
-    no_script = F.regexp_replace(txt, r"(?s)<(script|style)[^>]*>.*?</\1>", " ")
-    no_tags = F.regexp_replace(no_script, r"<[^>]+>", " ")
-    return F.trim(F.regexp_replace(no_tags, r"\s+", " "))
 
 
 # pure click-tracking params only: bare `ref` is content-bearing on many

@@ -49,20 +49,6 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(text_col: str = "text") -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword presence +
-    lexical diversity. Deterministic, documented weights."""
-    w = _words(text_col)
-    n_words = F.size(w).cast("double")
-    len_score = F.least(n_words / 100.0, F.lit(1.0))
-    stop_score = F.least(
-        F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double") / (n_words * 0.05 + 1.0),
-        F.lit(1.0),
-    )
-    diversity = F.size(F.array_distinct(w)).cast("double") / n_words
-    return (0.4 * len_score + 0.3 * stop_score + 0.3 * diversity).alias("quality")
-
-
 def quality_flags(text_col: str = "text") -> "dict[str, Column]":
     """C4-style boolean quality rules (Raffel et al. 2020 §2.2 family),
     each a pure Column expression so the 100 TB filter pass is one codegen

@@ -84,51 +84,48 @@ def dedup_pipeline(
     # ---- signatures (map-only; row-level delta resume under a catalog)
     if catalog is not None:
         existing = catalog.read("signatures") if catalog.exists("signatures") else None
-        if existing is not None and catalog.properties("signatures").get("params_hash") != phash:
-            existing = None  # params changed -> full rebuild (F6 semantics)
-        # appended rows must match the durable table's layout: a table
-        # written without the resume content fingerprint (as
-        # stream_signatures writes it) keeps that schema across resumes
-        with_fp = "text_fp" in existing.columns if existing is not None else True
+        # params changed, or a table without the resume content fingerprint
+        # -> full rebuild (F6 semantics); nothing appends to an old layout
+        if existing is not None and (
+            catalog.properties("signatures").get("params_hash") != phash
+            or "text_fp" not in existing.columns
+        ):
+            existing = None
         inc = normed.withColumn("text_fp", F.xxhash64(F.col("norm_text")))
         # delta keys on (id, content fingerprint): a re-crawled url whose
-        # text mutated is IN the delta, so its signature is recomputed
-        # instead of silently trusted stale
-        delta = resume_delta(
-            inc, existing, id_col, fp_col="text_fp" if with_fp else None
-        ).persist()
+        # text mutated is IN the delta, so its sketch is recomputed instead
+        # of silently trusted stale
+        delta = resume_delta(inc, existing, id_col, fp_col="text_fp").persist()
         new_sigs = build_signatures(
-            delta, params, plan, id_col=id_col,
-            carry_cols=["text_fp"] if with_fp else [],
+            delta, params, plan, id_col=id_col, carry_cols=["text_fp"]
         )
-        if existing is not None:
-            if not delta.isEmpty():
-                # the signature table is about to change: downstream stage
-                # markers (keyed only on params_hash) become stale — clear
-                # them BEFORE mutating the table (ADVICE r5). Clearing is
-                # idempotent, so a crash between the clear and the write
-                # costs at worst a rebuild; the old order (clear after)
-                # left a crash window in which stale 'complete' markers
-                # silently skipped candidate/verify rebuild and the results
-                # missed every newly-added or mutated document.
-                for stale in ("candidates", "dup_pairs", "clusters"):
-                    catalog.clear_stage(stale)
-                mutated = delta.select(id_col).join(
-                    existing.select(id_col), id_col, "left_semi"
-                )
-                if mutated.isEmpty():
-                    catalog.append(new_sigs, "signatures")
-                else:
-                    # mutated urls: MERGE semantics — survivors keep their
-                    # rows, stale rows are replaced by the recomputed ones
-                    # (the Iceberg seam is MERGE INTO / row-level delete;
-                    # catalog.replace stages + swaps for plain parquet)
-                    survivors = existing.join(
-                        delta.select(id_col), id_col, "left_anti"
-                    )
-                    catalog.replace(survivors.unionByName(new_sigs), "signatures")
-        else:
+        changed = existing is None or not delta.isEmpty()
+        if changed:
+            # the signature table is about to change: downstream stage
+            # markers (keyed only on params_hash, which a rebuilt table
+            # without text_fp shares) become stale — clear them BEFORE
+            # mutating the table (ADVICE r5). Clearing is idempotent, so a
+            # crash between the clear and the write costs at worst a
+            # rebuild; clearing after the write would leave a crash window
+            # in which stale 'complete' markers skip the candidate/verify
+            # rebuild and the results miss every added or mutated document.
+            for stale in ("candidates", "dup_pairs", "clusters"):
+                catalog.clear_stage(stale)
+        if existing is None:
             catalog.write(new_sigs, "signatures")
+        elif changed:
+            mutated = delta.select(id_col).join(
+                existing.select(id_col), id_col, "left_semi"
+            )
+            if mutated.isEmpty():
+                catalog.append(new_sigs, "signatures")
+            else:
+                # mutated urls: MERGE semantics — survivors keep their
+                # rows, stale rows are replaced by the recomputed ones
+                # (the Iceberg seam is MERGE INTO / row-level delete;
+                # catalog.replace stages + swaps for plain parquet)
+                survivors = existing.join(delta.select(id_col), id_col, "left_anti")
+                catalog.replace(survivors.unionByName(new_sigs), "signatures")
         delta.unpersist()
         catalog.set_properties("signatures", {"params_hash": phash, "params": params.to_json()})
         sigs = catalog.read("signatures")

@@ -21,24 +21,10 @@ import numpy as np
 
 from lash_spark.hashing import U64, clz64, hash_with_seed, mix64, perm_keys
 
-I64 = np.int64
 EMPTY_MIN = U64(0xFFFFFFFFFFFFFFFF)  # MinHash register of the empty set
 
 
 # ---------------------------------------------------------------- MinHash
-
-def minhash_signature(hashes: np.ndarray, keys: np.ndarray) -> np.ndarray:
-    """n-permutation MinHash signature of one hash set.
-
-    sig[i] = min over elements of mix64(h ^ key_i) — the A2 analog
-    (utils.rs:395-398) generalized from HMH buckets to explicit permutations.
-    Empty set -> all EMPTY_MIN. Returns uint64 (n,).
-    """
-    if hashes.size == 0:
-        return np.full(keys.shape[0], EMPTY_MIN, dtype=U64)
-    # (m, n) broadcast; m = |set|, n = permutations
-    return mix64(hashes[:, None] ^ keys[None, :]).min(axis=0)
-
 
 def minhash_signatures_batch(
     hash_sets: "list[np.ndarray]", num_perm: int, seed: int
@@ -260,14 +246,6 @@ def inclusion_exclusion_jaccard(card_a: float, card_b: float, card_u: float) -> 
     if card_u <= 0:
         return 0.0
     return max(0.0, (card_a + card_b - card_u) / card_u)
-
-
-def containment(card_a: float, card_b: float, card_u: float) -> float:
-    """Asymmetric containment |A∩B|/|A| — the SetSketch-style extension
-    (SURVEY.md U4 note) for asymmetric near-dup."""
-    if card_a <= 0:
-        return 0.0
-    return max(0.0, (card_a + card_b - card_u) / card_a)
 
 
 # ------------------------------------------------------------------- ULL
@@ -533,13 +511,6 @@ def simhash64(hashes: np.ndarray) -> int:
     ge = (2 * counts) >= hashes.size
     fp = np.bitwise_or.reduce(np.where(ge, np.uint64(1) << np.arange(64, dtype=U64), U64(0)))
     return int(np.int64(fp.astype(np.uint64)))
-
-
-def simhash_batch(hash_sets: "list[np.ndarray]") -> np.ndarray:
-    out = np.zeros(len(hash_sets), dtype=np.int64)
-    for i, hs in enumerate(hash_sets):
-        out[i] = simhash64(hs)
-    return out
 
 
 def hamming64(a: int, b: int) -> int:

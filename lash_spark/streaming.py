@@ -5,18 +5,12 @@ batch rayon in the code — SURVEY.md §2.8); the engine's incremental story
 is idempotent batch stages + resume. This module is the documented
 extension for continuous ingest: a `readStream` source of new pages feeds
 `foreachBatch`, and every micro-batch runs the SAME batch stage functions
-as the batch pipeline, so streaming and batch share one code path. Two
-layouts:
-
-- ``stream_signatures``: normalize → signatures → append to the batch
-  ``signatures`` table; candidate/verify/cluster stages then run as
-  periodic batch jobs over the growing table (the standard lambda-less
-  web-crawl layout).
-- ``stream_near_dup``: each trigger sketches its batch once, probes it
-  against itself and the store table ``stream_docs`` (one row per
-  document: id, text and sketch columns) in one candidate pass and one
-  verify, then appends its pairs to ``stream_dup_pairs`` and its store
-  rows to ``stream_docs``.
+as the batch pipeline, so streaming and batch share one code path.
+``stream_near_dup`` is the one stream-to-store path: each trigger
+sketches its batch once, probes it against itself and the store table
+``stream_docs`` (one row per document: id, text and sketch columns) in
+one candidate pass and one verify, then appends its pairs to
+``stream_dup_pairs`` and its store rows to ``stream_docs``.
 """
 
 from __future__ import annotations
@@ -28,76 +22,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from lash_spark.config import LshPlan, SketchParams
 from lash_spark.lakeio import ParquetCatalog
-from lash_spark.operators.normalize import with_normalized_text
 from lash_spark.operators.signatures import build_signatures
 
 # side tag of stream_near_dup's probe frame: true on the trigger's batch rows
 _NEW = "_new"
-
-
-def stream_signatures(
-    pages_stream: DataFrame,
-    catalog: ParquetCatalog,
-    params: SketchParams,
-    plan: LshPlan | None = None,
-    id_col: str = "url",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """readStream(pages) -> signatures table, effectively-once per document.
-
-    foreachBatch with a blind append is only at-least-once (a restart after
-    the append commits but before the offset checkpoint re-runs the batch),
-    so the append is made idempotent per id: each micro-batch anti-joins
-    against the already-signed ids (resume_delta) before writing. Spark's
-    streaming checkpoint (offsets) then composes with the engine's stage
-    markers so a killed stream resumes mid-source without duplicating rows.
-    """
-    from lash_spark.lakeio import resume_delta
-
-    plan = plan or LshPlan.plan(params.num_perm, 0.8, 0.995)
-    catalog.set_properties(
-        "signatures", {"params_hash": params.params_hash(), "params": params.to_json()}
-    )
-    # Replay can happen on the FIRST batch after a (re)start (the append
-    # committed but the offset checkpoint didn't) AND on a within-run retry
-    # (foreachBatch re-invokes the function if it raises after the append
-    # committed). Guard both with one flag: it is set pessimistically at
-    # batch entry and cleared only after the whole batch succeeded, so any
-    # failure leaves the NEXT invocation paying the anti-join — per-batch
-    # cost stays amortized O(1) anti-joins on the happy path instead of
-    # growing linearly with history.
-    guard = {"pending": True}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        need_guard = guard["pending"]
-        guard["pending"] = True  # stays set if anything below raises
-        normed = with_normalized_text(
-            batch_df.select(id_col, text_col), text_col,
-            version=params.normalize_version,
-        )
-        if need_guard:
-            existing = catalog.read("signatures") if catalog.exists("signatures") else None
-            normed = resume_delta(normed, existing, id_col)
-        sigs = build_signatures(normed, params, plan, id_col=id_col, min_parallelism=1)
-        catalog.append(sigs, "signatures")
-        catalog.log_metrics(
-            f"stream_signatures_batch_{batch_id}",
-            params.params_hash(),
-            wall_ms=(time.monotonic() - t0) * 1000.0,
-            output_rows=None,
-            status="complete",
-        )
-        guard["pending"] = False
-
-    writer = pages_stream.writeStream.foreachBatch(process).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_pages_stream(
@@ -195,9 +123,14 @@ def stream_near_dup(
     0, so they join no LSH bucket) and win their id like any other.
 
     Replay safety: a two-step append protocol (pairs, then store rows)
-    plus the pessimistic guard of stream_signatures. On a guarded
-    (post-failure/restart) invocation the recomputed pairs are anti-joined
-    vs ``stream_dup_pairs``, so a crash between the two appends re-runs
+    plus a pessimistic replay guard. foreachBatch re-runs a batch after a
+    restart (the appends committed, the offset checkpoint did not) and on
+    a within-run retry (the function raised after an append committed).
+    One flag covers both: it is set at batch entry and cleared only after
+    the whole batch succeeded, so any failure makes the NEXT invocation a
+    guarded one, and the happy path pays no pair anti-join. On a guarded
+    invocation the recomputed pairs are anti-joined vs
+    ``stream_dup_pairs``, so a crash between the two appends re-runs
     the batch — its ids are not in the store yet, so the probe sees the
     pre-crash store — and lands its store rows without duplicating pairs.
     A crash after both appends re-runs as a no-op (the batch's ids are in

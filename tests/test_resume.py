@@ -192,10 +192,12 @@ def test_pipeline_resume_skips_and_matches_clean_run(spark, tiny_pages, tmp_path
 
 
 def test_format2_signatures_table_rebuilt_not_resumed(spark, tmp_path, monkeypatch):
-    """A catalog written under SIGNATURE_FORMAT 2 (each ``signatures`` row
-    carrying its shingle set) fails the params_hash check: the pipeline
-    rebuilds the table set-less, instead of appending set-less delta rows
-    to it, and the results equal a clean run."""
+    """A ``signatures`` table in an older layout is rebuilt, never resumed:
+    the pipeline writes a fresh set-less table carrying ``text_fp`` instead
+    of appending delta rows to the old one, and the results equal a clean
+    run. Two old layouts: a SIGNATURE_FORMAT 2 table (each row carrying its
+    shingle set; fails the params_hash check) and a current-params table
+    without the ``text_fp`` resume fingerprint."""
     from pathlib import Path
 
     import pyarrow.parquet as pq
@@ -205,24 +207,38 @@ def test_format2_signatures_table_rebuilt_not_resumed(spark, tmp_path, monkeypat
     from lash_spark.synth import generate_pages
 
     pages = generate_pages(spark, 200, seed=23, partitions=2)
-    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    half = pages.filter("planted_cluster % 2 = 0")
     real = pipeline_mod.build_signatures
-    with monkeypatch.context() as m:
-        # the format-2 pipeline: shingle sets persisted, format-2 hashes
-        m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
-        m.setattr(
-            pipeline_mod, "build_signatures",
-            lambda *a, **kw: real(*a, with_shingles=True, **kw),
-        )
-        dedup_pipeline(pages.filter("planted_cluster % 2 = 0"), PipelineConfig(), catalog=cat)
-    assert "shingles" in cat.read("signatures").columns
 
-    res = dedup_pipeline(pages, PipelineConfig(), catalog=cat)
-    files = list(Path(cat.path("signatures")).rglob("*.parquet"))
-    assert files and all("shingles" not in pq.read_schema(f).names for f in files)
-    assert cat.properties("signatures")["params_hash"] == PipelineConfig().params.params_hash()
-    assert cat.read("signatures").count() == pages.count()
+    def format2(cat):
+        with monkeypatch.context() as m:
+            # the format-2 pipeline: shingle sets persisted, format-2 hashes
+            m.setattr(config_mod, "SIGNATURE_FORMAT", 2)
+            m.setattr(
+                pipeline_mod, "build_signatures",
+                lambda *a, **kw: real(*a, with_shingles=True, **kw),
+            )
+            dedup_pipeline(half, PipelineConfig(), catalog=cat)
+        assert "shingles" in cat.read("signatures").columns
+
+    def without_fp(cat):
+        # same params_hash, so its stage markers stay 'complete'
+        dedup_pipeline(half, PipelineConfig(), catalog=cat)
+        cat.replace(cat.read("signatures").drop("text_fp"), "signatures")
+        assert "text_fp" not in cat.read("signatures").columns
+
     clean = dedup_pipeline(pages, PipelineConfig())
-    for got, want in ((res.dup_pairs, clean.dup_pairs), (res.clusters, clean.clusters)):
-        assert got.count() > 0
-        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    for forge in (format2, without_fp):
+        cat = ParquetCatalog(spark, str(tmp_path / forge.__name__))
+        forge(cat)
+        res = dedup_pipeline(pages, PipelineConfig(), catalog=cat)
+        files = list(Path(cat.path("signatures")).rglob("*.parquet"))
+        assert files, forge.__name__
+        for f in files:
+            names = pq.read_schema(f).names
+            assert "shingles" not in names and "text_fp" in names, (forge.__name__, f)
+        assert cat.properties("signatures")["params_hash"] == PipelineConfig().params.params_hash()
+        assert cat.read("signatures").count() == pages.count()
+        for got, want in ((res.dup_pairs, clean.dup_pairs), (res.clusters, clean.clusters)):
+            assert got.count() > 0
+            assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), forge.__name__

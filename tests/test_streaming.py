@@ -1,5 +1,6 @@
-"""Streaming ingest: micro-batches land in the same signatures table and
-match the batch-built signatures exactly (one code path)."""
+"""Streaming ingest: each micro-batch sketches through the batch signature
+stage, so the stream store matches the batch-built sketches exactly (one
+code path)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from lash_spark.config import LshPlan, SketchParams
 from lash_spark.lakeio import ParquetCatalog
 from lash_spark.operators.normalize import with_normalized_text
 from lash_spark.operators.signatures import build_signatures
-from lash_spark.streaming import read_pages_stream, stream_signatures
+from lash_spark.streaming import read_pages_stream
 from lash_spark.synth import generate_pages
 
 SKETCH_COLS = ["url", "minhash", "simhash", "bands", "n_windows"]
@@ -48,32 +49,6 @@ def _batch_sketches(docs, params):
 
 def _assert_same_rows(got, want):
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
-
-def test_stream_signatures_matches_batch(spark, tmp_path):
-    pages = generate_pages(spark, 200, seed=42, partitions=4)
-    src = str(tmp_path / "src")
-    # three parquet "drops" simulating arriving crawl files
-    pages.filter("planted_cluster % 3 = 0").write.parquet(f"{src}/d0")
-    pages.filter("planted_cluster % 3 = 1").write.parquet(f"{src}/d1")
-    pages.filter("planted_cluster % 3 = 2").write.parquet(f"{src}/d2")
-    schema = pages.schema
-
-    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-    params = SketchParams()
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
-    q = stream_signatures(
-        stream, cat, params, checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True
-    )
-    q.awaitTermination(120)
-
-    got = cat.read("signatures")
-    batch = build_signatures(
-        with_normalized_text(pages, "text"), params, LshPlan.plan(128, 0.8, 0.995)
-    )
-    assert got.count() == pages.count()
-    assert got.exceptAll(batch).isEmpty() and batch.exceptAll(got).isEmpty()
-    assert cat.properties("signatures")["params_hash"] == params.params_hash()
 
 
 def test_stream_exact_dedup_stateful(spark, tmp_path):
@@ -127,36 +102,23 @@ def test_stream_exact_dedup_stateful(spark, tmp_path):
         assert op["numRowsUpdated"] <= n_in
 
 
-def test_stream_signatures_honors_normalize_version(spark, tmp_path):
-    """ADVICE r2: stream_signatures must normalize with the profile in
-    params (v2 here), not the default v1 — otherwise the signatures table
-    is v1-built but tagged with a v2 params_hash."""
+def test_stream_near_dup_honors_normalize_version(spark, tmp_path):
+    """ADVICE r2: the stream must normalize with the profile in params (v2
+    here), not the default v1 — otherwise the store is v1-built but
+    stamped with a v2 params_hash."""
     pages = generate_pages(spark, 80, seed=7, partitions=2)
     src = str(tmp_path / "src")
-    pages.write.parquet(f"{src}/d0")
+    pages.coalesce(1).write.parquet(f"{src}/d0")
 
     cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-    params = SketchParams(normalize_version=2)
-    stream = spark.readStream.schema(pages.schema).parquet(f"{src}/*")
-    q = stream_signatures(
-        stream, cat, params, checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=True
-    )
-    q.awaitTermination(120)
+    p_v2 = SketchParams(normalize_version=2)
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, p_v2, tmp_path / "ckpt")
 
-    got = cat.read("signatures")
-    batch_v2 = build_signatures(
-        with_normalized_text(pages, "text", version=2),
-        params,
-        LshPlan.plan(128, 0.8, 0.995),
-    )
-    batch_v1 = build_signatures(
-        with_normalized_text(pages, "text", version=1),
-        params,
-        LshPlan.plan(128, 0.8, 0.995),
-    )
-    assert got.exceptAll(batch_v2).isEmpty() and batch_v2.exceptAll(got).isEmpty()
+    got = cat.read("stream_docs").select(*SKETCH_COLS)
+    batch_v2 = _batch_sketches(pages, p_v2)
+    _assert_same_rows(got, batch_v2)
     # and v1 vs v2 genuinely differ on this corpus (the test has teeth)
-    assert not batch_v1.exceptAll(batch_v2).isEmpty()
+    assert not _batch_sketches(pages, SketchParams()).exceptAll(batch_v2).isEmpty()
 
 
 def test_stream_near_dup_incremental_signature_work(spark, tmp_path, monkeypatch):
@@ -515,31 +477,21 @@ def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
 
 
 def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
-    """The ``stream_signatures_batch_*`` and ``stream_near_dup_batch_*``
-    metrics rows carry the measured wall time of their batch, not 0: more
-    than zero and no more than the whole query took."""
+    """The ``stream_near_dup_batch_*`` metrics row carries the measured
+    wall time of its batch, not 0: more than zero and no more than the
+    whole query took."""
     import time
-
-    from lash_spark.streaming import stream_near_dup
 
     pages = generate_pages(spark, 60, seed=3, partitions=2)
     src = str(tmp_path / "src")
     pages.coalesce(1).write.parquet(f"{src}/d0")
-    for name, start in (
-        ("stream_signatures", stream_signatures),
-        ("stream_near_dup", stream_near_dup),
-    ):
-        cat = ParquetCatalog(spark, str(tmp_path / name))
-        t0 = time.monotonic()
-        q = start(
-            read_pages_stream(spark, f"{src}/*", pages.schema, 1), cat, SketchParams(),
-            checkpoint_dir=str(tmp_path / f"ck_{name}"), trigger_once=True,
-        )
-        q.awaitTermination(300)
-        elapsed_ms = (time.monotonic() - t0) * 1000.0
-        (row,) = cat.metrics().collect()
-        assert row.stage == f"{name}_batch_0" and row.status == "complete"
-        assert 0.0 < row.wall_ms <= elapsed_ms
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    t0 = time.monotonic()
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, SketchParams(), tmp_path / "ckpt")
+    elapsed_ms = (time.monotonic() - t0) * 1000.0
+    (row,) = cat.metrics().collect()
+    assert row.stage == "stream_near_dup_batch_0" and row.status == "complete"
+    assert 0.0 < row.wall_ms <= elapsed_ms
 
 
 def test_no_catalog_table_stores_shingle_sets(spark, tmp_path):
