@@ -183,9 +183,10 @@ class PipelineConfig:
     lsh_min_recall: float = 0.995
     # hot-band skew tiers (SURVEY.md O2). Pair volume is quadratic in bucket
     # size, so tiers are sized by pair budget: <=max_band_bucket plain join
-    # (<=32k pairs/bucket); <=star_threshold salted triangle blocks (<=2M
-    # pairs spread over salt^2/2 reducers); above that boilerplate-class
-    # buckets are star-linked (linear volume, connectivity preserved).
+    # (<=32k pairs/bucket); <=star_threshold salted equi-join (<=130k
+    # pairs/bucket spread over salt_buckets join keys); above that
+    # boilerplate-class buckets are star-linked (linear volume,
+    # connectivity preserved).
     max_band_bucket: int = 256
     salt_buckets: int = 8
     star_threshold: int = 512

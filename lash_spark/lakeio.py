@@ -1,14 +1,11 @@
 """Table catalog + lineage/metrics + checkpoint/resume (O6).
 
-Iceberg is the production target (partition transforms, snapshot resume);
-the sandbox has no Iceberg jars, so the catalog is an abstraction with two
-backends behind one API:
-
-- ``IcebergCatalog``: used when a Spark catalog with Iceberg support is
-  configured (``spark.sql.catalog.<name>``) — writeTo().append(),
-  overwritePartitions(), table properties for run params.
-- ``ParquetCatalog``: directory-of-parquet tables with identical layout +
-  a JSON sidecar for table properties. What tests run on.
+One backend, ``ParquetCatalog``: directory-of-parquet tables plus a JSON
+sidecar for table properties, with Iceberg-shaped semantics (dynamic
+partition overwrite, run params as table properties). Iceberg is the
+production target, but the package bundles no Iceberg runtime and no Iceberg
+backend exists in the code; the catalog's methods (read, write, append,
+overwrite_partitions, properties) are the seam it would sit behind.
 
 Resume semantics (north_rule): every stage records a completion marker
 keyed by params_hash; a rerun with the same params skips completed stages,
@@ -52,11 +49,8 @@ class ParquetCatalog:
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite", partition_by=None):
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+    def write(self, df: DataFrame, table: str):
+        df.write.mode("overwrite").parquet(self.path(table))
 
     def append(self, df: DataFrame, table: str):
         df.write.mode("append").parquet(self.path(table))
@@ -229,31 +223,28 @@ def run_stage(
     stage: str,
     params_hash: str,
     builder,
-    output_table: str | None = None,
-    partition_by=None,
-    count_output: bool = True,
 ):
     """Idempotent stage runner: skip when (stage, params_hash) completed and
-    the output table exists; otherwise build, write, log metrics, mark.
+    the output table (named after the stage) exists; otherwise build,
+    write, log metrics, mark.
 
     Returns the output DataFrame (read back from the table when skipped,
     giving downstream stages a clean scan instead of a long lineage).
     """
-    table = output_table or stage
-    if catalog.stage_complete(stage, params_hash) and catalog.exists(table):
-        return catalog.read(table), True
+    if catalog.stage_complete(stage, params_hash) and catalog.exists(stage):
+        return catalog.read(stage), True
     t0 = time.monotonic()
     df = builder()
-    catalog.write(df, table, partition_by=partition_by)
+    catalog.write(df, stage)
     # stamp this writer's provenance: if the table was previously produced
     # by run_partitioned_stage under a different (e.g. wave-suffixed)
     # params_hash, the stale sidecar would otherwise let a later
     # partitioned run trust its manifest against a flat-layout table and
     # write part_col= dirs alongside flat files (conflicting directory
     # structures on read)
-    catalog.set_properties(table, {"params_hash": params_hash})
-    out = catalog.read(table)
-    n = out.count() if count_output else None
+    catalog.set_properties(stage, {"params_hash": params_hash})
+    out = catalog.read(stage)
+    n = out.count()
     catalog.log_metrics(stage, params_hash, (time.monotonic() - t0) * 1000, output_rows=n)
     catalog.mark_stage(stage, params_hash, output_rows=n)
     return out, False
@@ -266,8 +257,6 @@ def run_partitioned_stage(
     part_values,
     builder,
     part_col: str = "part",
-    wave_size: int = 1,
-    output_table: str | None = None,
 ):
     """Partition-granular resumable stage (O6): the north-rule promise that
     a killed run "restarts without recomputing completed signature or band
@@ -275,8 +264,8 @@ def run_partitioned_stage(
 
     ``part_values`` is the full deterministic list of partition-unit values
     for this stage; ``builder(values)`` returns a DataFrame whose
-    ``part_col`` column only holds those values. Values run in
-    deterministic waves of ``wave_size``:
+    ``part_col`` column only holds those values. Each value runs as one
+    deterministic wave:
 
     1. the wave's output dynamically OVERWRITES only its partitions
        (idempotent replay — a wave that crashed between the data commit
@@ -290,26 +279,25 @@ def run_partitioned_stage(
     is marked complete and skipped wholesale. A params_hash change drops
     the table + manifest and rebuilds from scratch (F6 semantics).
     """
-    table = output_table or stage
-    prior = catalog.properties(table).get("params_hash")
-    if prior != params_hash and (prior is not None or catalog.exists(table)):
+    prior = catalog.properties(stage).get("params_hash")
+    if prior != params_hash and (prior is not None or catalog.exists(stage)):
         # params changed, OR the table exists without a partitioned-runner
         # provenance tag (e.g. written by single-job run_stage with a
         # different layout): drop and rebuild
-        catalog.drop(table)
+        catalog.drop(stage)
         catalog.drop(catalog._manifest(stage))
         catalog.clear_stage(stage)
-    elif catalog.exists(table) and part_col not in catalog.read(table).columns:
+    elif catalog.exists(stage) and part_col not in catalog.read(stage).columns:
         # provenance tag matches but the durable layout is flat (a
         # non-partitioned writer rewrote the table between partitioned
         # runs): trusting the manifest would mix part_col= dirs with flat
         # files — drop and rebuild under the partitioned layout
-        catalog.drop(table)
+        catalog.drop(stage)
         catalog.drop(catalog._manifest(stage))
         catalog.clear_stage(stage)
-    catalog.set_properties(table, {"params_hash": params_hash})
+    catalog.set_properties(stage, {"params_hash": params_hash})
     done = catalog.completed_partitions(stage, params_hash)
-    if not catalog.exists(table):
+    if not catalog.exists(stage):
         if catalog.stage_complete(stage, params_hash) and catalog.stage_info(
             stage
         ).get("empty_output"):
@@ -327,9 +315,9 @@ def run_partitioned_stage(
     todo = [v for v in part_values if str(v) not in done]
     if not todo:
         if not catalog.stage_complete(stage, params_hash):
-            catalog.mark_stage(stage, params_hash, empty_output=not catalog.exists(table))
-        if catalog.exists(table):
-            return catalog.read(table), True
+            catalog.mark_stage(stage, params_hash, empty_output=not catalog.exists(stage))
+        if catalog.exists(stage):
+            return catalog.read(stage), True
         # known-empty completed stage: surface an empty frame WITHOUT
         # invoking the builder (ADVICE r5: builders may run eager work —
         # pairs_from_keys checkpoints and probes — so "no wave executes"
@@ -350,29 +338,28 @@ def run_partitioned_stage(
             )
         return builder([part_values[0]]).limit(0) if part_values else None, True
     last_df = None
-    for i in range(0, len(todo), wave_size):
-        wave = todo[i : i + wave_size]
+    for v in todo:
         t0 = time.monotonic()
-        df = last_df = builder(list(wave))
-        catalog.overwrite_partitions(df, table, [part_col])
-        catalog.mark_partitions(stage, params_hash, wave)
+        df = last_df = builder([v])
+        catalog.overwrite_partitions(df, stage, [part_col])
+        catalog.mark_partitions(stage, params_hash, [v])
         catalog.log_metrics(
             stage,
             params_hash,
             (time.monotonic() - t0) * 1000,
             status="wave_complete",
-            parts=[str(p) for p in wave],
+            parts=[str(v)],
         )
     # record the output schema so empty-output resumes never have to call
     # the (possibly eager) builder just to learn it
     catalog.mark_stage(
         stage,
         params_hash,
-        empty_output=not catalog.exists(table),
+        empty_output=not catalog.exists(stage),
         schema=last_df.schema.json(),
     )
-    if catalog.exists(table):
-        return catalog.read(table), False
+    if catalog.exists(stage):
+        return catalog.read(stage), False
     # every wave was empty: dynamic overwrite wrote no files — return an
     # empty frame with the builder's schema (the marker's empty_output
     # flag lets reruns trust the manifest instead of replaying)

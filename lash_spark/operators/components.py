@@ -119,7 +119,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Edge list -> (node, component) labels. Nodes appearing in no edge are
     absent (caller left-joins and coalesces to self — see assign_clusters).
@@ -159,7 +158,7 @@ def connected_components(
         if len(head) <= _LOCAL_EDGE_CAP:
             return _driver_components(e, pdf_e=head)
     prev = _checksum(e)
-    for it in range(max_iterations):
+    for _ in range(max_iterations):
         # _small_star's output is already canonical: both emit branches are
         # oriented src > dst by construction (m is a strict minimum on every
         # emitted row — self_e's src always has a smaller neighbor because
@@ -167,11 +166,8 @@ def connected_components(
         # loop wrapped it in _canonical() anyway, paying one extra distinct
         # SHUFFLE per round for a provable no-op (r6 measurement: ~20% of
         # each CC round).
-        e2 = _small_star(_large_star(e))
-        if checkpoint_every and it % checkpoint_every == 0:
-            e2 = e2.localCheckpoint(eager=False)
-        cur = _checksum(e2)
-        e = e2
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        cur = _checksum(e)
         if cur == prev:  # star-contracted edge set stable -> converged
             break
         prev = cur

@@ -5,19 +5,31 @@ Replaces (does not port) the reference's all-pairs nested loop
 impossible at 10^12 docs. Candidates come from equi-joins on compact keys
 (MinHash band hashes — O1; SimHash chunks — O3), with the hot-key problem
 handled *explicitly* (north_rule; SURVEY.md O2), because the blow-up is
-quadratic-in-bucket-size pair generation, which AQE skew-join cannot fix:
+quadratic-in-bucket-size pair generation, which AQE skew-join cannot fix.
 
-- tier 1 (|bucket| <= max_bucket): plain self equi-join, `id_a < id_b`
-  (J2 triangular rule, utils.rs:158-160).
-- tier 2 (max_bucket < |bucket| <= star_threshold): **salted** all-pairs —
-  members get salt s = hash(id) % S; the bucket key is split into the
-  S(S+1)/2 triangle blocks (i <= j) and each member is replicated to the S
-  blocks it participates in, so one hot reducer becomes ~S²/2 balanced
-  reducers while still emitting every unordered pair exactly once.
+One generator (``_pairs``) serves three pair rules, each reached through
+one public entry:
+
+- self (:func:`pairs_from_keys`): every pair with ``id_a < id_b`` (J2
+  triangular rule, utils.rs:158-160).
+- tagged probe (:func:`pairs_from_keys` with ``new_col``): see below.
+- cross (:func:`cross_pairs_from_keys`): query rows on the left, reference
+  rows on the right, every pair kept and emitted as ``(id_q, id_r)``.
+
+Every rule runs through the same tiers, sized by one bucket census:
+
+- tier 1 (|bucket| <= max_bucket): plain equi-join on (band_id, key).
+- tier 2 (max_bucket < |bucket| <= star_threshold): **salted** equi-join —
+  the rule's left rows are replicated to all S salts
+  (``explode(sequence(0, S-1))``), its right rows get the one salt
+  ``pmod(xxhash64(id), S)``, and the join on (band_id, key, salt) spreads a
+  hot bucket over S join keys while still emitting every pair of the rule
+  exactly once. Only the left side is replicated: a tagged probe
+  replicates its batch rows, not the store.
 - tier 3 (|bucket| > star_threshold): boilerplate-class buckets are
   star-linked to the bucket's min-id representative — preserves cluster
   connectivity through verification without quadratic pair volume; volume
-  is observable via band_census().
+  is observable via band_census(). The cross rule has no star tier.
 
 Pairs found in multiple bands are deduped *before* expensive verification
 (manual early-dedup rewrite, SURVEY.md §4.2(5)).
@@ -39,11 +51,14 @@ from __future__ import annotations
 
 import logging
 import math
+import sys
 from functools import reduce
-from operator import and_
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# side tag of the cross rule's union: true on query rows, false on reference
+_QUERY = "_lsh_query"
 
 
 def explode_bands(
@@ -95,107 +110,110 @@ def pairs_from_keys(
     ~2·10⁹ pairs from a single boilerplate bucket — the silent quadratic
     trap the 500k-doc run hit (a 2% template family ⇒ ~m²/2 salt-tier
     pairs). When the derived boundary actually routes a bucket, a warning
-    logs the bucket size and its projected pair volume so exhaustive-mode
-    callers see the cap engage. Pass an explicit ``star_threshold`` to pin
-    the boundary (including sys.maxsize for truly exhaustive analysis)."""
-    from pyspark.sql import Window
-
-    spark = keyed.sparkSession
+    logs the largest bucket and its projected pair volume so
+    exhaustive-mode callers see the cap engage. Pass an explicit
+    ``star_threshold`` to pin the boundary (including sys.maxsize for truly
+    exhaustive analysis)."""
     derived = star_threshold is None
     if derived:
-        budget_members = int(math.isqrt(2 * star_pair_budget))
-        star_threshold = max(max_bucket, budget_members)
+        star_threshold = max(max_bucket, int(math.isqrt(2 * star_pair_budget)))
+    budget = star_pair_budget if derived else None
+    return _pairs(keyed, id_col, max_bucket, salt_buckets, star_threshold, new_col, budget)
 
+
+def _pairs(
+    keyed, id_col, max_bucket, salt_buckets, star_threshold, new_col, budget=None, cross=False
+):
+    """The one skew-tiered generator behind every pair rule (module
+    docstring). ``cross`` reads ``new_col`` as the query tag; ``budget``
+    (the pair budget a derived ``star_threshold`` came from) turns on the
+    star-routing warning."""
     # bucket size + representative as window aggregates over ONE exchange of
     # the keyed rows (the r5 census groupBy + equi-join evaluated keyed
     # twice and paid a second shuffle for the join). The window exchange
     # hash-partitions on (band_id, key), so the cached frame's partitioning
-    # lets tier 1's self-join run exchange-free. Feeds all tiers: persist so
-    # the upstream signature UDF + explode run once per row.
+    # lets tier 1's join run exchange-free. Feeds all tiers: persist so the
+    # upstream signature UDF + explode run once per row.
     w = Window.partitionBy("band_id", "key")
     k = keyed.withColumn("bucket_n", F.count(F.lit(1)).over(w)).withColumn(
         "rep", F.min(id_col).over(w)
     )
-    live = F.col("bucket_n") >= 2
+    n = F.col("bucket_n")
+    live = n >= 2
     if new_col:
-        # same window: whether the bucket has a new member, and the stored
-        # side's min id (the star tier's link into the stored component)
+        # same window: whether the bucket has a new (query) member, and the
+        # stored (reference) side's min id — the star tier's link into the
+        # stored component, and the cross rule's proof of a right side
         k = k.withColumn("_has_new", F.max(new_col).over(w)).withColumn(
             "_rep_old", F.min(F.when(~F.col(new_col), F.col(id_col))).over(w)
         )
         live = live & F.col("_has_new")
+        if cross:
+            live = live & F.col("_rep_old").isNotNull()
     k = k.filter(live).persist()
     # One cached aggregate decides which tiers exist. Buckets above
     # max_bucket are RARE by construction (boilerplate families), so at most
-    # scales the salt/star tiers are empty — yet the r5 plan always built
-    # their broadcast-block and 4-key self-join stages, several near-empty
-    # Spark jobs per call. This also subsumes the star-guard existence probe
-    # (same cached scan, one job).
-    mx = k.agg(F.max("bucket_n").alias("mx")).first()["mx"] or 0
+    # scales the salt/star tiers are empty and must not plan their stages;
+    # tier 2 is gated on its own size range, so a corpus whose hot buckets
+    # are all star-linked plans no salt join either. The same scan names
+    # the largest bucket for the star warning.
+    gate = k.agg(
+        F.max(n).alias("mx"),
+        F.max(F.when(n <= star_threshold, n)).alias("mx_salt"),
+        F.max_by(F.struct("band_id", "key"), n).alias("hot"),
+    ).first()
 
-    a, b = f"{id_col}_a", f"{id_col}_b"
+    a, b = (f"{id_col}_q", f"{id_col}_r") if cross else (f"{id_col}_a", f"{id_col}_b")
     tag = [new_col] if new_col else []
     lid, rid = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    keep, lo, hi = lid < rid, lid, rid
+    if cross:
+        keep = F.lit(True)
+    elif new_col:
+        keep = keep | ~F.col(f"r.{new_col}")
+        lo, hi = F.least(lid, rid), F.greatest(lid, rid)
 
-    def self_join(rows, on, *conds):
-        """The l < r pair rule (plus ``conds``) over one frame; tagged: new
-        rows on the left only, paired with a later new row or any stored
-        row, emitted as (least, greatest)."""
-        left, keep, lo, hi = rows, lid < rid, lid, rid
-        if new_col:
-            left = rows.where(F.col(new_col))
-            keep = keep | ~F.col(f"r.{new_col}")
-            lo, hi = F.least(lid, rid), F.greatest(lid, rid)
+    def sides(rows):
+        """The rule's (left, right) rows: self pairs all rows with all rows,
+        tagged puts only new rows on the left, cross puts query rows on the
+        left and reference rows on the right."""
+        if not new_col:
+            return rows, rows
+        left = rows.where(F.col(new_col))
+        return left, rows.where(~F.col(new_col)) if cross else rows
+
+    def pair_join(left, right, on):
         return (
             left.alias("l")
-            .join(rows.alias("r"), on)
-            .where(reduce(and_, conds, keep))
+            .join(right.alias("r"), on)
+            .where(keep)
             .select(lo.alias(a), hi.alias(b))
         )
 
+    def tier(cond):
+        return k.filter(cond).select("band_id", "key", id_col, *tag)
+
     # --- tier 1: plain equi-join
-    cold = k.filter(F.col("bucket_n") <= max_bucket).select("band_id", "key", id_col, *tag)
-    parts = [self_join(cold, ["band_id", "key"])]
+    parts = [pair_join(*sides(tier(n <= max_bucket)), ["band_id", "key"])]
 
-    if mx > max_bucket:
-        # --- tier 2: salted triangle blocks
-        warm = (
-            k.filter(
-                (F.col("bucket_n") > max_bucket) & (F.col("bucket_n") <= star_threshold)
-            )
-            .select("band_id", "key", id_col, *tag)
-            .withColumn(
-                "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
-            )
-        )
-        # pandas-backed local frame: a python-LIST createDataFrame plans as
-        # a pickled-RDD scan costing ~2.3 s of Python-stage overhead on
-        # every action that touches the salt tier (measured round 6); the
-        # pandas/Arrow path is a LocalTableScan
-        import pandas as pd
-
-        blocks = spark.createDataFrame(
-            pd.DataFrame(
-                [(i, j) for i in range(salt_buckets) for j in range(i, salt_buckets)],
-                columns=["bi", "bj"],
-            ),
-            "bi int, bj int",
-        )
-        rep = warm.join(
-            F.broadcast(blocks), (F.col("salt") == F.col("bi")) | (F.col("salt") == F.col("bj"))
-        )
+    if (gate["mx_salt"] or 0) > max_bucket:
+        # --- tier 2: salted equi-join — left rows on every salt, right rows
+        # on their own, so each pair of the rule meets on exactly one key
+        left, right = sides(tier((n > max_bucket) & (n <= star_threshold)))
+        salts = F.sequence(F.lit(0), F.lit(salt_buckets - 1))
         parts.append(
-            self_join(
-                rep,
-                ["band_id", "key", "bi", "bj"],
-                F.least("l.salt", "r.salt") == F.col("bi"),
-                F.greatest("l.salt", "r.salt") == F.col("bj"),
+            pair_join(
+                left.withColumn("salt", F.explode(salts)),
+                right.withColumn(
+                    "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
+                ),
+                ["band_id", "key", "salt"],
             )
         )
 
-    if mx > star_threshold:
+    if (gate["mx"] or 0) > star_threshold:
         # --- tier 3: star-link to representative (rep == min id, so rep < id)
-        star = k.filter(F.col("bucket_n") > star_threshold)
+        star = k.filter(n > star_threshold)
         if new_col:
             star = star.where(F.col(new_col))
             # a new representative also links to the stored min id
@@ -203,38 +221,25 @@ def pairs_from_keys(
                 star.where((F.col(id_col) == F.col("rep")) & F.col("_rep_old").isNotNull())
                 .select(F.col("rep").alias(a), F.col("_rep_old").alias(b))
             )
-        p3 = star.where(F.col(id_col) != F.col("rep")).select(
-            F.col("rep").alias(a), F.col(id_col).alias(b)
+        parts.append(
+            star.where(F.col(id_col) != F.col("rep")).select(
+                F.col("rep").alias(a), F.col(id_col).alias(b)
+            )
         )
-        parts.append(p3)
-        if derived:
+        if budget is not None:
             # guard visibility: when the budget-derived boundary actually
             # reroutes a bucket, say so loudly — an exhaustive-mode caller
-            # must not silently get star-linked pairs. Tiny cached lookup,
-            # only runs in the (rare) routed case.
-            hot = (
-                k.filter(F.col("bucket_n") > star_threshold)
-                .select("band_id", "key", "bucket_n")
-                .limit(1)
-                .collect()
-            )
-            n = int(hot[0]["bucket_n"]) if hot else mx
+            # must not silently get star-linked pairs
+            (band, key), m = gate["hot"], gate["mx"]
             logging.getLogger(__name__).warning(
                 "pairs_from_keys: bucket(s) over the %d-pair star budget "
                 "(e.g. band %s key %s: %d members ~ %d pairs) star-linked "
                 "instead of exhaustively paired; pass star_threshold "
                 "explicitly to override",
-                star_pair_budget,
-                hot[0]["band_id"] if hot else "?",
-                hot[0]["key"] if hot else "?",
-                n,
-                n * (n - 1) // 2,
+                budget, band, key, m, m * (m - 1) // 2,
             )
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.dropDuplicates([a, b])
+    out = reduce(DataFrame.unionByName, parts).dropDuplicates([a, b])
     # Materialize the (small) pair set eagerly so the keyed+census cache can
     # be released immediately — callers get a lineage-truncated DataFrame
     # instead of a plan that pins `k` for the application lifetime, and the
@@ -274,100 +279,18 @@ def cross_pairs_from_keys(
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Two-dataset candidate pairs (the reference's query × reference
-    ``dist`` mode, ``/root/reference/src/main.rs:353-401``): equi-join the
-    query key rows against the reference key rows on (band_id, key).
-    Returns distinct (id_q, id_r) — no triangular filter (the pair (q, r)
-    is ordered by role, not by id; J2 applies only in the same-files case,
-    which callers handle by routing to pairs_from_keys instead).
-
-    Skew: per-bucket pair volume is |Q_bucket|·|R_bucket|, and EITHER side
-    can be the hot one (a boilerplate family in the query set is as real as
-    one in the reference set). Buckets are handled symmetrically:
-
-    - both sides <= max_bucket: plain equi-join;
-    - reference side hot: salt the reference rows, replicate the query
-      rows to all ``salt_buckets`` salts;
-    - query side hot (reference cold): the mirror image.
-
-    A bucket hot on BOTH sides routes through the reference-hot tier (the
-    query replication there spreads it across the reference salts), so
-    every (q, r) pair is emitted exactly once before the final dedup."""
-    from pyspark.sql import Window
-
-    idq, idr = f"{id_col}_q", f"{id_col}_r"
-    spark = keyed_q.sparkSession
-
-    # per-side bucket sizes as a window aggregate over one exchange (the r5
-    # census groupBy + equi-join paid a second shuffle and evaluated each
-    # keyed side twice); persist both sides — they feed every tier branch
-    w = Window.partitionBy("band_id", "key")
-    rk = keyed_r.withColumn("r_n", F.count(F.lit(1)).over(w)).persist()
-    qk = keyed_q.withColumn("q_n", F.count(F.lit(1)).over(w)).persist()
-    # one tiny cached aggregate gates the hot tiers (same rationale as
-    # pairs_from_keys: buckets above max_bucket are rare, and the salted
-    # replication stages should not build when provably empty). Both sides'
-    # maxima ride ONE action — a union of the two single-row aggregates —
-    # so both persists fill in one Spark job instead of two round-trips.
-    mx_rows = (
-        rk.agg(F.max("r_n").alias("m")).withColumn("_s", F.lit("r"))
-        .unionByName(qk.agg(F.max("q_n").alias("m")).withColumn("_s", F.lit("q")))
-        .collect()
+    ``dist`` mode, ``/root/reference/src/main.rs:353-401``): every (q, r)
+    sharing a (band_id, key), as distinct (id_q, id_r). The pair is ordered
+    by role, not by id, and an id on both sides pairs with itself (J2
+    applies only in the same-files case, which callers route to
+    pairs_from_keys instead). The two key sets are tagged and unioned into
+    one generator run; no star tier, so the pair set is exhaustive and a
+    hot bucket on either side goes through the salt tier."""
+    cols = ["band_id", "key", id_col]
+    keyed = keyed_q.select(*cols, F.lit(True).alias(_QUERY)).unionByName(
+        keyed_r.select(*cols, F.lit(False).alias(_QUERY))
     )
-    mx = {r["_s"]: r["m"] or 0 for r in mx_rows}
-    mx_r, mx_q = mx.get("r", 0), mx.get("q", 0)
-    salts = spark.range(salt_buckets).select(F.col("id").cast("int").alias("salt"))
-
-    def _salt(df):
-        return df.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
-        )
-
-    r_cold = rk.filter(F.col("r_n") <= max_bucket).select("band_id", "key", id_col)
-    q_cold = qk.filter(F.col("q_n") <= max_bucket).select("band_id", "key", id_col)
-
-    # tier 1: cold x cold — plain equi-join
-    p1 = (
-        q_cold.alias("q")
-        .join(r_cold.alias("r"), ["band_id", "key"])
-        .select(F.col(f"q.{id_col}").alias(idq), F.col(f"r.{id_col}").alias(idr))
-    )
-    parts = [p1]
-
-    if mx_r > max_bucket:
-        # tier 2: reference hot — salt r, replicate every matching q row
-        r_hot = rk.filter(F.col("r_n") > max_bucket).select("band_id", "key", id_col)
-        hot_r_keys = r_hot.select("band_id", "key").distinct()
-        q_rep = qk.select("band_id", "key", id_col).join(
-            hot_r_keys, ["band_id", "key"], "left_semi"
-        ).crossJoin(F.broadcast(salts))
-        p2 = (
-            q_rep.alias("q")
-            .join(_salt(r_hot).alias("r"), ["band_id", "key", "salt"])
-            .select(F.col(f"q.{id_col}").alias(idq), F.col(f"r.{id_col}").alias(idr))
-        )
-        parts.append(p2)
-
-    if mx_q > max_bucket:
-        # tier 3: query hot, reference cold — salt q, replicate the cold r rows
-        q_hot = qk.filter(F.col("q_n") > max_bucket).select("band_id", "key", id_col)
-        hot_q_keys = q_hot.select("band_id", "key").distinct()
-        r_rep = r_cold.join(hot_q_keys, ["band_id", "key"], "left_semi").crossJoin(
-            F.broadcast(salts)
-        )
-        p3 = (
-            _salt(q_hot).alias("q")
-            .join(r_rep.alias("r"), ["band_id", "key", "salt"])
-            .select(F.col(f"q.{id_col}").alias(idq), F.col(f"r.{id_col}").alias(idr))
-        )
-        parts.append(p3)
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.dropDuplicates([idq, idr]).localCheckpoint(eager=True)
-    rk.unpersist()
-    qk.unpersist()
-    return out
+    return _pairs(keyed, id_col, max_bucket, salt_buckets, sys.maxsize, _QUERY, cross=True)
 
 
 def cross_lsh_candidate_pairs(

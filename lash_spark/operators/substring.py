@@ -328,9 +328,10 @@ def cross_substring_overlap(
     Same two-phase shape as exact_substring_pairs, crossed: winnowed
     fingerprints are a complete candidate generator (any shared substring
     of length >= min_len shares a selected fingerprint), candidates come
-    from the symmetric skew-tiered cross equi-join (either side's
-    boilerplate family salts), verification is the JVM `arrays_overlap`
-    window-set check. No per-pair Python."""
+    from the exhaustive cross rule of the skew-tiered generator (a hot
+    fingerprint on either side goes through the salted equi-join),
+    verification is the JVM `arrays_overlap` window-set check. No per-pair
+    Python."""
     from lash_spark.operators.lsh import cross_pairs_from_keys
 
     dq = docs_q.select(F.col(id_col), F.col(text_col))

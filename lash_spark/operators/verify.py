@@ -17,16 +17,16 @@ calls:
    spark.sql.autoBroadcastJoinThreshold)``; above that the same plan
    degrades to shuffled joins.
 3. **Signature estimate.** MinHash register match fraction, filtered at
-   ``threshold - margin``. An optional per-document degree cap keeps each
-   document's strongest-estimate neighbours.
+   ``threshold - _ESTIMATE_MARGIN``. An optional per-document degree cap
+   keeps each document's strongest-estimate neighbours.
 4. **Exact shingle Jaccard** |A∩B| / |A∪B| over the sorted-unique 64-bit
    shingle-hash sets, kept at ``jaccard >= threshold``.
 
 Kernel: steps 3 and 4 are ONE scalar pandas UDF (``_verify_kernel``), one
 Arrow round-trip per verify. It computes the estimate for every joined row
-and intersects only the rows whose estimate passes ``threshold - margin``.
-It replaced a JVM pair (the ``zip_with`` fold and ``array_intersect``) and
-a two-UDF Arrow pair that a member-set volume gate chose between. On
+and intersects only the rows whose estimate passes that floor. It
+replaced a JVM pair (the ``zip_with`` fold and ``array_intersect``) and a
+two-UDF Arrow pair that a member-set volume gate chose between. On
 perfbench ``boilerplate_skew`` (6137 candidate pairs; 4-vCPU VM,
 ``local[2]``) it took ``verify.s`` from 4.9 s to 1.9 s and the median
 ``docs_per_s`` from 126 to 162 (seed 7, 10 alternating pairs) against the
@@ -58,6 +58,10 @@ from lash_spark.hashing import batch_shingle_hash_segments
 # is safe (one build + per-executor residency, vs shuffling the pair table
 # twice with array payloads aboard).
 _BROADCAST_BYTES = 128 * 1024 * 1024
+# The estimate prefilter keeps pairs at est >= threshold - this margin; the
+# estimate is coarse (128 registers), so the margin keeps it from dropping
+# pairs whose exact Jaccard passes.
+_ESTIMATE_MARGIN = 0.15
 
 
 def _encode(texts: pd.Series) -> "list[bytes]":
@@ -159,7 +163,6 @@ def _verify(
     id_col: str,
     text_col: str,
     threshold: float,
-    margin: float,
     cap: int | None,
 ) -> DataFrame:
     """The one verify path: pairs (``col_a``, ``col_b``) + ``est_jaccard``
@@ -228,7 +231,7 @@ def _verify(
         return F.broadcast(v) if side_bytes < bcast_cap else v
 
     va, vb = view(0, "_va"), view(len(tables) - 1, "_vb")
-    floor = threshold - margin
+    floor = threshold - _ESTIMATE_MARGIN
     kernel = _verify_kernel(floor)(
         F.col("_va.minhash"), F.col("_vb.minhash"),
         F.col("_va.shingles"), F.col("_vb.shingles"),
@@ -272,7 +275,6 @@ def cross_verify_pairs(
     id_col: str = "url",
     text_col: str = "norm_text",
     threshold: float = 0.8,
-    estimate_margin: float = 0.15,
     *,
     sig_q: DataFrame,
     sig_r: DataFrame,
@@ -284,7 +286,7 @@ def cross_verify_pairs(
     q, r = f"{id_col}_q", f"{id_col}_r"
     return _verify(
         pairs, (sig_q, docs_q), (sig_r, docs_r), q, r, params, id_col, text_col,
-        threshold, estimate_margin, None,
+        threshold, None,
     ).select(q, r, "jaccard")
 
 
@@ -295,7 +297,6 @@ def verify_pairs(
     id_col: str = "url",
     text_col: str = "norm_text",
     threshold: float = 0.8,
-    estimate_margin: float = 0.15,
     *,
     sig_df: DataFrame,
     with_distances: bool = True,
@@ -303,7 +304,7 @@ def verify_pairs(
 ) -> DataFrame:
     """Candidates -> verified near-dup pairs with est_jaccard, exact
     jaccard (+ mash distances). Pairs below the estimate threshold minus
-    ``estimate_margin`` never reach the exact intersection.
+    ``_ESTIMATE_MARGIN`` never reach the exact intersection.
 
     ``max_pairs_per_doc``: degree cap for boilerplate mega-clusters — an
     m-member template family is a true near-clique with m(m-1)/2 pairs
@@ -320,7 +321,7 @@ def verify_pairs(
     side = (sig_df, docs)
     out = _verify(
         pairs, side, side, f"{id_col}_a", f"{id_col}_b", params, id_col, text_col,
-        threshold, estimate_margin, max_pairs_per_doc,
+        threshold, max_pairs_per_doc,
     )
     if with_distances:
         out = with_distance_columns(

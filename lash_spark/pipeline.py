@@ -241,7 +241,6 @@ def cross_dataset_pairs(
     threshold: float = 0.8,
     lsh_min_recall: float = 0.995,
     same_files: bool = False,
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """The reference's primary two-dataset ``dist`` mode
     (``/root/reference/src/main.rs:353-401``, ``src/utils.rs:150-161``):
@@ -256,10 +255,7 @@ def cross_dataset_pairs(
     the triangular J2 rule applies instead of the ordered q×r semantics.
 
     The signature tables are persisted (each feeds the candidate AND
-    verify stages); repeated callers (streaming micro-batches) pass
-    ``unpersist_into`` to collect the persisted handles and release them
-    after consuming the result — otherwise each call pins a corpus-sized
-    cache entry for the session's lifetime.
+    verify stages) and stay cached for the session.
     """
     params = params or SketchParams()
     params.validate_compatible(params_r or params)
@@ -273,8 +269,6 @@ def cross_dataset_pairs(
         docs_r.select(id_col, text_col), text_col=text_col, version=params.normalize_version
     )
     sig_q = build_signatures(nq, params, plan, id_col=id_col).persist()
-    if unpersist_into is not None:
-        unpersist_into.append(sig_q)
     if same_files:
         cands = lsh_candidate_pairs(sig_q, id_col=id_col)
         return verify_pairs(
@@ -282,8 +276,6 @@ def cross_dataset_pairs(
             sig_df=sig_q, with_distances=False,
         ).select(f"{id_col}_a", f"{id_col}_b", "jaccard")
     sig_r = build_signatures(nr, params, plan, id_col=id_col).persist()
-    if unpersist_into is not None:
-        unpersist_into.append(sig_r)
     cands = cross_lsh_candidate_pairs(sig_q, sig_r, id_col=id_col)
     return cross_verify_pairs(
         cands, nq, nr, params, id_col=id_col, threshold=threshold,

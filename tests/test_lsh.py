@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,6 +47,21 @@ def test_pairs_salted_tier_equals_plain(spark):
     salted = pairs_from_keys(keyed, max_bucket=5, salt_buckets=4, star_threshold=10_000).collect()
     assert {(r.url_a, r.url_b) for r in salted} == {(r.url_a, r.url_b) for r in plain}
     assert len(salted) == len({(r.url_a, r.url_b) for r in salted})  # no dupes pre-dedup
+
+
+def test_pairs_salted_self_rule_matches_combinations(spark):
+    """The self rule over forced-salt buckets in two bands equals the
+    itertools.combinations of each bucket, each pair once."""
+    buckets = {10: list(range(40)), 11: list(range(30, 55)), 12: [100, 101, 102]}
+    rows = [(b, k, i) for b in (0, 1) for k, ids in buckets.items() for i in ids]
+    keyed = spark.createDataFrame(rows, "band_id int, key bigint, url bigint")
+    got = [
+        (r.url_a, r.url_b)
+        for r in pairs_from_keys(keyed, max_bucket=5, salt_buckets=3).collect()
+    ]
+    want = {p for ids in buckets.values() for p in itertools.combinations(sorted(ids), 2)}
+    assert len(got) == len(set(got))
+    assert set(got) == want
 
 
 def test_pairs_star_tier(spark):
@@ -176,3 +193,73 @@ def test_tagged_star_tier_keeps_hot_buckets_connected(spark):
     # its 435 pairs
     hot = set(stored[1])
     assert len({e for e in edges if e[0] in hot}) < 2 * len(hot)
+
+
+def _plans_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result, the number of Spark
+    jobs the group ran and the executed physical plans of the SQL
+    executions it started (read from the SQL status store)."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = set(executions())
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [p for i, p in executions().items() if i not in before]
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_candidate_calls_plan_no_nested_loop_join(spark):
+    """Every candidate call, with the salt tier forced, plans equi-joins
+    only: no BroadcastNestedLoopJoin or CartesianProduct in any executed
+    plan (the candidates are checkpointed eagerly, so an audit of the
+    downstream plan cannot see these). Job counts are pinned: the census
+    gate, the eager checkpoint and AQE's per-stage jobs. A call whose hot
+    buckets are all star-linked plans no salt join and runs fewer jobs."""
+    from lash_spark.operators.lsh import cross_pairs_from_keys
+
+    hot = {10: list(range(40)), 11: [100, 101, 102]}
+    rows = [(0, k, i, i % 3 == 0) for k, ids in hot.items() for i in ids]
+    tagged = spark.createDataFrame(rows, "band_id int, key bigint, url bigint, new boolean")
+    keyed = tagged.drop("new")
+    starred = _keyed(spark, {7: list(range(100, 140)), 8: list(range(200, 230))})
+    q = spark.createDataFrame(
+        [(f"q{i}", 0, 7) for i in range(40)], "url string, band_id int, key long"
+    )
+    r = spark.createDataFrame(
+        [(f"r{i}", 0, 7) for i in range(5)], "url string, band_id int, key long"
+    )
+    calls = {
+        "self": lambda: pairs_from_keys(
+            keyed, max_bucket=5, salt_buckets=4, star_threshold=10_000
+        ),
+        "tagged": lambda: pairs_from_keys(
+            tagged, max_bucket=5, salt_buckets=4, star_threshold=10_000, new_col="new"
+        ),
+        "all_star": lambda: pairs_from_keys(
+            starred, max_bucket=2, salt_buckets=2, star_threshold=10
+        ),
+        "cross": lambda: cross_pairs_from_keys(q, r, id_col="url", max_bucket=8),
+    }
+    jobs, sizes = {}, {}
+    for name, fn in calls.items():
+        out, jobs[name], plans = _plans_in_group(spark, f"cand_{name}", fn)
+        sizes[name] = out.count()
+        assert plans, name
+        for p in plans:
+            assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p, name
+    assert sizes == {"self": 783, "tagged": 457, "all_star": 68, "cross": 200}
+    assert jobs == {"self": 8, "tagged": 8, "all_star": 7, "cross": 8}

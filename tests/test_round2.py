@@ -5,6 +5,8 @@ resume stage invalidation, streaming idempotence, model-0 alias, banded SRP.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -436,18 +438,38 @@ def test_register_udf_honors_estimator(spark):
         assert abs(v - truth) / truth < 0.2, (e, v, truth)
 
 
-def test_cross_pairs_symmetric_skew(spark):
-    """A hot QUERY-side bucket must still produce all pairs (salted tier 3)."""
+_CROSS_CASES = {  # per (band_id, key): (query ids, reference ids)
+    "query_hot": {(0, 7): ([f"q{i}" for i in range(40)], [f"r{j}" for j in range(5)])},
+    "reference_hot": {(0, 7): ([f"q{i}" for i in range(5)], [f"r{j}" for j in range(40)])},
+    "both_hot": {
+        (0, 7): ([f"q{i}" for i in range(30)], [f"r{j}" for j in range(30)]),
+        (1, 7): ([f"q{i}" for i in range(10, 20)], [f"r{j}" for j in range(25)]),
+        (1, 9): (["q1", "q2"], ["r3"]),  # cold bucket beside the hot ones
+    },
+    "shared_id": {(0, 7): ([f"d{i}" for i in range(0, 20)], [f"d{i}" for i in range(10, 30)])},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CROSS_CASES))
+def test_cross_pairs_symmetric_skew(spark, case):
+    """With max_bucket forced to 8 (every case has a bucket of 25 or more
+    rows) the salt tier runs on whichever side is hot, and the cross rule still returns exactly the Python cross product
+    of every bucket, each pair once; an id on both sides pairs with
+    itself."""
     from lash_spark.operators.lsh import cross_pairs_from_keys
 
-    q = spark.createDataFrame(
-        [(f"q{i}", 0, 7) for i in range(40)], "url string, band_id int, key long"
-    )
-    r = spark.createDataFrame(
-        [(f"r{i}", 0, 7) for i in range(5)], "url string, band_id int, key long"
-    )
-    got = {
-        (x.url_q, x.url_r)
-        for x in cross_pairs_from_keys(q, r, id_col="url", max_bucket=8).collect()
-    }
-    assert got == {(f"q{i}", f"r{j}") for i in range(40) for j in range(5)}
+    buckets = _CROSS_CASES[case]
+    schema = "url string, band_id int, key long"
+
+    def side(i):
+        return spark.createDataFrame(
+            [(u, b, k) for (b, k), ids in buckets.items() for u in ids[i]], schema
+        )
+
+    rows = cross_pairs_from_keys(side(0), side(1), id_col="url", max_bucket=8).collect()
+    got = [(x.url_q, x.url_r) for x in rows]
+    want = {(q, r) for qs, rs in buckets.values() for q, r in itertools.product(qs, rs)}
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    if case == "shared_id":  # d10..d19 are on both sides
+        assert {(f"d{i}", f"d{i}") for i in range(10, 20)} <= set(got)

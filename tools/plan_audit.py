@@ -7,9 +7,14 @@ plan-shape properties the 100 TB design depends on:
   html/lang/warc_ts into the dedup pipeline;
 - pushed-down predicates reach the parquet scan (PushedFilters non-empty
   for the filtered queries);
-- no CartesianProduct / BroadcastNestedLoopJoin anywhere in the dedup
-  pipeline (the only sanctioned NLJs are the bounded oracle-parity queries
-  in __spark_entry__ and the broadcast query side of brute-force ANN);
+- no CartesianProduct / BroadcastNestedLoopJoin in the verify plan of
+  the dedup pipeline (the only sanctioned NLJs are the bounded
+  oracle-parity queries in __spark_entry__ and the broadcast query side of
+  brute-force ANN). This check reads the plan above the candidates' eager
+  ``localCheckpoint``, so it cannot see the candidate generator itself;
+  ``tests/test_lsh.py::test_candidate_calls_plan_no_nested_loop_join``
+  asserts that on the executed plans of every pair rule with the salt
+  tier forced;
 - the small sides the engine marks broadcast actually broadcast.
 
 Usage: python tools/plan_audit.py [sf_dir]
