@@ -25,6 +25,8 @@ the join reuses the skew-tiered pair generator; verification is JVM-side.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -32,7 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lash_spark.hashing import U64, rolling_window_hashes
-from lash_spark.operators.lsh import pairs_from_keys
+from lash_spark.operators.lsh import cross_pairs_from_keys, pairs_from_keys
+from lash_spark.operators.verify import _broadcast_cap
 
 _U64_MAX = U64(0xFFFFFFFFFFFFFFFF)
 
@@ -222,6 +225,66 @@ def make_lcs_udf(min_len: int):
     return lcs_udf
 
 
+def _fingerprint_keys(d: DataFrame, min_len: int, k: int, id_col: str, text_col: str):
+    """(id, key, band_id) pair-generator rows, one per winnowed fingerprint."""
+    fp = make_fingerprint_udf(min_len, k)(F.col(text_col))
+    return d.select(F.col(id_col), F.explode(fp).alias("key"), F.lit(0).alias("band_id"))
+
+
+def _overlap_pairs(
+    pairs: DataFrame, side_a: DataFrame, side_b: DataFrame, col_a: str, col_b: str,
+    id_col: str, text_col: str, min_len: int,
+) -> DataFrame:
+    """The one window-set verify: the (``col_a``, ``col_b``) rows of
+    ``pairs`` whose documents share a length-``min_len`` window.
+    ``side_a`` / ``side_b``: the (id, text) docs each role's ids come from;
+    pass the same frame for a self-join (one table under two aliases)."""
+    win = make_window_set_udf(min_len)
+
+    def table(d, *cols):
+        members = reduce(
+            DataFrame.unionByName, [pairs.select(F.col(c).alias(id_col)) for c in cols]
+        ).distinct()
+        # materialized once (the window UDF must not run per join side),
+        # lazily: the stats action below both fills and measures it
+        return (
+            d.join(members, id_col, "left_semi")
+            .select(F.col(id_col), win(F.col(text_col)).alias("ws"))
+            .localCheckpoint(eager=False)
+        )
+
+    if side_b is side_a:
+        tables = [table(side_a, col_a, col_b)]
+    else:
+        tables = [table(side_a, col_a), table(side_b, col_b)]
+    # one stats action for all tables, grouped by table: one exchange
+    sizes = reduce(
+        DataFrame.unionByName,
+        [t.select(F.lit(i).alias("_s"), F.size("ws").alias("_n")) for i, t in enumerate(tables)],
+    )
+    stats = {
+        s: (n, tot)
+        for s, n, tot in sizes.groupBy("_s").agg(F.count(F.lit(1)), F.sum("_n")).collect()
+    }
+    cap = _broadcast_cap(pairs.sparkSession)
+
+    def view(i, alias):
+        # aliased views of one checkpointed relation, keyed on the same
+        # column: a self-join's second join reuses the first's broadcast
+        # (or shuffled) exchange instead of building it twice
+        n, tot = stats.get(i, (0, 0))  # an empty table has no stats row
+        v = tables[i].alias(alias)
+        return F.broadcast(v) if tot * 8 + n * 48 < cap else v
+
+    wa, wb = view(0, "_wa"), view(len(tables) - 1, "_wb")
+    return (
+        pairs.join(wa, F.col(col_a) == F.col(f"_wa.{id_col}"))
+        .join(wb, F.col(col_b) == F.col(f"_wb.{id_col}"))
+        .filter(F.arrays_overlap(F.col("_wa.ws"), F.col("_wb.ws")))
+        .select(col_a, col_b)
+    )
+
+
 def exact_substring_pairs(
     docs: DataFrame,
     min_len: int = 256,
@@ -240,7 +303,8 @@ def exact_substring_pairs(
 
     Winnowed-fingerprint equi-join (complete generator) -> per-doc
     length-min_len window-hash sets computed once (map-only Arrow UDF) ->
-    JVM `arrays_overlap` verify. No per-pair Python anywhere.
+    JVM `arrays_overlap` verify (:func:`_overlap_pairs`). No per-pair
+    Python anywhere.
 
     ``star_threshold``: boilerplate families (one shared block across m
     docs) put that block's fingerprints in m-sized buckets, and pair
@@ -257,55 +321,15 @@ def exact_substring_pairs(
     d = docs.select(F.col(id_col), F.col(text_col))
     if candidates is not None:
         d = d.join(candidates.select(id_col).distinct(), id_col, "left_semi")
-    fp = make_fingerprint_udf(min_len, k)
-    keyed = (
-        d.withColumn("fp", fp(F.col(text_col)))
-        .select(F.col(id_col), F.explode("fp").alias("key"))
-        .withColumn("band_id", F.lit(0))
-    )
     pairs = pairs_from_keys(
-        keyed,
+        _fingerprint_keys(d, min_len, k, id_col, text_col),
         id_col=id_col,
         max_bucket=max_bucket,
         star_threshold=star_threshold,
         star_pair_budget=star_pair_budget,
     )
-    a, b = f"{id_col}_a", f"{id_col}_b"
-    cand_ids = (
-        pairs.select(F.col(a).alias(id_col))
-        .unionByName(pairs.select(F.col(b).alias(id_col)))
-        .distinct()
-    )
-    wsets = (
-        d.join(cand_ids, id_col, "left_semi")
-        .select(
-            F.col(id_col), make_window_set_udf(min_len)(F.col(text_col)).alias("ws")
-        )
-        # materialize ONCE: the set subtree feeds both join sides with
-        # different join keys, so exchange reuse never fires and the window
-        # UDF (plus the semi-join above it) would run twice — the same
-        # defect the verify side tables avoid (~2x on the verify step).
-        # Eager: the measured-broadcast decision needs the real footprint.
-        .localCheckpoint(eager=True)
-    )
-    st = wsets.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.size("ws")).alias("tot")
-    ).first()
-    from lash_spark.operators.verify import _broadcast_cap
-
-    # aliased views of the one materialized relation, keyed on the same
-    # column: the second join reuses the first's broadcast (or shuffled)
-    # exchange instead of building it twice (see verify._verify)
-    wa, wb = wsets.alias("_wa"), wsets.alias("_wb")
-    if (st["tot"] or 0) * 8 + (st["n"] or 0) * 48 < _broadcast_cap(
-        pairs.sparkSession
-    ):
-        wa, wb = F.broadcast(wa), F.broadcast(wb)
-    return (
-        pairs.join(wa, F.col(a) == F.col(f"_wa.{id_col}"))
-        .join(wb, F.col(b) == F.col(f"_wb.{id_col}"))
-        .filter(F.arrays_overlap(F.col("_wa.ws"), F.col("_wb.ws")))
-        .select(a, b)
+    return _overlap_pairs(
+        pairs, d, d, f"{id_col}_a", f"{id_col}_b", id_col, text_col, min_len
     )
 
 
@@ -329,36 +353,19 @@ def cross_substring_overlap(
     fingerprints are a complete candidate generator (any shared substring
     of length >= min_len shares a selected fingerprint), candidates come
     from the exhaustive cross rule of the skew-tiered generator (a hot
-    fingerprint on either side goes through the salted equi-join),
-    verification is the JVM `arrays_overlap` window-set check. No per-pair
-    Python."""
-    from lash_spark.operators.lsh import cross_pairs_from_keys
-
+    fingerprint on either side goes through the salted equi-join), and
+    :func:`_overlap_pairs` verifies them with one window-set table per
+    side. No per-pair Python."""
     dq = docs_q.select(F.col(id_col), F.col(text_col))
     dr = docs_r.select(F.col(id_col), F.col(text_col))
-    fp = make_fingerprint_udf(min_len, k)
-
-    def keys(d):
-        return (
-            d.withColumn("fp", fp(F.col(text_col)))
-            .select(F.col(id_col), F.explode("fp").alias("key"))
-            .withColumn("band_id", F.lit(0))
-        )
-
-    pairs = cross_pairs_from_keys(keys(dq), keys(dr), id_col=id_col, max_bucket=max_bucket)
-    qc, rc = f"{id_col}_q", f"{id_col}_r"
-    win = make_window_set_udf(min_len)
-    wq = dq.join(pairs.select(F.col(qc).alias(id_col)).distinct(), id_col, "left_semi").select(
-        F.col(id_col).alias(qc), win(F.col(text_col)).alias("ws_q")
+    pairs = cross_pairs_from_keys(
+        _fingerprint_keys(dq, min_len, k, id_col, text_col),
+        _fingerprint_keys(dr, min_len, k, id_col, text_col),
+        id_col=id_col,
+        max_bucket=max_bucket,
     )
-    wr = dr.join(pairs.select(F.col(rc).alias(id_col)).distinct(), id_col, "left_semi").select(
-        F.col(id_col).alias(rc), win(F.col(text_col)).alias("ws_r")
-    )
-    return (
-        pairs.join(wq, qc)
-        .join(wr, rc)
-        .filter(F.arrays_overlap("ws_q", "ws_r"))
-        .select(qc, rc)
+    return _overlap_pairs(
+        pairs, dq, dr, f"{id_col}_q", f"{id_col}_r", id_col, text_col, min_len
     )
 
 

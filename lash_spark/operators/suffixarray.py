@@ -6,10 +6,14 @@ Builds depth-truncated suffix ranks over the corpus with **prefix doubling**
 self-join on (doc, pos+step) plus a dense re-ranking of the (rank, rank2)
 pairs. After the final round, two positions have equal rank iff their
 suffixes agree on the first ``depth`` characters — so for depth = L, rank
-equality is EXACT length-L window equality (codepoint-level, no hash collisions;
-== byte-level on ASCII corpora),
-and `substring_pairs_sa` turns the rank groups into doc pairs through the
-same skew-tiered pair generator the LSH path uses.
+equality is EXACT length-L window equality (codepoint-level, no hash
+collisions; == byte-level on ASCII corpora).
+
+Pair detection (`substring_pairs_sa`) and span counting
+(`repeated_windows`) need no ranks: both read one window census
+(`_shared_windows`), an 8-byte hash prefilter followed by raw-substring
+keys for the surviving positions, and the pair pass feeds those keys to
+the same skew-tiered pair generator the LSH path uses.
 
 Scale notes: this pass explodes one row per character position, so like the
 reference-class suffix-array dedup (Lee et al. 2022, "Deduplicating
@@ -17,11 +21,12 @@ Training Data Makes Language Models Better") it is the *bounded* second
 pass — run it corpus-wide at small scale or restricted to candidate
 documents (`candidates=`) at web scale. The winnowing engine
 (operators/substring.py) is the probabilistic-candidate production path;
-this one is its exact, hash-free twin plus a true lexicographic suffix
-order for maximal-repeat analyses. Dense ranking of distinct keys uses a
-distributed range-partitioned sort + broadcast partition offsets +
-Arrow-batch index assignment (no single-partition window, no per-row
-Python serialization anywhere in the DAG).
+this one is its exact twin (hashes serve only as a complete prefilter)
+plus a true lexicographic suffix order for maximal-repeat analyses. Dense
+ranking of distinct keys uses a distributed range-partitioned sort +
+broadcast partition offsets + Arrow-batch index assignment (no
+single-partition window, no per-row Python serialization anywhere in the
+DAG).
 """
 
 from __future__ import annotations
@@ -130,7 +135,6 @@ def suffix_ranks(
     id_col: str = "url",
     text_col: str = "norm_text",
     checkpoint: bool = True,
-    compaction="auto",
 ) -> DataFrame:
     """(id, pos, sa_rank) for every character position: sa_rank is the dense
     lexicographic rank of the suffix truncated to ``depth`` characters
@@ -138,17 +142,12 @@ def suffix_ranks(
     characters remaining compare with an end sentinel (-1) that sorts low,
     matching ordinary suffix order for the truncated view. Empty-text docs
     contribute no positions (without the filter, ``sequence(1, 0)`` counts
-    DOWN and the init pack hits index 0).
-
-    ``compaction``: "auto" computes the alphabet compaction here; pass a
-    precomputed ``_alphabet_compaction`` result (or None for the generic
-    21-bit packing) to avoid re-running the distinct-chars sweep when the
-    caller already did."""
+    DOWN and the init pack hits index 0)."""
     # NOTE: deliberately NOT fan_out'd — measured at sf0.1 (round 6): the
     # doubling pipeline reaches its first exchange (the dense-rank
     # distinct/sort) almost immediately, so the extra repartition cost more
     # than the single-partition map work it parallelized (2.3 -> 3.5 s),
-    # unlike the census operators below where the explode+hash pass
+    # unlike the window census below where the explode+hash pass
     # dominates (2-3x wins there).
     d = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")).filter(
         F.length("_t") >= 1
@@ -162,10 +161,7 @@ def suffix_ranks(
     # non-BMP alphabets: width 21 (> 0x110000 covers every codepoint,
     # 3 * 21 = 63 bits). Units are CODEPOINTS, matching SQL substr
     # semantics (== bytes on ASCII corpora).
-    if compaction == "auto":
-        compact = _alphabet_compaction(d) if depth > 3 else None
-    else:
-        compact = compaction
+    compact = _alphabet_compaction(d) if depth > 3 else None
     if compact is not None:
         remap, width = compact
         d = d.withColumn("_t", remap)
@@ -223,72 +219,46 @@ def suffix_ranks(
     return r.select(F.col("_id").alias(id_col), "pos", F.col("r").alias("sa_rank"))
 
 
-_MAX_PACKED_WORDS = 8  # widest composite window key: 8 longs = 64 bytes
+def _shared_windows(
+    docs: DataFrame,
+    min_len: int,
+    id_col: str,
+    text_col: str,
+    candidates: DataFrame | None,
+) -> DataFrame:
+    """(_id, key) rows, key the raw length-``min_len`` window text, for
+    every position whose window may occur in two documents — the one
+    census behind :func:`substring_pairs_sa` and :func:`repeated_windows`.
+    ``candidates`` (ids) restricts the docs first.
 
+    Two-pass shape (guide §2.3 "shuffle keys and metadata instead of
+    payloads"): shuffling a wide exact key for EVERY character position
+    into one global distinct dominated the whole query (20.6 s vs 7.4 s
+    for the winnowing twin at sf0.1; VERDICT r5 #3).
 
-def _packed_window_keys(d: DataFrame, min_len: int, compaction="auto") -> DataFrame | None:
-    """Zero-round window keying, unlocked by alphabet compaction: with the
-    corpus alphabet dense-remapped to ``bits`` bits per char, one signed
-    long packs w = 63 // bits characters, so the full min_len window is
-    captured EXACTLY by ceil(min_len / w) packed words whose windows tile
-    [pos, pos + min_len). Struct equality of those words ⇔ character
-    equality of the window — injective packing, no hashes — so pair
-    detection needs NO prefix-doubling rounds at all: one position explode
-    + one distinct replaces 2-4 full distinct+sort+join sweeps over every
-    character position (the shuffle is one pass at ≤64 B/key instead of
-    several at 16-24 B). Returns (_id, key) rows or None when compaction
-    is unavailable or the key would exceed _MAX_PACKED_WORDS words (huge
-    alphabets fall back to the rank-composite path).
+    1. **Hash census** (8 B/key, map-side partial agg): per-position
+       xxhash64 of the window, groupBy(h) keeping only min(id)/max(id) —
+       a hash whose min and max doc ids agree lives in one document and
+       can never produce a pair. Equal windows always hash equal, so this
+       prefilter is COMPLETE: no cross-doc window group is lost, and every
+       occurrence of a surviving window survives with it.
+    2. **Raw keys for the survivors**: positions carrying a surviving hash
+       (genuinely repeated blocks plus the odd collision) re-keyed on the
+       RAW substring, so groups are decided by character equality alone —
+       a collision admits a spurious survivor, never a wrong result, like
+       the Bloom-prefilter pattern of guide §3.2."""
+    from lash_spark.operators.normalize import fan_out
 
-    ``d`` must have columns (_id, _t); rows are (_id, pos, key), pos
-    1-based. ``compaction``: "auto" computes it here; callers that already
-    ran ``_alphabet_compaction`` pass its result to skip the sweep."""
-    compact = _alphabet_compaction(d) if compaction == "auto" else compaction
-    if compact is None:
-        return None
-    remap, bits = compact
-    w = min(63 // bits, min_len)
-    n_words = -(-min_len // w)
-    if n_words > _MAX_PACKED_WORDS:
-        return None
-    # word i covers [o_i, o_i + w); offsets clamp so the last word ends at
-    # exactly min_len (overlap is fine: union coverage is what matters)
-    offsets = [min(i * w, min_len - w) for i in range(n_words)]
-    d2 = d.withColumn("_t", remap).withColumn(
-        "_bp",
-        F.expr(
-            "transform(sequence(1, length(_t)), i -> ascii(substring(_t, i, 1)) + 1)"
-        ),
-    )
-    weights = [(1 << bits) ** (w - 1 - j) for j in range(w)]
-
-    def word(start: str) -> str:
-        return " + ".join(
-            f"element_at(_bp, {start} + {j}) * CAST({wt} AS BIGINT)"
-            for j, wt in enumerate(weights)
-        )
-
-    fields = ", ".join(f"'k{i}', {word(f'(p + {o})')}" for i, o in enumerate(offsets))
+    d = docs.select(F.col(id_col), F.col(text_col))
+    if candidates is not None:
+        d = d.join(candidates.select(id_col).distinct(), id_col, "left_semi")
+    # the per-position explode+hash passes run on the INPUT partitioning —
+    # a single-file scan would run them single-core (measured ~2 s/pass at
+    # sf0.1 on 1 partition); no-op on well-partitioned inputs
+    d = fan_out(d.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")))
     # docs shorter than min_len contribute no positions (explicit branch:
-    # sequence(1, n) with n <= 0 would count DOWN, not produce empty)
-    return d2.select(
-        "_id",
-        F.posexplode(
-            F.expr(
-                f"if(length(_t) < {min_len}, "
-                f"array(), "
-                f"transform(sequence(1, length(_t) - {min_len} + 1), "
-                f"p -> named_struct({fields})))"
-            )
-        ).alias("_p0", "key"),
-    ).select("_id", (F.col("_p0") + 1).alias("pos"), "key")
-
-
-def _window_pos_hashes(d2: DataFrame, min_len: int) -> DataFrame:
-    """(_id, pos, h) rows: a 64-bit JVM hash of every length-``min_len``
-    character window (pos 1-based). Docs shorter than min_len contribute no
-    positions (explicit branch: sequence(1, n) with n <= 0 counts DOWN)."""
-    return d2.select(
+    # sequence(1, n) with n <= 0 counts DOWN)
+    pos_h = d.select(
         "_id",
         F.posexplode(
             F.expr(
@@ -297,37 +267,7 @@ def _window_pos_hashes(d2: DataFrame, min_len: int) -> DataFrame:
                 f"p -> xxhash64(substring(_t, p, {min_len}))))"
             )
         ).alias("_p0", "h"),
-    ).select("_id", (F.col("_p0") + 1).alias("pos"), "h")
-
-
-def _sa_group_keys(
-    d2: DataFrame, min_len: int, id_col: str, compaction=None
-) -> DataFrame:
-    """(id, band_id, key) group rows whose key equality ⇔ exact character
-    equality of the min_len window — the pairs_from_keys input for
-    :func:`substring_pairs_sa`.
-
-    Two-pass shape (guide §2.3 "shuffle keys and metadata instead of
-    payloads"): the r5 single-pass design shuffled a ≤64-byte packed-window
-    struct for EVERY character position into one global distinct — ~10M ×
-    72 B at sf0.1 — and that exchange dominated the whole query (20.6 s vs
-    7.4 s for the winnowing twin on the same truth set; VERDICT r5 #3).
-
-    1. **Hash census** (8 B/key, map-side partial agg): per-position
-       xxhash64 of the window, groupBy(h) keeping only min(id)/max(id) —
-       a hash whose min and max doc ids agree lives in one document and can
-       never produce a pair. Equal windows always hash equal, so this
-       prefilter is COMPLETE: no cross-doc window group is lost.
-    2. **Exact grouping of the survivors**: positions carrying a surviving
-       hash (a tiny set — only genuinely repeated blocks plus the odd
-       collision) re-keyed on the RAW min_len substring. Result groups are
-       therefore decided by character equality alone — a hash collision
-       admits a spurious survivor, never a wrong pair, exactly like the
-       Bloom-prefilter pattern of guide §3.2.
-
-    ``compaction`` is accepted for signature compatibility with the old
-    packed-key path and ignored (the hash census needs no alphabet map)."""
-    pos_h = _window_pos_hashes(d2, min_len)
+    )
     hot = (
         pos_h.groupBy("h")
         .agg(F.min("_id").alias("_mn"), F.max("_id").alias("_mx"))
@@ -336,15 +276,9 @@ def _sa_group_keys(
     )
     # the explode re-runs for the survivor pass (two cheap map passes beat
     # materializing the full position table); the semi-join side is tiny
-    surv = pos_h.join(hot, "h", "left_semi").select("_id", "pos")
-    return (
-        surv.join(d2, "_id")
-        .select(
-            F.col("_id").alias(id_col),
-            F.lit(0).alias("band_id"),
-            F.expr(f"substring(_t, pos, {min_len})").alias("key"),
-        )
-        .distinct()
+    surv = pos_h.join(hot, "h", "left_semi")
+    return surv.join(d, "_id").select(
+        "_id", F.expr(f"substring(_t, _p0 + 1, {min_len})").alias("key")
     )
 
 
@@ -357,30 +291,19 @@ def substring_pairs_sa(
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Exact (id_a, id_b) pairs sharing a character-identical substring of
-    length >= min_len: positions whose first min_len characters are equal
-    form a group, and distinct doc pairs within a group ARE the answer —
-    groups are decided by raw character equality (no verification step;
-    hashes appear only as a complete PREFILTER whose collisions cost work,
-    never results — see :func:`_sa_group_keys`). Groups feed the
-    skew-tiered pair generator (a giant repeated substring is precisely
-    the hot-bucket case).
+    length >= min_len: documents holding the same raw min_len window form
+    a group, and distinct doc pairs within a group ARE the answer — no
+    verification step; hashes appear only as the complete census
+    PREFILTER of :func:`_shared_windows`, whose collisions cost work,
+    never results. Groups feed the skew-tiered pair generator (a giant
+    repeated substring is precisely the hot-bucket case).
 
-    Alphabet-independent: the hash census + raw-substring grouping needs
-    no alphabet compaction, so the corpus-wide distinct-codepoint sweep
-    and the prefix-doubling fallback the r5 version carried are gone.
-    ``suffix_ranks`` still produces the true full-depth lexicographic
-    order for maximal-repeat analyses."""
-    from lash_spark.operators.normalize import fan_out
-
-    d = docs.select(F.col(id_col), F.col(text_col))
-    if candidates is not None:
-        d = d.join(candidates.select(id_col).distinct(), id_col, "left_semi")
-    # the per-position explode+hash passes run on the INPUT partitioning —
-    # a single-file scan would run them single-core (measured ~2 s/pass at
-    # sf0.1 on 1 partition); no-op on well-partitioned inputs
-    d2 = fan_out(d.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")))
-    keyed = _sa_group_keys(d2, min_len, id_col)
-    return pairs_from_keys(keyed, id_col=id_col, max_bucket=max_bucket)
+    Alphabet-independent: the census needs no alphabet compaction or
+    prefix-doubling rounds. ``suffix_ranks`` still produces the true
+    full-depth lexicographic order for maximal-repeat analyses."""
+    keys = _shared_windows(docs, min_len, id_col, text_col, candidates)
+    keyed = keys.select(F.col("_id").alias(id_col), F.lit(0).alias("band_id"), "key")
+    return pairs_from_keys(keyed.distinct(), id_col=id_col, max_bucket=max_bucket)
 
 
 def repeated_windows(
@@ -406,44 +329,13 @@ def repeated_windows(
     text instead of every character position in the corpus. Corpus-wide
     mode remains for analysis-tier jobs at moderate scale.
 
-    Shape (two-pass census, same pattern as :func:`_sa_group_keys` —
-    guide §2.3 "shuffle keys and metadata instead of payloads"): the old
-    single-pass design shuffled a 64-byte packed key for EVERY character
-    position into one exact groupBy whose countDistinct additionally
-    Expand-doubled the rows. Now pass 1 is an 8-byte hash census
-    (groupBy(h) keeping min(id)/max(id), map-side partial agg) — equal
-    windows always hash equal, so hashes whose min and max doc id agree
-    can never reach n_docs >= 2 and the prefilter is COMPLETE; pass 2
-    re-keys only the surviving positions (genuinely cross-doc windows
-    plus the odd collision) on the RAW substring and takes the exact
-    n_docs/n_occ counts there. Counts are exact: every occurrence of a
-    surviving window carries the same hash, so the survivor set holds
-    ALL its positions; a collision admits a spurious survivor group that
-    the exact n_docs >= 2 filter then drops — work, never results. The
-    raw key IS the window text, so the old text-recovery join is gone."""
-    from lash_spark.operators.normalize import fan_out
-
-    src = docs.select(F.col(id_col), F.col(text_col))
-    if candidates is not None:
-        src = src.join(candidates.select(id_col).distinct(), id_col, "left_semi")
-    # fan out under-partitioned inputs before the per-position passes (see
-    # substring_pairs_sa)
-    d = fan_out(src.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")))
-    pos_h = _window_pos_hashes(d, window)
-    hot = (
-        pos_h.groupBy("h")
-        .agg(F.min("_id").alias("_mn"), F.max("_id").alias("_mx"))
-        .filter(F.col("_mn") != F.col("_mx"))
-        .select("h")
-    )
-    # the explode re-runs for the survivor pass (two cheap map passes beat
-    # materializing the full position table); the semi-join side is tiny
-    surv = pos_h.join(hot, "h", "left_semi").select("_id", "pos")
-    keys = surv.join(d, "_id").select(
-        "_id", F.expr(f"substring(_t, pos, {window})").alias("key")
-    )
+    One groupBy over the raw keys of :func:`_shared_windows`. Counts are
+    exact: the census keeps every occurrence of a surviving window, and a
+    collision's spurious survivor group is dropped by the exact
+    n_docs >= 2 filter. The raw key IS the window text."""
     return (
-        keys.groupBy("key")
+        _shared_windows(docs, window, id_col, text_col, candidates)
+        .groupBy("key")
         .agg(
             F.countDistinct("_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occ"),

@@ -254,8 +254,9 @@ def cross_dataset_pairs(
     ``same_files=True`` (the reference's q == r detection, main.rs:404)
     the triangular J2 rule applies instead of the ordered q×r semantics.
 
-    The signature tables are persisted (each feeds the candidate AND
-    verify stages) and stay cached for the session.
+    The signature tables are persisted while the candidate AND verify
+    stages read them, and released before returning: the result reads
+    only the checkpointed candidates and verify side tables.
     """
     params = params or SketchParams()
     params.validate_compatible(params_r or params)
@@ -271,13 +272,18 @@ def cross_dataset_pairs(
     sig_q = build_signatures(nq, params, plan, id_col=id_col).persist()
     if same_files:
         cands = lsh_candidate_pairs(sig_q, id_col=id_col)
-        return verify_pairs(
+        out = verify_pairs(
             cands, nq, params, id_col=id_col, threshold=threshold,
             sig_df=sig_q, with_distances=False,
         ).select(f"{id_col}_a", f"{id_col}_b", "jaccard")
+        sig_q.unpersist()
+        return out
     sig_r = build_signatures(nr, params, plan, id_col=id_col).persist()
     cands = cross_lsh_candidate_pairs(sig_q, sig_r, id_col=id_col)
-    return cross_verify_pairs(
+    out = cross_verify_pairs(
         cands, nq, nr, params, id_col=id_col, threshold=threshold,
         sig_q=sig_q, sig_r=sig_r,
     )
+    sig_q.unpersist()
+    sig_r.unpersist()
+    return out

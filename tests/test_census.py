@@ -5,8 +5,9 @@ other than its own definition, and every ``PipelineConfig`` field is read
 outside ``config.py`` or by a ``PipelineConfig`` method. The scanned
 sources are the ones that may call the engine: the package itself, the
 tests, ``__spark_entry__.py``, ``bench*.py``, ``tools/`` and
-``perfbench/``. An uncalled function or a config knob nothing reads fails
-here instead of lingering.
+``perfbench/``. A ``_``-prefixed function must moreover be referenced
+from the package itself. An uncalled function or a config knob nothing
+reads fails here instead of lingering.
 """
 
 from __future__ import annotations
@@ -39,24 +40,41 @@ def _names(node: ast.AST):
             yield n.value
 
 
-def test_every_engine_function_is_referenced():
+def _unreferenced(files, private_only=False) -> "list[str]":
+    """Top-level ``lash_spark/`` functions in ``files`` (only the
+    ``_``-prefixed ones if ``private_only``) that nothing in ``files``
+    references outside their own definition."""
     refs: dict[str, set] = {}
     defs = []
-    for f in _sources():
+    for f in files:
         tree = ast.parse(f.read_text(), filename=str(f))
         for i, node in enumerate(tree.body):
             for name in _names(node):
                 refs.setdefault(name, set()).add((f, i))
             if f.is_relative_to(ROOT / "lash_spark") and isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef)
-            ):
+            ) and (node.name.startswith("_") or not private_only):
                 defs.append((f, i, node.name))
     # a function's references inside its own body do not keep it alive
-    unreferenced = [
+    return [
         f"{f.relative_to(ROOT)}:{name}"
         for f, i, name in defs
         if not refs.get(name, set()) - {(f, i)}
     ]
+
+
+def test_every_engine_function_is_referenced():
+    unreferenced = _unreferenced(_sources())
+    assert not unreferenced, unreferenced
+
+
+def test_every_private_engine_function_is_called_by_the_engine():
+    """A private helper only a test or a tool still names is dead engine
+    code: the references that keep it alive must come from the package."""
+    unreferenced = _unreferenced(
+        sorted(f for f in _sources() if f.is_relative_to(ROOT / "lash_spark")),
+        private_only=True,
+    )
     assert not unreferenced, unreferenced
 
 

@@ -39,14 +39,14 @@ def test_pairs_plain_tier(spark):
 
 
 def test_pairs_salted_tier_equals_plain(spark):
-    """Tier 2 (salted triangle blocks) must emit exactly the same unordered
-    pairs as the plain join — each exactly once."""
+    """Tier 2 (the salted equi-join) must emit exactly the same unordered
+    pairs as the plain join, and the returned rows hold no pair twice."""
     buckets = {10: list(range(40)), 11: [100, 101, 102]}
     keyed = _keyed(spark, buckets)
     plain = pairs_from_keys(keyed, max_bucket=1000).collect()
     salted = pairs_from_keys(keyed, max_bucket=5, salt_buckets=4, star_threshold=10_000).collect()
     assert {(r.url_a, r.url_b) for r in salted} == {(r.url_a, r.url_b) for r in plain}
-    assert len(salted) == len({(r.url_a, r.url_b) for r in salted})  # no dupes pre-dedup
+    assert len(salted) == len({(r.url_a, r.url_b) for r in salted})  # distinct output rows
 
 
 def test_pairs_salted_self_rule_matches_combinations(spark):

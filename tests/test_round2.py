@@ -142,6 +142,10 @@ def test_distance_model_zero_is_binomial():
 # ----------------------------------------------------- cross-dataset mode
 
 def test_cross_dataset_pairs_vs_bruteforce(spark, tiny_pages):
+    """Cross-mode pairs equal the brute-force truth, and neither mode
+    leaves a cache entry behind: the persisted signature tables are
+    released before returning and the result plan reads no cached
+    relation."""
     from lash_spark.pipeline import cross_dataset_pairs
     import pyspark.sql.functions as F
 
@@ -149,12 +153,15 @@ def test_cross_dataset_pairs_vs_bruteforce(spark, tiny_pages):
     dq = docs.filter(F.pmod("nid", F.lit(4)) == 0)
     dr = docs.filter(F.pmod("nid", F.lit(3)) == 0)
     params = SketchParams(shingle_k=16, num_perm=128, seed=42)
-    got = {
-        (r.url_q, r.url_r)
-        for r in cross_dataset_pairs(
-            dq, dr, params, id_col="url", text_col="text", threshold=0.8
-        ).collect()
-    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.cachedData().size()
+    same = cross_dataset_pairs(dq, dq, params, id_col="url", text_col="text", same_files=True)
+    assert cache.cachedData().size() == n_cached
+    cross = cross_dataset_pairs(dq, dr, params, id_col="url", text_col="text", threshold=0.8)
+    assert cache.cachedData().size() == n_cached
+    for out in (same, cross):
+        assert "InMemoryTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    got = {(r.url_q, r.url_r) for r in cross.collect()}
     # brute-force truth: exact shingle jaccard over the two subsets
     from lash_spark.hashing import batch_shingle_hashes
     from lash_spark.operators.normalize import normalize_text

@@ -310,42 +310,6 @@ def test_suffix_ranks_alphabet_compaction_parity(spark):
     assert compact == fallback and len(compact) == sum(len(t) for _, t in rows)
 
 
-def test_substring_pairs_sa_packed_matches_rank_path(spark):
-    """The zero-round packed-window keying must produce EXACTLY the pairs
-    of the half-depth rank-composite path — including a pair equal on
-    exactly min_len chars and docs shorter than min_len."""
-    import lash_spark.operators.suffixarray as sa_mod
-
-    block = "".join(chr(ord("a") + (i * 7) % 26) for i in range(64))  # exactly 64
-    rows = [
-        (1, "xx " + block + " left tail"),
-        (2, "totally other " + block + "DIVERGES right after"),
-        (3, "unrelated " + "z" * 200),
-        (4, "short doc"),
-        # '-' before the block: otherwise the shared ' ' preceding the
-        # block in docs 1/2 would complete a 64-char window with block[:63]
-        (5, "prefix-" + block[:63] + " one char short of the bar"),
-    ]
-    df = spark.createDataFrame(rows, "url bigint, norm_text string")
-    assert sa_mod._packed_window_keys(
-        df.selectExpr("url as _id", "norm_text as _t"), 64
-    ) is not None
-    packed = sorted(
-        (r.url_a, r.url_b)
-        for r in sa_mod.substring_pairs_sa(df, min_len=64, id_col="url").collect()
-    )
-    cap = sa_mod._ALPHA_CAP
-    try:
-        sa_mod._ALPHA_CAP = 0  # force the rank-composite fallback
-        ranked = sorted(
-            (r.url_a, r.url_b)
-            for r in sa_mod.substring_pairs_sa(df, min_len=64, id_col="url").collect()
-        )
-    finally:
-        sa_mod._ALPHA_CAP = cap
-    assert packed == ranked == [(1, 2)]
-
-
 def test_suffix_ranks_non_bmp_uses_fallback(spark):
     """Supplementary-plane codepoints occupy two UTF-16 units, which
     `translate` does not remap atomically — compaction must decline and the

@@ -15,22 +15,26 @@ def test_sa_hash_prefilter_exact_groups(spark):
     """The hash-census prefilter must be complete (no lost pair) and the
     final grouping must be decided by raw characters: same-doc-only
     repeats produce no pair, cross-doc shared windows always do, and
-    near-miss windows (1 char off) never do."""
+    near-miss windows (1 char off) never do, while a window shared on
+    exactly min_len characters pairs."""
     from lash_spark.operators.suffixarray import substring_pairs_sa
 
     # non-periodic block: a truncated copy must NOT share any 64-window
     block = "".join(chr(97 + (i * 7) % 26) for i in range(80))
     solo = "".join(chr(97 + (i * 11) % 26) for i in range(90))
+    edge = "".join(chr(97 + (i * 5) % 26) for i in range(64))  # exactly 64
     rows = [
         (1, "aa " + block + " tail one"),
         (2, "bb " + block + " tail two"),            # shares block with 1
         (3, "cc~" + block[:63] + "99 tail three"),   # 63 shared chars: no pair
         (4, solo + " solo " + solo),                 # in-doc repeat only
         (5, "short doc"),
+        (6, "dd~" + edge + "#six"),                  # exactly 64 shared chars
+        (7, "ee^" + edge + "!seven"),
     ]
     df = spark.createDataFrame(rows, "url bigint, norm_text string")
     got = {(r.url_a, r.url_b) for r in substring_pairs_sa(df, min_len=64).collect()}
-    assert got == {(1, 2)}
+    assert got == {(1, 2), (6, 7)}
 
 
 def test_sa_matches_winnow_engine_on_synth(spark):

@@ -1,8 +1,8 @@
 """Verify-operator contracts: the fused kernel's estimate against the JVM
 expression on malformed rows and its exact Jaccard against Python sets on
-random inputs, the per-document degree cap, the number of
-Spark jobs one verify call runs before its result is read, and identical
-pairs wherever the shingle sets come from."""
+random inputs, the per-document degree cap, the number of Spark jobs one
+verify or exact-substring call runs before its result is read, and
+identical pairs wherever the shingle sets come from."""
 
 from __future__ import annotations
 
@@ -267,3 +267,32 @@ def test_cross_verify_pairs_identical_for_every_shingle_set_placement(spark):
     _assert_same_rows(q_only, run(sig_q.drop("shingles"), sig_r.drop("shingles")))
     for df in (cross, sig_q, sig_r, sigs, normed):
         df.unpersist()
+
+
+def test_substring_passes_pinned_job_counts(spark):
+    """One exact_substring_pairs call and one cross_substring_overlap call
+    each run a pinned number of Spark jobs before their result action:
+    the candidate generator's and the one window-set stats action, and
+    nothing else (12 and 19 jobs at this size, counting AQE's
+    per-query-stage jobs). A new gate or eager checkpoint shows here as a
+    higher count."""
+    from lash_spark.operators.substring import cross_substring_overlap, exact_substring_pairs
+
+    normed = with_normalized_text(
+        generate_pages(spark, 200, seed=13, partitions=2).select("url", "text"), "text"
+    ).persist()
+    normed.count()
+    self_pairs, n_self = _jobs_in_group(
+        spark, "substring_self",
+        lambda: exact_substring_pairs(normed, min_len=64, k=32),
+    )
+    assert self_pairs.count() > 0
+    dq = normed.filter(F.abs(F.hash("url")) % 2 == 0)
+    dr = normed.filter(F.abs(F.hash("url")) % 2 == 1)
+    cross, n_cross = _jobs_in_group(
+        spark, "substring_cross",
+        lambda: cross_substring_overlap(dq, dr, min_len=64, k=32),
+    )
+    assert cross.count() > 0
+    assert (n_self, n_cross) == (12, 19)
+    normed.unpersist()

@@ -128,20 +128,6 @@ def main():
     check("suffix.no_python_eval", "EvalPython" not in p5)
     check("suffix.arrow_rank_assign", "MapInArrow" in p5)
 
-    # packed-window keying (zero-round pair path): pure Column, no Python
-    from lash_spark.operators.suffixarray import _packed_window_keys
-
-    pk = _packed_window_keys(
-        normed.select(
-            F.col("doc_id").alias("_id"), F.col("norm_text").alias("_t")
-        ).limit(50),
-        64,
-    )
-    check("suffix.packed_keys_available", pk is not None)
-    if pk is not None:
-        p5b = plan_of(pk)
-        check("suffix.packed_no_python_eval", "EvalPython" not in p5b)
-
     # ---- repetition stats (r3): single codegen stage, no shuffle, no UDF
     from lash_spark.operators.textstats import repetition_stats
 
