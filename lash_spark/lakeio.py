@@ -7,6 +7,19 @@ production target, but the package bundles no Iceberg runtime and no Iceberg
 backend exists in the code; the catalog's methods (read, write, append,
 overwrite_partitions, properties) are the seam it would sit behind.
 
+Schema of record: the sidecar holds each table's schema as a DDL string
+(property ``schema``), the way an Iceberg table carries its own. ``write``,
+``replace`` and the first ``append`` stamp it; ``drop`` and
+``overwrite_partitions`` clear it; ``read`` hands it to
+``spark.read.schema`` and so plans without the footer-inference job a bare
+parquet read runs. A table without a stamp (older catalogs, partitioned
+waves, a lost sidecar) is inferred once on read and stamped then.
+
+Driver round-trips: ``run_stage`` takes its row count from an
+``Observation`` on the write instead of re-reading and counting the table,
+and metrics and manifest rows are written by pyarrow on the driver as one
+small parquet file each, with no Spark job.
+
 Resume semantics (north_rule): every stage records a completion marker
 keyed by params_hash; a rerun with the same params skips completed stages,
 and the signature stage additionally supports row-level delta resume via
@@ -17,12 +30,20 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 METRICS_TABLE = "stage_metrics"
+_METRICS_DDL = (
+    "stage string, params_hash string, wall_ms double, input_rows bigint, "
+    "output_rows bigint, status string, ts double, extra string"
+)
+_MANIFEST_DDL = "stage string, params_hash string, part string, output_rows bigint, ts double"
+# the sidecar property holding a table's stamped DDL schema
+_SCHEMA = "schema"
 
 
 class ParquetCatalog:
@@ -47,13 +68,62 @@ class ParquetCatalog:
         )
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        ddl = self.properties(table).get(_SCHEMA)
+        if ddl is not None:
+            return self.spark.read.schema(ddl).parquet(self.path(table))
+        df = self.spark.read.parquet(self.path(table))
+        self._stamp(table, df.schema.toDDL())
+        return df
+
+    def _stamp(self, table: str, ddl: str | None):
+        """Record (or with None, clear) the table's schema of record."""
+        merged = self.properties(table)
+        if merged.get(_SCHEMA) == ddl:
+            return
+        if ddl is None:
+            merged.pop(_SCHEMA)
+        else:
+            merged[_SCHEMA] = ddl
+        self._write_properties(table, merged)
 
     def write(self, df: DataFrame, table: str):
+        # cleared first: a crash after the data write must not leave the
+        # previous table's schema stamped on the new files
+        self._stamp(table, None)
         df.write.mode("overwrite").parquet(self.path(table))
+        self._stamp(table, df.schema.toDDL())
 
     def append(self, df: DataFrame, table: str):
+        first = not self.exists(table)
         df.write.mode("append").parquet(self.path(table))
+        if first:
+            self._stamp(table, df.schema.toDDL())
+
+    def _append_rows(self, table: str, ddl: str, rows: "list[dict]"):
+        """Append small driver-side rows as one parquet file written by
+        pyarrow (no Spark job). Columns are taken from each row by name,
+        so a row's key order cannot shift values between columns; a
+        missing key is NULL. The file lands under a dot-name first, which
+        Spark's file listing skips, and is renamed into the table."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        arrow = {"string": pa.string(), "double": pa.float64(), "bigint": pa.int64()}
+        schema = pa.schema([(n, arrow[t]) for n, t in (f.split() for f in ddl.split(", "))])
+        first = not self.exists(table)
+        d = self.root / table
+        d.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.zstd.parquet"
+        tmp = d / f".{name}"
+        # files of a row or a few: dictionary pages, min/max statistics and
+        # the embedded Arrow schema would more than double each one
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=schema), tmp, compression="zstd",
+            store_schema=False, use_dictionary=False, write_statistics=False,
+        )
+        tmp.rename(d / name)
+        if first:
+            self._stamp(table, ddl)
 
     def overwrite_partitions(self, df: DataFrame, table: str, partition_by):
         """Dynamic partition overwrite (the Iceberg
@@ -66,6 +136,9 @@ class ParquetCatalog:
             .partitionBy(*partition_by)
             .parquet(self.path(table))
         )
+        # the partition columns come back from the directory names: the
+        # next read infers the whole table once and stamps it
+        self._stamp(table, None)
 
     def drop(self, table: str):
         import shutil
@@ -73,6 +146,7 @@ class ParquetCatalog:
         p = self.root / table
         if p.exists():
             shutil.rmtree(p)
+        self._stamp(table, None)
 
     def replace(self, df: DataFrame, table: str):
         """Full-table replace that is safe when ``df``'s plan reads from
@@ -81,7 +155,8 @@ class ParquetCatalog:
         real ``MERGE INTO`` / row-level delete; this parquet fallback pays
         one columnar rewrite of the surviving rows, and only on runs that
         actually detected mutated rows. Properties/markers are sidecar
-        files, untouched by the swap.
+        files, untouched by the swap except for the schema stamp, which is
+        cleared before it and set to ``df``'s schema after it.
 
         Swap order (ADVICE r5): the old table is renamed ASIDE first and
         deleted only after the staged dir took its place, so the
@@ -94,19 +169,24 @@ class ParquetCatalog:
         old = f"{table}__old"
         self.drop(old)  # leftover from a crashed replace
         df.write.mode("overwrite").parquet(self.path(staged))
+        self._stamp(table, None)
         p_table = self.root / table
         if p_table.exists():
             p_table.rename(self.root / old)
         (self.root / staged).rename(p_table)
         self.drop(old)
+        self._stamp(table, df.schema.toDDL())
 
     # ---- properties (Iceberg table-properties analog; holds run params —
     # the reference's *_parameters.json, main.rs:254-276)
     def set_properties(self, table: str, props: dict):
-        p = self.root / f"{table}.properties.json"
         merged = self.properties(table)
         merged.update(props)
-        p.write_text(json.dumps(merged, sort_keys=True, indent=1))
+        self._write_properties(table, merged)
+
+    def _write_properties(self, table: str, props: dict):
+        p = self.root / f"{table}.properties.json"
+        p.write_text(json.dumps(props, sort_keys=True, indent=1))
 
     def properties(self, table: str) -> dict:
         p = self.root / f"{table}.properties.json"
@@ -159,20 +239,15 @@ class ParquetCatalog:
 
     def mark_partitions(self, stage: str, params_hash: str, parts, output_rows=None):
         now = time.time()
-        import pandas as pd
-
-        # pandas-backed (LocalTableScan): list-backed createDataFrame plans
-        # as a pickled-RDD scan costing ~2.3 s per commit (measured r6) —
-        # paid per stage commit AND per streaming trigger
-        df = self.spark.createDataFrame(
-            pd.DataFrame(
-                [(stage, params_hash, str(p), output_rows, now) for p in parts],
-                columns=["stage", "params_hash", "part", "output_rows", "ts"],
-                dtype=object,
-            ),
-            "stage string, params_hash string, part string, output_rows bigint, ts double",
+        self._append_rows(
+            self._manifest(stage),
+            _MANIFEST_DDL,
+            [
+                {"stage": stage, "params_hash": params_hash, "part": str(p),
+                 "output_rows": output_rows, "ts": now}
+                for p in parts
+            ],
         )
-        self.append(df, self._manifest(stage))
 
     # ---- lineage / metrics rows (O6)
     def log_metrics(
@@ -195,24 +270,7 @@ class ParquetCatalog:
             "ts": time.time(),
             "extra": json.dumps(extra, sort_keys=True) if extra else None,
         }
-        import pandas as pd
-
-        # pandas-backed (LocalTableScan) — same rationale as mark_partitions;
-        # the DDL schema maps columns by position, so columns= pins the
-        # frame to the schema order whatever the dict's key order
-        df = self.spark.createDataFrame(
-            pd.DataFrame(
-                [row],
-                columns=[
-                    "stage", "params_hash", "wall_ms", "input_rows",
-                    "output_rows", "status", "ts", "extra",
-                ],
-                dtype=object,
-            ),
-            "stage string, params_hash string, wall_ms double, input_rows bigint, "
-            "output_rows bigint, status string, ts double, extra string",
-        )
-        self.append(df, METRICS_TABLE)
+        self._append_rows(METRICS_TABLE, _METRICS_DDL, [row])
 
     def metrics(self) -> DataFrame:
         return self.read(METRICS_TABLE)
@@ -228,14 +286,18 @@ def run_stage(
     the output table (named after the stage) exists; otherwise build,
     write, log metrics, mark.
 
-    Returns the output DataFrame (read back from the table when skipped,
-    giving downstream stages a clean scan instead of a long lineage).
+    The row count in the metrics row and the stage marker comes from an
+    ``Observation`` on the write, filled by the write's own jobs: the table
+    is not re-read or counted. Returns the output DataFrame, read from the
+    table in either case (its stamped schema plans the scan without a
+    job), which gives downstream stages a clean scan instead of a long
+    lineage.
     """
     if catalog.stage_complete(stage, params_hash) and catalog.exists(stage):
         return catalog.read(stage), True
     t0 = time.monotonic()
-    df = builder()
-    catalog.write(df, stage)
+    rows = Observation()
+    catalog.write(builder().observe(rows, F.count(F.lit(1)).alias("n")), stage)
     # stamp this writer's provenance: if the table was previously produced
     # by run_partitioned_stage under a different (e.g. wave-suffixed)
     # params_hash, the stale sidecar would otherwise let a later
@@ -243,11 +305,10 @@ def run_stage(
     # write part_col= dirs alongside flat files (conflicting directory
     # structures on read)
     catalog.set_properties(stage, {"params_hash": params_hash})
-    out = catalog.read(stage)
-    n = out.count()
+    n = rows.get["n"]
     catalog.log_metrics(stage, params_hash, (time.monotonic() - t0) * 1000, output_rows=n)
     catalog.mark_stage(stage, params_hash, output_rows=n)
-    return out, False
+    return catalog.read(stage), False
 
 
 def run_partitioned_stage(

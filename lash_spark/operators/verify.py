@@ -7,11 +7,17 @@ calls:
 
 1. **Side tables.** Each pair role gets one ``(id, minhash, shingles)``
    table over the candidate members only, built once and materialized by a
-   single stats action (row count + total set hashes). The shingle sets are
-   read off the signature frame when it carries them (a caller that built
-   its signatures ``with_shingles``), otherwise computed from the members'
-   text by a map-only Arrow UDF. A self-join uses ONE table under two
-   aliases, so the second join reuses the first's exchange.
+   single stats action (row count + total set hashes). Where the shingle
+   sets come from decides the plan, and each shape has one join:
+   - the signature frame carries them (a caller that built its signatures
+     ``with_shingles``): the signatures joined with the member ids;
+   - the signature frame carries the text column (the stream's probe):
+     the same join, with a map-only Arrow UDF shingling each member in the
+     projection that carries its minhash;
+   - otherwise: the members' sets, shingled from the docs frame, joined
+     straight onto the signature scan.
+   A self-join uses ONE table under two aliases, so the second join reuses
+   the first's exchange.
 2. **Join strategy from measured bytes.** A side is broadcast when its
    measured footprint fits ``max(_BROADCAST_BYTES,
    spark.sql.autoBroadcastJoinThreshold)``; above that the same plan
@@ -184,18 +190,20 @@ def _verify(
         return out.distinct()
 
     def table(side, members):
+        # members are distinct ids, so an inner join with them keeps each
+        # member row once; the set projection sits above the join, so
+        # shingling runs only over candidate members, not the whole corpus
         sig, docs = side
-        t = sig.join(members, id_col, "left_semi")
         if "shingles" in sig.columns:
-            t = t.select(F.col(id_col), F.col("minhash"), F.col("shingles"))
+            t = sig.join(members, id_col).select(id_col, "minhash", "shingles")
         else:
-            # semi-join BEFORE the UDF projection so shingling runs only
-            # over candidate members, not the whole corpus
-            sets = docs.join(members, id_col, "left_semi").select(
-                F.col(id_col),
-                make_shingle_set_udf(params.shingle_k)(F.col(text_col)).alias("shingles"),
-            )
-            t = t.select(F.col(id_col), F.col("minhash")).join(sets, id_col)
+            sets = make_shingle_set_udf(params.shingle_k)(F.col(text_col)).alias("shingles")
+            if text_col in sig.columns:
+                t = sig.join(members, id_col).select(id_col, "minhash", sets)
+            else:
+                t = sig.select(id_col, "minhash").join(
+                    docs.join(members, id_col, "left_semi").select(id_col, sets), id_col
+                )
         # lazy: the stats aggregate below is the table's first action, so
         # it materializes the checkpoint AND returns the byte stats in one
         # Spark job per call

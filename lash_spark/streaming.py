@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from lash_spark.config import LshPlan, SketchParams
@@ -151,7 +151,13 @@ def stream_near_dup(
     scans of the columns each step needs (ids for the anti-join, bands for
     the probe, minhash and text for verify) — no Python runs over the rest
     of history. A probing trigger pays one census gate, one eager
-    candidate checkpoint, one verify stats action and one store append."""
+    candidate checkpoint, one verify stats action and the two appends, and
+    nothing else: the store's stamped schema plans its read without a
+    footer-inference job, the batch is not checkpointed or tested for
+    emptiness first (an all-stored batch runs through as empty frames and
+    appends no rows), and the metrics row's counts come from Observations
+    on the appends (``output_rows`` = pairs, ``input_rows`` = store rows),
+    written by pyarrow without a Spark job."""
     from pyspark.sql import functions as F
 
     from lash_spark.operators.lsh import lsh_candidate_pairs
@@ -221,11 +227,9 @@ def stream_near_dup(
             batch = batch.join(store.select(id_col), id_col, "left_anti")
         else:
             catalog.set_properties("stream_docs", store_props)
-        batch = batch.localCheckpoint()  # consumed by the signature pass
-        if batch.isEmpty():
-            guard["pending"] = False
-            return
-        # feeds the probe, the verify side table and the append
+        # feeds the probe, the verify side table and the append. No
+        # emptiness gate: a batch whose ids are all stored (a replay or a
+        # recrawl) runs through as empty frames and appends no rows
         sigs = sketch(batch).persist()
         try:
             # ONE side-tagged probe: the batch (new) against itself and the
@@ -248,8 +252,11 @@ def stream_near_dup(
                 pairs = pairs.join(
                     catalog.read("stream_dup_pairs").select(a, b), [a, b], "left_anti"
                 )
-            catalog.append(pairs, "stream_dup_pairs")
-            catalog.append(sigs, "stream_docs")
+            # the metrics row's counts, filled by the appends' own jobs
+            n_pairs, n_docs = Observation(), Observation()
+            rows = F.count(F.lit(1)).alias("n")
+            catalog.append(pairs.observe(n_pairs, rows), "stream_dup_pairs")
+            catalog.append(sigs.observe(n_docs, rows), "stream_docs")
         finally:
             # release the per-batch signature cache (without this every
             # micro-batch pins a cache entry for the stream's lifetime)
@@ -258,7 +265,8 @@ def stream_near_dup(
             f"stream_near_dup_batch_{batch_id}",
             params.params_hash(),
             wall_ms=(time.monotonic() - t0) * 1000.0,
-            output_rows=None,
+            input_rows=n_docs.get["n"],
+            output_rows=n_pairs.get["n"],
             status="complete",
         )
         guard["pending"] = False

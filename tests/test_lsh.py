@@ -195,34 +195,7 @@ def test_tagged_star_tier_keeps_hot_buckets_connected(spark):
     assert len({e for e in edges if e[0] in hot}) < 2 * len(hot)
 
 
-def _plans_in_group(spark, group, fn):
-    """Run ``fn`` under a job group; return its result, the number of Spark
-    jobs the group ran and the executed physical plans of the SQL
-    executions it started (read from the SQL status store)."""
-    sc = spark.sparkContext
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        it = store.executionsList().iterator()
-        out = {}
-        while it.hasNext():
-            e = it.next()
-            out[e.executionId()] = e.physicalPlanDescription()
-        return out
-
-    before = set(executions())
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    plans = [p for i, p in executions().items() if i not in before]
-    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
-
-
-def test_candidate_calls_plan_no_nested_loop_join(spark):
+def test_candidate_calls_plan_no_nested_loop_join(spark, run_in_group):
     """Every candidate call, with the salt tier forced, plans equi-joins
     only: no BroadcastNestedLoopJoin or CartesianProduct in any executed
     plan (the candidates are checkpointed eagerly, so an audit of the
@@ -256,7 +229,7 @@ def test_candidate_calls_plan_no_nested_loop_join(spark):
     }
     jobs, sizes = {}, {}
     for name, fn in calls.items():
-        out, jobs[name], plans = _plans_in_group(spark, f"cand_{name}", fn)
+        out, jobs[name], plans = run_in_group(f"cand_{name}", fn)
         sizes[name] = out.count()
         assert plans, name
         for p in plans:

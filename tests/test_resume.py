@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from lash_spark.config import PipelineConfig
+from lash_spark.config import PipelineConfig, SketchParams
 from lash_spark.lakeio import ParquetCatalog, resume_delta, run_stage
 from lash_spark.pipeline import dedup_pipeline
 
@@ -45,9 +45,8 @@ def test_metrics_rows_logged(spark, tmp_path):
 
 
 def test_log_metrics_row_reads_back_every_field(spark, tmp_path):
-    """Each column of a stage_metrics row holds the value passed for it:
-    the DDL schema maps the pandas frame by position, so a reordered row
-    would land values in the wrong columns."""
+    """Each column of a stage_metrics row holds the value passed for it,
+    extra keyword arguments included (as sorted JSON)."""
     import json
     import time
 
@@ -242,3 +241,129 @@ def test_format2_signatures_table_rebuilt_not_resumed(spark, tmp_path, monkeypat
         for got, want in ((res.dup_pairs, clean.dup_pairs), (res.clusters, clean.clusters)):
             assert got.count() > 0
             assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), forge.__name__
+
+
+# ------------------------------------------ schema of record, observed counts
+
+
+def _tables(cat) -> list:
+    return sorted(
+        p.name for p in cat.root.iterdir() if p.is_dir() and not p.name.startswith("_")
+    )
+
+
+@pytest.fixture(scope="module")
+def catalogs(spark, tmp_path_factory, run_in_group):
+    """One catalog ``dedup_pipeline`` run on the 120-page fixture (with the
+    Spark jobs it ran) and one two-drop ``stream_near_dup`` catalog."""
+    from lash_spark.streaming import read_pages_stream, stream_near_dup
+    from lash_spark.synth import generate_pages
+
+    pages = generate_pages(spark, 120, seed=11, partitions=2)
+    batch = ParquetCatalog(spark, str(tmp_path_factory.mktemp("batch")))
+    res, n_jobs, _ = run_in_group(
+        "catalog_pipeline", lambda: dedup_pipeline(pages, PipelineConfig(), catalog=batch)
+    )
+    src = tmp_path_factory.mktemp("src")
+    small = pages.limit(60)
+    small.filter("planted_cluster % 2 = 0").coalesce(1).write.parquet(f"{src}/d0")
+    small.filter("planted_cluster % 2 = 1").coalesce(1).write.parquet(f"{src}/d1")
+    stream = ParquetCatalog(spark, str(tmp_path_factory.mktemp("stream")))
+    q = stream_near_dup(
+        read_pages_stream(spark, f"{src}/*", pages.schema, 1), stream, SketchParams(),
+        checkpoint_dir=str(tmp_path_factory.mktemp("ckpt")), trigger_once=True,
+    )
+    q.awaitTermination(300)
+    return batch, stream, res, n_jobs
+
+
+def test_catalog_pipeline_pinned_job_count(catalogs):
+    """A catalog dedup_pipeline run over 120 pages runs a pinned number of
+    Spark jobs (counting AQE's per-query-stage jobs): stamped reads plan
+    no footer-inference job and each stage's row count is observed on its
+    write, not re-counted. A new re-read, count or gate shows here as a
+    higher count."""
+    batch, _, res, n_jobs = catalogs
+    assert batch.stage_info("dup_pairs")["output_rows"] > 0
+    assert n_jobs == 22, n_jobs
+
+
+def test_stamped_read_runs_no_job(catalogs, run_in_group):
+    """Reading a stamped table and its schema runs no Spark job."""
+    batch, stream, _, _ = catalogs
+    for cat in (batch, stream):
+        for t in _tables(cat):
+            _, n, _ = run_in_group(f"read_{t}", lambda: cat.read(t).schema)
+            assert n == 0, t
+
+
+def test_stamped_schema_equals_inference(spark, catalogs):
+    """Every table that a batch catalog run and a two-drop stream run
+    write carries a schema stamp, and a stamped read's schema equals the
+    schema Spark infers from the table's files."""
+    batch, stream, _, _ = catalogs
+    assert _tables(batch) == [
+        "candidates", "clusters", "dup_pairs", "signatures", "stage_metrics"
+    ]
+    assert _tables(stream) == ["stage_metrics", "stream_docs", "stream_dup_pairs"]
+    for cat in (batch, stream):
+        for t in _tables(cat):
+            assert cat.properties(t).get("schema"), t
+            assert cat.read(t).schema == spark.read.parquet(cat.path(t)).schema, t
+
+
+def test_unstamped_table_is_inferred_once_and_stamped(spark, tmp_path, run_in_group):
+    """A table whose sidecar was unlinked reads its rows by inference (one
+    job), is stamped by that read, and reads without a job afterwards."""
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    cat.write(spark.range(6).selectExpr("id", "array(id) as xs"), "t")
+    (cat.root / "t.properties.json").unlink()
+    first, n_first, _ = run_in_group("unstamped", lambda: cat.read("t"))
+    assert n_first == 1
+    assert cat.properties("t")["schema"] == first.schema.toDDL()
+    again, n_again, _ = run_in_group("stamped", lambda: cat.read("t"))
+    assert n_again == 0 and again.schema == first.schema
+    assert sorted((r.id, tuple(r.xs)) for r in again.collect()) == [(i, (i,)) for i in range(6)]
+
+
+def test_run_stage_logs_observed_output_rows(spark, tmp_path):
+    """run_stage's metrics row and stage marker hold the written table's
+    row count, for a filtered build and for an empty one."""
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    for stage, build in (
+        ("some", lambda: spark.range(50).filter(F.col("id") % 3 == 0)),
+        ("none", lambda: spark.range(50).filter(F.col("id") < 0)),
+    ):
+        run_stage(cat, stage, "h", build)
+        (row,) = cat.metrics().filter(F.col("stage") == stage).collect()
+        n = cat.read(stage).count()
+        assert row.output_rows == cat.stage_info(stage)["output_rows"] == n, stage
+    assert cat.stage_info("some")["output_rows"] == 17
+
+
+def test_driver_rows_are_written_by_column_name(spark, tmp_path):
+    """Metrics and manifest rows land in the columns their keys name: the
+    parquet files carry the schema's column names, and a row read back by
+    name holds the values passed for it."""
+    import pyarrow.parquet as pq
+
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    cat.mark_partitions("cand", "ph", [3, "b"], output_rows=9)
+    cat.log_metrics("cand", "ph", 1.5, output_rows=4, status="wave_complete")
+    rows = cat.read("cand_partitions").orderBy("part").collect()
+    assert [(r.stage, r.params_hash, r.part, r.output_rows) for r in rows] == [
+        ("cand", "ph", "3", 9), ("cand", "ph", "b", 9),
+    ]
+    (m,) = cat.metrics().collect()
+    assert (m.stage, m.wall_ms, m.input_rows, m.output_rows, m.status, m.extra) == (
+        "cand", 1.5, None, 4, "wave_complete", None,
+    )
+    for t, names in (
+        ("cand_partitions", ["stage", "params_hash", "part", "output_rows", "ts"]),
+        ("stage_metrics", [
+            "stage", "params_hash", "wall_ms", "input_rows", "output_rows",
+            "status", "ts", "extra",
+        ]),
+    ):
+        (f,) = (cat.root / t).glob("*.parquet")
+        assert pq.read_schema(f).names == names, t

@@ -479,7 +479,8 @@ def test_stream_near_dup_heals_crash_on_probing_trigger(spark, tmp_path):
 def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
     """The ``stream_near_dup_batch_*`` metrics row carries the measured
     wall time of its batch, not 0: more than zero and no more than the
-    whole query took."""
+    whole query took. It also carries the rows the trigger appended: its
+    pairs (``output_rows``) and its store rows (``input_rows``)."""
     import time
 
     pages = generate_pages(spark, 60, seed=3, partitions=2)
@@ -492,6 +493,39 @@ def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
     (row,) = cat.metrics().collect()
     assert row.stage == "stream_near_dup_batch_0" and row.status == "complete"
     assert 0.0 < row.wall_ms <= elapsed_ms
+    n_pairs = cat.read("stream_dup_pairs").count()
+    assert n_pairs > 0 and row.output_rows == n_pairs
+    assert row.input_rows == cat.read("stream_docs").count() == pages.count()
+
+
+def test_recrawl_only_trigger_appends_nothing(spark, tmp_path):
+    """A drop whose ids are all stored (a recrawl; here with edited text)
+    runs through its trigger without a gate: it appends no pair and no
+    store row, leaves the store's rows unchanged, and still writes its
+    metrics row, with zero counts."""
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, 40, seed=3, partitions=2).select("url", "text")
+    src = str(tmp_path / "src")
+    pages.coalesce(1).write.parquet(f"{src}/d0")
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+
+    def digest(t):
+        return cat.read(t).select(
+            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*cat.read(t).columns)).alias("h")
+        ).first()
+
+    _run_near_dup(spark, cat, f"{src}/*", pages.schema, SketchParams(), tmp_path / "ckpt")
+    store, pairs = digest("stream_docs"), digest("stream_dup_pairs")
+    assert store.n == 40 and pairs.n > 0
+    pages.select("url", F.concat("text", F.lit(" recrawled")).alias("text")).coalesce(
+        1
+    ).write.parquet(f"{src}/d1")
+    q = _run_near_dup(spark, cat, f"{src}/*", pages.schema, SketchParams(), tmp_path / "ckpt")
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0] == [40]
+    assert digest("stream_docs") == store and digest("stream_dup_pairs") == pairs
+    rows = {r.stage: r for r in cat.metrics().collect()}
+    assert (rows["stream_near_dup_batch_1"].input_rows, rows["stream_near_dup_batch_1"].output_rows) == (0, 0)
 
 
 def test_no_catalog_table_stores_shingle_sets(spark, tmp_path):
@@ -575,4 +609,4 @@ def test_probing_trigger_pinned_job_count(spark, tmp_path):
     n_jobs = _jobs_submitted_in(spark, start_ms, end_ms)
     # the probe found cross-drop pairs, so it is a real probing trigger
     assert cat.read("stream_dup_pairs").filter("batch_id = 1").count() > 0
-    assert n_jobs == 25, n_jobs
+    assert n_jobs == 16, n_jobs

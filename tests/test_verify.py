@@ -30,50 +30,61 @@ def _corpus(spark, n, seed):
     return params, normed, sigs
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under a job group; return its result and the number of
-    Spark jobs the group ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_verify_calls_issue_pinned_job_counts(spark):
-    """One verify_pairs call and one cross_verify_pairs call each run a
-    pinned number of Spark jobs before their result action: the one
-    side-table stats action and nothing else (4 and 7 jobs at this size,
-    counting AQE's per-query-stage jobs). A new gate or eager checkpoint
-    shows here as a higher count."""
+def test_verify_calls_issue_pinned_job_counts(spark, run_in_group):
+    """Each verify call runs a pinned number of Spark jobs before its
+    result action: the one side-table stats action and nothing else,
+    counting AQE's per-query-stage jobs. A new gate or eager checkpoint
+    shows here as a higher count. The calls: verify_pairs over signatures
+    that carry shingle sets, verify_pairs over signatures that carry the
+    text (the stream probe's shape: one join, the sets shingled in the
+    projection that carries the minhash), and cross_verify_pairs. No plan
+    they execute carries Spark's runtime bloom-filter subquery (an extra
+    scan and exchange per side table)."""
+    from lash_spark.operators.normalize import normalize_text
     from lash_spark.operators.verify import cross_verify_pairs, verify_pairs
 
     params, normed, sigs = _corpus(spark, 300, 31)
     cands = lsh_candidate_pairs(sigs, id_col="url").persist()
     assert cands.count() > 0
-    verified, n_self = _jobs_in_group(
-        spark, "verify_self",
+    plans = []
+
+    def call(group, fn):
+        out, n, p = run_in_group(group, fn)
+        assert p, group
+        plans.extend(p)
+        return out, n
+
+    verified, n_self = call(
+        "verify_self",
         lambda: verify_pairs(cands, normed, params, sig_df=sigs, with_distances=False),
     )
     assert verified.count() > 0
+
+    plan = LshPlan.plan(params.num_perm, 0.8, 0.995)
+    with_text = build_signatures(normed, params, plan, carry_cols=["text"]).persist()
+    with_text.count()
+    probe = with_text.withColumn("norm_text", normalize_text("text"))
+    by_text, n_text = call(
+        "verify_text",
+        lambda: verify_pairs(cands, normed, params, sig_df=probe, with_distances=False),
+    )
+    assert by_text.count() == verified.count()
 
     sig_q = sigs.filter(F.abs(F.hash("url")) % 2 == 0).persist()
     sig_r = sigs.filter(F.abs(F.hash("url")) % 2 == 1).persist()
     cross = cross_lsh_candidate_pairs(sig_q, sig_r, id_col="url").persist()
     assert cross.count() > 0
-    cv, n_cross = _jobs_in_group(
-        spark, "verify_cross",
+    cv, n_cross = call(
+        "verify_cross",
         lambda: cross_verify_pairs(
             cross, normed, normed, params, sig_q=sig_q, sig_r=sig_r
         ),
     )
     assert cv.count() > 0
-    assert (n_self, n_cross) == (4, 7)
-    for df in (cands, cross, sig_q, sig_r, sigs, normed):
+    assert (n_self, n_text, n_cross) == (4, 4, 7)
+    for p in plans:
+        assert "might_contain" not in p and "bloom_filter_agg" not in p, p
+    for df in (cands, cross, sig_q, sig_r, with_text, sigs, normed):
         df.unpersist()
 
 
@@ -269,7 +280,7 @@ def test_cross_verify_pairs_identical_for_every_shingle_set_placement(spark):
         df.unpersist()
 
 
-def test_substring_passes_pinned_job_counts(spark):
+def test_substring_passes_pinned_job_counts(spark, run_in_group):
     """One exact_substring_pairs call and one cross_substring_overlap call
     each run a pinned number of Spark jobs before their result action:
     the candidate generator's and the one window-set stats action, and
@@ -282,15 +293,15 @@ def test_substring_passes_pinned_job_counts(spark):
         generate_pages(spark, 200, seed=13, partitions=2).select("url", "text"), "text"
     ).persist()
     normed.count()
-    self_pairs, n_self = _jobs_in_group(
-        spark, "substring_self",
+    self_pairs, n_self, _ = run_in_group(
+        "substring_self",
         lambda: exact_substring_pairs(normed, min_len=64, k=32),
     )
     assert self_pairs.count() > 0
     dq = normed.filter(F.abs(F.hash("url")) % 2 == 0)
     dr = normed.filter(F.abs(F.hash("url")) % 2 == 1)
-    cross, n_cross = _jobs_in_group(
-        spark, "substring_cross",
+    cross, n_cross, _ = run_in_group(
+        "substring_cross",
         lambda: cross_substring_overlap(dq, dr, min_len=64, k=32),
     )
     assert cross.count() > 0
