@@ -15,10 +15,10 @@ Schema of record: the sidecar holds each table's schema as a DDL string
 parquet read runs. A table without a stamp (older catalogs, partitioned
 waves, a lost sidecar) is inferred once on read and stamped then.
 
-Driver round-trips: ``run_stage`` takes its row count from an
-``Observation`` on the write instead of re-reading and counting the table,
-and metrics and manifest rows are written by pyarrow on the driver as one
-small parquet file each, with no Spark job.
+Driver round-trips: ``run_stage`` and ``append`` take their row counts
+from an ``Observation`` on the write instead of re-reading and counting
+the table, and metrics and manifest rows are written by pyarrow on the
+driver as one small parquet file each, with no Spark job.
 
 Resume semantics (north_rule): every stage records a completion marker
 keyed by params_hash; a rerun with the same params skips completed stages,
@@ -93,11 +93,25 @@ class ParquetCatalog:
         df.write.mode("overwrite").parquet(self.path(table))
         self._stamp(table, df.schema.toDDL())
 
-    def append(self, df: DataFrame, table: str):
+    def append(self, df: DataFrame, table: str) -> int:
+        """Append ``df``'s rows and return how many, observed on the write
+        (no extra job). An empty append to an existing table leaves no
+        file: Spark writes one schema-only file (and its ``.crc``) even for
+        zero rows, which every later scan would list and open, and the
+        stamped schema already carries what it holds."""
+        d = self.root / table
         first = not self.exists(table)
-        df.write.mode("append").parquet(self.path(table))
+        before = set() if first else set(d.glob("*.parquet"))
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(str(d))
+        n = rows.get["n"]
         if first:
             self._stamp(table, df.schema.toDDL())
+        elif n == 0:
+            for f in set(d.glob("*.parquet")) - before:
+                f.unlink()
+                f.with_name(f".{f.name}.crc").unlink(missing_ok=True)
+        return n
 
     def _append_rows(self, table: str, ddl: str, rows: "list[dict]"):
         """Append small driver-side rows as one parquet file written by
@@ -185,8 +199,12 @@ class ParquetCatalog:
         self._write_properties(table, merged)
 
     def _write_properties(self, table: str, props: dict):
+        # written aside and renamed into place: reads plan from the
+        # sidecar's schema, so a torn sidecar would make the table unreadable
         p = self.root / f"{table}.properties.json"
-        p.write_text(json.dumps(props, sort_keys=True, indent=1))
+        tmp = p.with_name(f".{p.name}.{uuid.uuid4().hex}")
+        tmp.write_text(json.dumps(props, sort_keys=True, indent=1))
+        tmp.replace(p)
 
     def properties(self, table: str) -> dict:
         p = self.root / f"{table}.properties.json"

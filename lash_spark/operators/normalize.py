@@ -60,17 +60,11 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     inputs arrive with >> cores splits and this is a no-op. Same rule
     build_signatures has used since round 6 batch 1, now shared.
 
-    The decision never runs the plan. A target of 4 or less cannot fire
-    (every frame has a partition). A frame whose executed plan is adaptive
-    reads out of an exchange (a shuffle, a broadcast or a subquery): its
-    partition count exists only once AQE has run those stages, so reading
-    it would run them an extra time, and a frame that comes out of a
-    shuffle is already sized by AQE. It keeps its layout. Anything else
-    is scans and narrow maps, whose count is known at planning."""
+    A target of 4 or less cannot fire (every frame has a partition), so it
+    returns before reading the partition count, which for a frame read out
+    of an exchange runs that exchange's stages once more."""
     target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
     if target <= 4:
-        return df
-    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
         return df
     if df.rdd.getNumPartitions() * 4 < target:
         return df.repartition(target)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from lash_spark.config import LshPlan, SketchParams
@@ -155,9 +155,9 @@ def stream_near_dup(
     nothing else: the store's stamped schema plans its read without a
     footer-inference job, the batch is not checkpointed or tested for
     emptiness first (an all-stored batch runs through as empty frames and
-    appends no rows), and the metrics row's counts come from Observations
-    on the appends (``output_rows`` = pairs, ``input_rows`` = store rows),
-    written by pyarrow without a Spark job."""
+    appends no rows and no file), and the metrics row's counts are the
+    ones the appends observe on their writes (``output_rows`` = pairs,
+    ``input_rows`` = store rows), written by pyarrow without a Spark job."""
     from pyspark.sql import functions as F
 
     from lash_spark.operators.lsh import lsh_candidate_pairs
@@ -252,11 +252,9 @@ def stream_near_dup(
                 pairs = pairs.join(
                     catalog.read("stream_dup_pairs").select(a, b), [a, b], "left_anti"
                 )
-            # the metrics row's counts, filled by the appends' own jobs
-            n_pairs, n_docs = Observation(), Observation()
-            rows = F.count(F.lit(1)).alias("n")
-            catalog.append(pairs.observe(n_pairs, rows), "stream_dup_pairs")
-            catalog.append(sigs.observe(n_docs, rows), "stream_docs")
+            # the metrics row's counts, observed by the appends' own jobs
+            n_pairs = catalog.append(pairs, "stream_dup_pairs")
+            n_docs = catalog.append(sigs, "stream_docs")
         finally:
             # release the per-batch signature cache (without this every
             # micro-batch pins a cache entry for the stream's lifetime)
@@ -265,8 +263,8 @@ def stream_near_dup(
             f"stream_near_dup_batch_{batch_id}",
             params.params_hash(),
             wall_ms=(time.monotonic() - t0) * 1000.0,
-            input_rows=n_docs.get["n"],
-            output_rows=n_pairs.get["n"],
+            input_rows=n_docs,
+            output_rows=n_pairs,
             status="complete",
         )
         guard["pending"] = False

@@ -326,6 +326,43 @@ def test_unstamped_table_is_inferred_once_and_stamped(spark, tmp_path, run_in_gr
     assert sorted((r.id, tuple(r.xs)) for r in again.collect()) == [(i, (i,)) for i in range(6)]
 
 
+def test_torn_sidecar_write_keeps_the_table_readable(spark, tmp_path, monkeypatch):
+    """A sidecar write that dies partway leaves the previous sidecar whole,
+    so the table still reads with its stamped schema."""
+    from pathlib import Path
+
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    cat.write(spark.range(4), "t")
+    props = cat.properties("t")
+    real = Path.write_text
+
+    def torn(self, data, *a, **k):
+        real(self, data[: len(data) // 2], *a, **k)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(Path, "write_text", torn)
+    with pytest.raises(OSError):
+        cat.set_properties("t", {"params_hash": "h"})
+    monkeypatch.undo()
+    assert cat.properties("t") == props
+    assert sorted(r.id for r in cat.read("t").collect()) == [0, 1, 2, 3]
+
+
+def test_append_returns_observed_rows_and_empty_append_adds_no_file(spark, tmp_path):
+    """append returns the rows it wrote. An empty append to an existing
+    table leaves its directory as it was; a first, empty append still
+    creates the table and stamps its schema."""
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    assert cat.append(spark.range(3), "t") == 3
+    listing = sorted(f.name for f in (cat.root / "t").iterdir())
+    assert cat.append(spark.range(3).filter("id < 0"), "t") == 0
+    assert sorted(f.name for f in (cat.root / "t").iterdir()) == listing
+    assert sorted(r.id for r in cat.read("t").collect()) == [0, 1, 2]
+    assert cat.append(spark.range(3).filter("id < 0"), "e") == 0
+    assert cat.exists("e") and cat.properties("e")["schema"] == "id BIGINT NOT NULL"
+    assert cat.read("e").collect() == []
+
+
 def test_run_stage_logs_observed_output_rows(spark, tmp_path):
     """run_stage's metrics row and stage marker hold the written table's
     row count, for a filtered build and for an empty one."""

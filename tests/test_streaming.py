@@ -500,9 +500,9 @@ def test_stream_metrics_rows_record_process_wall_time(spark, tmp_path):
 
 def test_recrawl_only_trigger_appends_nothing(spark, tmp_path):
     """A drop whose ids are all stored (a recrawl; here with edited text)
-    runs through its trigger without a gate: it appends no pair and no
-    store row, leaves the store's rows unchanged, and still writes its
-    metrics row, with zero counts."""
+    runs through its trigger without a gate: it appends no pair, no store
+    row and no file, leaves the store's rows unchanged, and still writes
+    its metrics row, with zero counts."""
     from pyspark.sql import functions as F
 
     pages = generate_pages(spark, 40, seed=3, partitions=2).select("url", "text")
@@ -518,12 +518,20 @@ def test_recrawl_only_trigger_appends_nothing(spark, tmp_path):
     _run_near_dup(spark, cat, f"{src}/*", pages.schema, SketchParams(), tmp_path / "ckpt")
     store, pairs = digest("stream_docs"), digest("stream_dup_pairs")
     assert store.n == 40 and pairs.n > 0
+
+    def files():
+        return {t: sorted(f.name for f in (cat.root / t).iterdir()) for t in ("stream_docs", "stream_dup_pairs")}
+
+    before = files()
     pages.select("url", F.concat("text", F.lit(" recrawled")).alias("text")).coalesce(
         1
     ).write.parquet(f"{src}/d1")
     q = _run_near_dup(spark, cat, f"{src}/*", pages.schema, SketchParams(), tmp_path / "ckpt")
     assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0] == [40]
     assert digest("stream_docs") == store and digest("stream_dup_pairs") == pairs
+    # Spark writes a schema-only file (and its .crc) for an empty write;
+    # the catalog removes both, so later scans do not list and open it
+    assert files() == before
     rows = {r.stage: r for r in cat.metrics().collect()}
     assert (rows["stream_near_dup_batch_1"].input_rows, rows["stream_near_dup_batch_1"].output_rows) == (0, 0)
 
